@@ -1020,7 +1020,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
         label_sum = new_labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)"))
         ).first()[0]
-        if label_sum is None and not new_labels.rdd.isEmpty():
+        if label_sum is None and not new_labels.isEmpty():
             raise ArithmeticError(
                 "connected_components: label-sum convergence check "
                 "overflowed DECIMAL(38,0) — vertex-id domain too wide"

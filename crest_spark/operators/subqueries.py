@@ -14,12 +14,39 @@ from pyspark.sql import functions as F
 
 from crest_spark.functions.stable import round4, sum4
 from crest_spark.registry import register
-from crest_spark.sources.tables import load_table
+from crest_spark.sources.tables import load_table, table_path
 
 
 def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(f"_sq_{n}")
+
+
+def _require_no_nulls(sf_dir: str, table: str, column: str) -> None:
+    """Prove from the parquet footers that ``table.column`` holds no NULL:
+    every row group must carry a null-count statistic, and every count
+    must be zero. Reads metadata only — no Spark job, no plan change.
+    Raises ValueError on a NULL or on a missing statistic."""
+    import pyarrow.dataset as ds
+
+    path = table_path(sf_dir, table)
+    for frag in ds.dataset(path, format="parquet").get_fragments():
+        md = frag.metadata
+        idx = [md.schema.column(i).path for i in range(md.num_columns)].index(
+            column
+        )
+        for rg in range(md.num_row_groups):
+            stats = md.row_group(rg).column(idx).statistics
+            if stats is None or not stats.has_null_count:
+                raise ValueError(
+                    f"{table}.{column}: {frag.path} row group {rg} has no "
+                    "null-count statistic; cannot prove the key non-NULL"
+                )
+            if stats.null_count:
+                raise ValueError(
+                    f"{table}.{column}: {frag.path} row group {rg} holds "
+                    f"{stats.null_count} NULL(s); the key must be non-NULL"
+                )
 
 
 @register(
@@ -92,11 +119,17 @@ def q24c_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 MB threshold benched that impossible plan). The Spark-side
     evaluation uses the NOT EXISTS decorrelation instead: a plain
     LeftAnti on the correlation key, shuffleable at any scale.
-    Equivalent because the key columns are TPC-H primary/foreign keys
-    (never NULL, both engines read the same parquet); certified against
-    the unchanged NOT IN oracle at both gated SFs. Both subquery joins
-    are MERGE-hinted: customer and lineitem are SF-scaling relations, so
-    SMJ semi/anti on the natural keys is the plan that ships."""
+    Equivalent only while neither key column holds a NULL: NOT IN drops
+    every row once the subquery returns a NULL, and drops a NULL
+    o_orderkey against any non-empty subquery; NOT EXISTS keeps both.
+    The TPC-H keys are never NULL, and the footers' null counts are
+    checked before the query is built (``_require_no_nulls``); certified
+    against the unchanged NOT IN oracle at both gated SFs. Both subquery
+    joins are MERGE-hinted: customer and lineitem are SF-scaling
+    relations, so SMJ semi/anti on the natural keys is the plan that
+    ships."""
+    _require_no_nulls(sf_dir, "orders", "o_orderkey")
+    _require_no_nulls(sf_dir, "lineitem", "l_orderkey")
     _views(spark, sf_dir, "orders", "customer", "lineitem")
     return spark.sql(
         """

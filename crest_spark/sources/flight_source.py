@@ -7,7 +7,10 @@ schema deserialization (:119-150), and per-endpoint ``DoGet`` ->
 RecordReader batch streaming (:152-221). Re-expressed Spark-first:
 
 - ``spark.read.format("crest_flight")`` — one-shot read of every
-  currently listed flight (the reference's ReadBatches pass);
+  currently listed flight (the reference's ReadBatches pass). Each
+  endpoint ticket becomes one input partition whose executor task
+  yields the ``DoGet`` stream's Arrow batches, so a backfill scans its
+  endpoints in parallel across the cluster;
 - ``spark.readStream.format("crest_flight")`` — continuous consumption:
   each micro-batch ingests the flights that appeared since the last
   checkpointed offset. The reference's 500 ms re-poll loop
@@ -19,19 +22,34 @@ Options:
   ``location``  grpc://host:port (required)
   ``prefix``    only consume flights whose '/'-joined descriptor path
                 starts with this (the reference's per-view selection)
+  ``maxFlightsPerTrigger``  streaming only: admit at most this many new
+                flights per micro-batch (0 / unset = the whole backlog)
 
 Offset model: flights are consumed in SORTED descriptor-path order and
 the offset is the last path consumed (``{"last": "events/tick-0007"}``).
 A producer must publish successive batches under increasing names
 (tick-0001, tick-0002, ... — what changelog Flight servers do); names
-sorting BELOW the consumed watermark are assumed already consumed, so
-expiring old flights server-side never shifts the offset.
+sorting at or below the watermark are already consumed, so expiring old
+flights server-side never shifts the offset, and an empty listing keeps
+the watermark where it was.
 
-Executor side: each Flight endpoint ticket becomes one input partition;
-``read()`` opens its own Flight client and yields the ``DoGet`` stream's
-Arrow record batches directly — no row-at-a-time Python, and N endpoints
-scan in parallel across the cluster exactly like the reference's
-per-endpoint loop, minus the single-process ceiling.
+Planner-side fetch: the stream reader is a ``SimpleDataSourceStreamReader``.
+When the engine asks for the latest offset, ``read(start)`` lists the
+flights once, admits the pending names past the watermark and fetches
+them with ``DoGet`` inside the long-lived planner process; PySpark hands
+those Arrow batches straight to the JVM, so a micro-batch runs no Python
+executor task. Only a range the planner has not cached (a replay after a
+restart) is fetched again, by ``readBetweenOffsets`` on an executor.
+Memory contract: a micro-batch is at most ``maxFlightsPerTrigger``
+flights. The planner holds the one being planned plus the last committed
+one (PySpark's prefetch cache drops an entry only at the next commit),
+and the driver's block manager holds the planned one until its batch
+runs. ``availableNow`` asks for the latest offset
+once, so it admits the whole listed backlog as one micro-batch whatever
+the cap; bounded draining uses a processing-time trigger with
+``processAllAvailable()`` (what ``IngestionService.run_once`` does), and
+a backlog too large for one process is a backfill for the partitioned
+batch reader.
 
 Process-model constraint (same as table_stream.py): the class is
 unpickled in dedicated Python workers with no sys.path/addPyFile — this
@@ -48,8 +66,8 @@ from typing import Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -60,18 +78,11 @@ def _connect(location: str):
     return fl.connect(location)
 
 
-def _list_paths(location: str, prefix: str) -> list[str]:
-    """Sorted '/'-joined descriptor paths currently listed by the server."""
-    with _connect(location) as client:
-        paths = []
-        for info in client.list_flights():
-            path = "/".join(p.decode() for p in info.descriptor.path)
-            if path.startswith(prefix):
-                paths.append(path)
-    return sorted(paths)
+def _path(info) -> str:
+    return "/".join(p.decode() for p in info.descriptor.path)
 
 
-def _list_endpoints(location: str, prefix: str) -> dict[str, list[bytes]]:
+def _list_endpoints(client, prefix: str) -> dict[str, list[bytes]]:
     """One ``ListFlights`` pass -> ``{path: [ticket, ...]}`` for every
     matching flight. The listing's FlightInfo objects already carry each
     flight's endpoints, so planning needs NO per-flight GetFlightInfo
@@ -82,19 +93,26 @@ def _list_endpoints(location: str, prefix: str) -> dict[str, list[bytes]]:
     import pyarrow.flight as fl
 
     out: dict[str, list[bytes]] = {}
-    with _connect(location) as client:
-        for info in client.list_flights():
-            path = "/".join(p.decode() for p in info.descriptor.path)
-            if not path.startswith(prefix):
-                continue
-            tickets = [ep.ticket.ticket for ep in info.endpoints]
-            if not tickets:
-                full = client.get_flight_info(
-                    fl.FlightDescriptor.for_path(*path.split("/"))
-                )
-                tickets = [ep.ticket.ticket for ep in full.endpoints]
-            out[path] = tickets
+    for info in client.list_flights():
+        path = _path(info)
+        if not path.startswith(prefix):
+            continue
+        tickets = [ep.ticket.ticket for ep in info.endpoints]
+        if not tickets:
+            full = client.get_flight_info(
+                fl.FlightDescriptor.for_path(*path.split("/"))
+            )
+            tickets = [ep.ticket.ticket for ep in full.endpoints]
+        out[path] = tickets
     return out
+
+
+def _read_ticket(client, ticket: bytes) -> Iterator:
+    import pyarrow.flight as fl
+
+    for chunk in client.do_get(fl.Ticket(ticket)):
+        if chunk.data is not None and chunk.data.num_rows:
+            yield chunk.data
 
 
 class _TicketPartition(InputPartition):
@@ -103,101 +121,78 @@ class _TicketPartition(InputPartition):
         self.ticket = ticket
 
 
-def _read_ticket(location: str, ticket: bytes) -> Iterator:
-    import pyarrow.flight as fl
-
-    with _connect(location) as client:
-        reader = client.do_get(fl.Ticket(ticket))
-        for chunk in reader:
-            if chunk.data is not None and chunk.data.num_rows:
-                yield chunk.data
-
-
-class CrestFlightStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
+class CrestFlightStreamReader(SimpleDataSourceStreamReader):
+    def __init__(self, options: dict, schema: StructType):
         self.location = options["location"]
         self.prefix = options.get("prefix", "")
         # backpressure knob (the file source's maxFilesPerTrigger analog):
         # cap how many NEW flights one micro-batch may ingest, so a large
-        # backlog at stream start drains in bounded batches instead of one
-        # giant catch-up batch. 0 / unset = unlimited.
+        # backlog drains in bounded batches instead of one giant catch-up
+        # batch held in the planner. 0 / unset = unlimited.
         self.max_per_trigger = int(options.get("maxFlightsPerTrigger", "0"))
-        self._last_end: str | None = None  # last offset this reader emitted
-        # Highest engine position this reader KNOWS about. A restarted
-        # reader can't see the checkpointed offset until the engine's
-        # first partitions(start, end) call reveals it (the engine even
-        # calls latestOffset() BEFORE initialOffset() on a fresh
-        # stream), so a capped latestOffset may emit an end that sorts
-        # below the checkpoint and land in the offset log. The floor
-        # makes that harmless: partitions() clamps its effective start
-        # to it, so the later sweep batch (regressed_end, position]
-        # plans empty instead of re-ingesting committed flights.
-        self._floor: str | None = None
-        # last (start, end) -> partitions, so a re-plan of the identical
-        # range (engine-side re-execution) returns the same partitions
-        # rather than being clamped empty by the floor
-        self._plan_cache: tuple[tuple[str, str], list] | None = None
+        self.schema = schema
+        self._client = None  # opened lazily in the process that reads
+
+    def __getstate__(self) -> dict:
+        # readBetweenOffsets ships the reader to executors: a live gRPC
+        # client does not pickle, each process opens its own
+        return {**self.__dict__, "_client": None}
+
+    def _call(self, fn):
+        """``fn(client)`` on this reader's one Flight client. An idle
+        stream lists the flights on every trigger, and a connection per
+        poll costs a gRPC channel and its threads each time; a failed
+        call drops the client so the next call reconnects."""
+        if self._client is None:
+            self._client = _connect(self.location)
+        try:
+            return fn(self._client)
+        except Exception:
+            client, self._client = self._client, None
+            client.close()
+            raise
+
+    def _fetch(self, endpoints: dict[str, list[bytes]], paths: list[str]):
+        """DoGet every endpoint of ``paths`` in order, as batches of the
+        declared schema. The JVM checks prefetched batches against
+        ``to_arrow_schema(schema)`` exactly: columns are selected by
+        name, and the cast (safe: overflow raises, never truncates)
+        turns a producer's naive ``timestamp[us]`` into Spark's UTC."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(self.schema)
+
+        def fetch(client) -> list:
+            return [
+                batch.select(target.names).cast(target)
+                for path in paths
+                for ticket in endpoints[path]
+                for batch in _read_ticket(client, ticket)
+            ]
+
+        # a list iterator, not a generator: PySpark's prefetch cache
+        # copy.copy()s it when the engine re-plans the same range
+        return iter(self._call(fetch))
 
     def initialOffset(self) -> dict:
         # consume the server's whole backlog from the start: listed
         # flights ARE the data (unlike the table stream, where history
-        # is served better by a batch read). Only called when no
-        # checkpoint exists, so '' is the engine's true position.
-        if self._floor is None:
-            self._floor = ""
+        # is served better by a batch read)
         return {"last": ""}
 
-    def latestOffset(self) -> dict:
-        floor = max(self._last_end or "", self._floor or "")
-        paths = _list_paths(self.location, self.prefix)
-        if not paths:
-            # an empty listing (server GC'd everything) must not reset
-            # the watermark below what was already consumed
-            end = floor
-        else:
-            end = paths[-1]
-            if self.max_per_trigger > 0:
-                # advance at most N names past the watermark, so a
-                # large backlog drains in bounded batches
-                pending = [p for p in paths if p > floor]
-                if pending:
-                    end = pending[: self.max_per_trigger][-1]
-                else:
-                    end = floor
-            if end < floor:
-                end = floor  # expired listing: never regress
-        self._last_end = end
-        return {"last": end}
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        endpoints = self._call(lambda c: _list_endpoints(c, self.prefix))
+        pending = sorted(p for p in endpoints if p > start["last"])
+        if self.max_per_trigger > 0:
+            pending = pending[: self.max_per_trigger]
+        if not pending:
+            return iter(()), start  # the watermark never moves backwards
+        return self._fetch(endpoints, pending), {"last": pending[-1]}
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        key = (start["last"], end["last"])
-        if self._plan_cache is not None and self._plan_cache[0] == key:
-            return self._plan_cache[1]
-        # never re-read below the engine's highest known position (see
-        # _floor above); on the very first call the floor is unknown
-        # and start IS the engine's checkpoint — replay verbatim
-        lo = max(start["last"], self._floor or "")
-        parts: list[InputPartition] = []
-        if lo < end["last"]:
-            endpoints = _list_endpoints(self.location, self.prefix)
-            for path in sorted(endpoints):
-                if lo < path <= end["last"]:
-                    parts.extend(
-                        _TicketPartition(self.location, t)
-                        for t in endpoints[path]
-                    )
-        self._floor = max(self._floor or "", start["last"], end["last"])
-        parts = parts or [_TicketPartition(self.location, b"")]
-        self._plan_cache = (key, parts)
-        return parts
-
-    def read(self, partition: _TicketPartition) -> Iterator:  # executor-side
-        if not partition.ticket:
-            return
-        yield from _read_ticket(partition.location, partition.ticket)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the engine checkpoint
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
+        endpoints = self._call(lambda c: _list_endpoints(c, self.prefix))
+        paths = sorted(p for p in endpoints if start["last"] < p <= end["last"])
+        return self._fetch(endpoints, paths)
 
 
 class CrestFlightBatchReader(DataSourceReader):
@@ -206,7 +201,8 @@ class CrestFlightBatchReader(DataSourceReader):
         self.prefix = options.get("prefix", "")
 
     def partitions(self) -> Sequence[InputPartition]:
-        endpoints = _list_endpoints(self.location, self.prefix)
+        with _connect(self.location) as client:
+            endpoints = _list_endpoints(client, self.prefix)
         parts: list[InputPartition] = [
             _TicketPartition(self.location, t)
             for path in sorted(endpoints)
@@ -217,7 +213,8 @@ class CrestFlightBatchReader(DataSourceReader):
     def read(self, partition: _TicketPartition) -> Iterator:  # executor-side
         if not partition.ticket:
             return
-        yield from _read_ticket(partition.location, partition.ticket)
+        with _connect(partition.location) as client:
+            yield from _read_ticket(client, partition.ticket)
 
 
 class CrestFlightDataSource(DataSource):
@@ -233,18 +230,19 @@ class CrestFlightDataSource(DataSource):
         (letting a stream start against a server that has not published
         its first flight yet); this method only runs when no
         user-provided schema exists."""
+        import pyarrow.flight as fl
         from pyspark.sql.pandas.types import from_arrow_schema
 
         location = self.options["location"]
         prefix = self.options.get("prefix", "")
-        paths = _list_paths(location, prefix)
-        if not paths:
-            raise FileNotFoundError(
-                f"no flights at {location} matching prefix {prefix!r}"
-            )
-        import pyarrow.flight as fl
-
         with _connect(location) as client:
+            paths = sorted(
+                p for p in map(_path, client.list_flights()) if p.startswith(prefix)
+            )
+            if not paths:
+                raise FileNotFoundError(
+                    f"no flights at {location} matching prefix {prefix!r}"
+                )
             info = client.get_flight_info(
                 fl.FlightDescriptor.for_path(*paths[0].split("/"))
             )
@@ -253,8 +251,8 @@ class CrestFlightDataSource(DataSource):
     def reader(self, schema: StructType) -> CrestFlightBatchReader:
         return CrestFlightBatchReader(self.options)
 
-    def streamReader(self, schema: StructType) -> CrestFlightStreamReader:
-        return CrestFlightStreamReader(self.options)
+    def simpleStreamReader(self, schema: StructType) -> CrestFlightStreamReader:
+        return CrestFlightStreamReader(self.options, schema)
 
 
 def register_flight_source(spark) -> None:

@@ -235,7 +235,7 @@ class IngestConfig:
     warehouse: str
     checkpoint_root: str
     namespace: str = "default"
-    trigger_interval: str | None = None  # None => availableNow (drain & stop)
+    trigger_interval: str | None = None  # None => run_once drains & stops
     max_rows_per_batch: int = 1000  # advisory: sizes maxFilesPerTrigger
     sources: list[SourceSpec] = field(default_factory=list)
     # Auto-compaction: when a table's live file count reaches this many,
@@ -1038,14 +1038,12 @@ class IngestionService:
                 reader = self.spark.readStream.format("crest_flight").option(
                     "location", src.flight_location
                 )
-                if self.config.trigger_interval:
-                    # continuous mode only: files_per_trigger doubles as
-                    # the flight backpressure cap. Under availableNow the
-                    # engine latches latestOffset ONCE, so a cap would
-                    # strand the backlog past the first N flights.
-                    reader = reader.option(
-                        "maxFlightsPerTrigger", src.files_per_trigger
-                    )
+                # files_per_trigger doubles as the flight backpressure
+                # cap: the source prefetches each micro-batch into the
+                # planner process, so every batch it plans stays bounded
+                reader = reader.option(
+                    "maxFlightsPerTrigger", src.files_per_trigger
+                )
                 if src.flight_prefix:
                     reader = reader.option("prefix", src.flight_prefix)
                 if src.flight_schema:
@@ -1099,13 +1097,26 @@ class IngestionService:
             )
             if self.config.trigger_interval:
                 writer = writer.trigger(processingTime=self.config.trigger_interval)
+            elif src.flight_location is not None:
+                # availableNow asks a capped Flight stream for its latest
+                # offset once and would strand the backlog past the first
+                # cap's worth of flights; await_drained() drains it instead
+                writer = writer.trigger(processingTime="0 seconds")
             else:
                 writer = writer.trigger(availableNow=True)
             self.queries.append(writer.start())
 
     def await_drained(self, timeout: int | None = None) -> None:
-        for q in self.queries:
-            q.awaitTermination(timeout)
+        """Wait until every query has consumed its available input. File
+        sources run under availableNow and terminate by themselves; a
+        Flight source without ``trigger_interval`` is drained with
+        ``processAllAvailable()`` and stopped."""
+        for src, q in zip(self.config.sources, self.queries):
+            if src.flight_location is not None and not self.config.trigger_interval:
+                q.processAllAvailable()
+                q.stop()
+            else:
+                q.awaitTermination(timeout)
 
     def stop(self) -> None:
         """Graceful shutdown (reference SIGTERM drain, ``main.go:26-54``)."""
@@ -1118,7 +1129,7 @@ class IngestionService:
         self.queries.clear()
 
     def run_once(self) -> None:
-        """Drain all available input and stop (availableNow semantics)."""
+        """Drain all available input and stop."""
         self.start()
         self.await_drained()
         self.stop()

@@ -392,62 +392,100 @@ def test_flight_endpoint_resolution_is_one_listing_pass(spark, sf_dir, server):
 
 def test_flight_offset_never_regresses_below_engine_position(server):
     """Restart + cap regression guard, driven through the reader's
-    method contract exactly as the engine calls it. A restarted capped
-    reader's first latestOffset may emit an end below the engine's
-    checkpoint (it can't know the checkpoint yet — the engine calls
-    latestOffset before initialOffset/partitions); partitions() must
-    then (a) plan that regressed range empty, (b) learn the true
-    position from the planned range, and (c) clamp the later sweep
-    batch so committed flights are never re-ingested."""
-    from crest_spark.sources.flight_source import CrestFlightStreamReader
+    method contract exactly as the engine calls it: PySpark wraps the
+    simple reader in its prefetch cache, and on a restart the engine
+    reveals its checkpoint (setLatestSeenOffset, a partitions(ckpt,
+    ckpt) call) before it asks for the latest offset. A restarted
+    capped reader then (a) resumes past the checkpoint, never below it,
+    (b) serves a re-plan of the same range with the same rows, and (c)
+    keeps its watermark through an empty listing."""
+    from pyspark.sql.datasource_internal import _streamReader
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    t = pa.table({"a": [1]})
+    from crest_spark.sources.flight_source import CrestFlightDataSource
+
     for i in range(6):
-        server.publish(f"v/tick-{i:04d}", t)
+        server.publish(f"v/tick-{i:04d}", pa.table({"a": [i]}))
     opts = {
         "location": server.location,
         "prefix": "v/",
         "maxFlightsPerTrigger": "2",
     }
+    schema = StructType([StructField("a", LongType())])
+
+    def new_reader():
+        return _streamReader(CrestFlightDataSource(opts), schema)
+
+    def rows(it) -> list[int]:
+        return [x for b in it for x in b.column("a").to_pylist()]
+
+    def off(i: int) -> dict:
+        return {"last": f"v/tick-{i:04d}"}
+
+    # --- fresh stream: capped monotone progression ---
+    r = new_reader()
+    assert r.initialOffset() == {"last": ""}
+    assert r.latestOffset() == off(1)
+    assert rows(r.getCache({"last": ""}, off(1))) == [0, 1]
+    assert r.latestOffset() == off(3)
+    assert rows(r.getCache(off(1), off(3))) == [2, 3]
 
     # --- restarted reader, engine checkpoint at tick-0003 ---
-    r = CrestFlightStreamReader(opts)
-    off1 = r.latestOffset()  # capped from '': regresses below checkpoint
-    assert off1 == {"last": "v/tick-0001"}
-    # engine plans (checkpoint, off1]: must be EMPTY (no re-ingestion)
-    parts = r.partitions({"last": "v/tick-0003"}, off1)
-    assert [p for p in parts if p.ticket] == []
-    # next trigger resumes past the learned checkpoint, still capped
-    off2 = r.latestOffset()
-    assert off2 == {"last": "v/tick-0005"}
-    # the sweep batch (regressed_end, off2] is clamped to the floor:
-    # only flights 4 and 5 are planned, never the committed 2-3
-    parts = r.partitions(off1, off2)
-    tickets = sorted(p.ticket.decode() for p in parts if p.ticket)
-    assert tickets == ["v/tick-0004", "v/tick-0005"]
-    # identical re-plan of the same range returns the same partitions
-    assert r.partitions(off1, off2) is parts
+    r = new_reader()
+    r.partitions(off(3), off(3))  # the engine reveals its checkpoint
+    assert r.latestOffset() == off(5)
+    r.partitions(off(3), off(5))
+    # only flights 4 and 5 are planned, never the committed 0-3
+    assert rows(r.getCache(off(3), off(5))) == [4, 5]
+    # re-planning the same range yields the same rows, from the cache
+    # or, on a miss, from readBetweenOffsets
+    assert rows(r.getCache(off(3), off(5))) == [4, 5]
+    assert rows(r.simple_reader.readBetweenOffsets(off(3), off(5))) == [4, 5]
+    # a replayed range that sorts below the checkpoint reads nothing new
+    assert rows(r.simple_reader.readBetweenOffsets(off(3), off(1))) == []
 
-    # --- fresh-stream reader: capped monotone progression ---
-    r2 = CrestFlightStreamReader(opts)
-    r2.initialOffset()
-    assert r2.latestOffset() == {"last": "v/tick-0001"}
-    assert r2.latestOffset() == {"last": "v/tick-0003"}
-
-    # --- empty listing keeps the watermark pinned, not reset to '' ---
-    r3 = CrestFlightStreamReader(opts)
-    r3.partitions({"last": "v/tick-0003"}, {"last": "v/tick-0003"})
+    # --- nothing pending, then an empty listing: watermark pinned ---
+    assert r.latestOffset() == off(5)
     server.tables.clear()
-    assert r3.latestOffset() == {"last": "v/tick-0003"}
+    assert r.latestOffset() == off(5)
+    it, end = r.simple_reader.read(off(3))
+    assert end == off(3) and rows(it) == []
+
+
+def test_flight_reader_reuses_one_client(server):
+    """The stream reader opens one Flight client lazily, keeps it out of
+    its pickled state (readBetweenOffsets ships the reader to
+    executors) and reopens it after a failed call."""
+    import pickle
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from crest_spark.sources.flight_source import CrestFlightStreamReader
+
+    server.publish("v/tick-0000", pa.table({"a": [1]}))
+    r = CrestFlightStreamReader(
+        {"location": server.location, "prefix": "v/"},
+        StructType([StructField("a", LongType())]),
+    )
+    assert r._client is None  # nothing opened at construction
+    r.read({"last": ""})
+    client = r._client
+    r.read({"last": ""})
+    assert r._client is client  # idle polls share one connection
+    assert pickle.loads(pickle.dumps(r))._client is None
+
+    with pytest.raises(pa.ArrowException):  # do_get of an unknown ticket
+        r._call(lambda c: list(c.do_get(fl.Ticket(b"v/missing"))))
+    assert r._client is None  # the failed client was dropped
+    it, end = r.read({"last": ""})
+    assert end == {"last": "v/tick-0000"} and r._client is not client
 
 
 def test_flight_capped_restart_exactly_once(spark, sf_dir, server, tmp_path):
     """Integration shape of the same defect: capped stream, stop, publish
-    more, restart from the checkpoint — every row exactly once (the
-    pre-fix reader re-ingested flights 2-3 after the restart because its
-    first capped end sorted below the checkpoint)."""
-    import time as _time
-
+    more, restart from the checkpoint — every row exactly once (a reader
+    whose first capped end sorted below the checkpoint would re-ingest
+    flights 2-3 after the restart)."""
     t = pa.table({"a": list(range(60))})
     for i in range(4):
         server.publish(f"v/tick-{i:04d}", t.slice(i * 10, 10))
@@ -460,7 +498,7 @@ def test_flight_capped_restart_exactly_once(spark, sf_dir, server, tmp_path):
         if rows:
             by_batch[batch_id] = rows  # keyed: foreachBatch replays dedup
 
-    def run(until: int) -> None:
+    def run() -> None:
         q = (
             spark.readStream.format("crest_flight")
             .option("location", server.location)
@@ -473,20 +511,15 @@ def test_flight_capped_restart_exactly_once(spark, sf_dir, server, tmp_path):
             .start()
         )
         try:
-            deadline = _time.time() + 90
-            while (
-                _time.time() < deadline
-                and sum(len(v) for v in by_batch.values()) < until
-            ):
-                _time.sleep(0.5)
+            q.processAllAvailable()
         finally:
             q.stop()
 
-    run(40)
+    run()
     assert sum(len(v) for v in by_batch.values()) == 40
     for i in range(4, 6):
         server.publish(f"v/tick-{i:04d}", t.slice(i * 10, 10))
-    run(60)
+    run()
     flat = sorted(x for v in by_batch.values() for x in v)
     assert flat == list(range(60))
 
@@ -495,8 +528,6 @@ def test_flight_max_flights_per_trigger(spark, sf_dir, server, tmp_path):
     """Backpressure: with maxFlightsPerTrigger=2 a 6-flight backlog
     drains in >= 3 bounded micro-batches (never one giant catch-up
     batch), and every row still arrives exactly once."""
-    import time as _time
-
     t = pa.table({"a": list(range(60))})
     for i in range(6):
         server.publish(f"v/tick-{i:04d}", t.slice(i * 10, 10))
@@ -521,14 +552,95 @@ def test_flight_max_flights_per_trigger(spark, sf_dir, server, tmp_path):
         .start()
     )
     try:
-        deadline = _time.time() + 90
-        while _time.time() < deadline and sum(batches) < 60:
-            _time.sleep(1)
+        q.processAllAvailable()
     finally:
         q.stop()
     assert sum(batches) == 60  # exactly once, nothing lost
     assert len(batches) >= 3  # bounded batches: at most 2 flights each
     assert max(batches) <= 20
+
+
+def test_ingestion_service_run_once_drains_capped_backlog(
+    spark, server, tmp_path
+):
+    """run_once caps every Flight micro-batch at files_per_trigger
+    flights and still drains the whole backlog: availableNow would ask
+    for the latest offset once and strand everything past the first
+    cap's worth of flights."""
+    from crest_spark.streaming.ingest import (
+        IngestConfig,
+        IngestionService,
+        SourceSpec,
+    )
+
+    t = pa.table({"a": list(range(60))})
+    for i in range(6):
+        server.publish(f"v/tick-{i:04d}", t.slice(i * 10, 10))
+    cfg = IngestConfig(
+        warehouse=str(tmp_path / "wh"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+        sources=[
+            SourceSpec(
+                name="v",
+                flight_location=server.location,
+                flight_prefix="v/",
+                flight_schema="a BIGINT",
+                files_per_trigger=2,
+            )
+        ],
+    )
+    svc = IngestionService(spark, cfg)
+    svc.run_once()
+    table = svc.catalog.table("v")
+    got = sorted(r["a"] for r in table.read(spark).collect())
+    assert got == list(range(60))  # exactly once, nothing stranded
+    appends = [s for s in table.snapshots() if s.batch_id is not None]
+    assert len(appends) >= 3
+    assert max(s.num_rows for s in appends) <= 20
+    assert svc.queries == []  # drained queries are stopped
+
+
+def test_flight_stream_timestamps_match_batch_read(
+    spark, sf_dir, server, tmp_path
+):
+    """A producer's naive timestamp[us] column is cast to Spark's UTC
+    Arrow type before the planner hands it to the JVM: the streamed
+    rows equal what the partitioned batch reader returns."""
+    events = _events_us(sf_dir)
+    assert events.schema.field("ts").type == pa.timestamp("us")
+    for i, s in enumerate(_slices(events, 2)):
+        server.publish(f"events/tick-{i:04d}", s)
+
+    register_flight_source(spark)
+    streamed: list = []
+
+    def sink(df, batch_id):
+        streamed.extend(df.collect())
+
+    q = (
+        spark.readStream.format("crest_flight")
+        .option("location", server.location)
+        .option("prefix", "events/")
+        .load()
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt_ts"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    batch = (
+        spark.read.format("crest_flight")
+        .option("location", server.location)
+        .option("prefix", "events/")
+        .load()
+        .collect()
+    )
+    def by_id(rows) -> dict:
+        return {r["event_id"]: r for r in rows}
+
+    assert len(streamed) == events.num_rows
+    assert by_id(streamed) == by_id(batch)
+    assert all(r["ts"] is not None for r in streamed)
 
 
 def test_full_pipeline_flight_to_matview(spark, sf_dir, server, tmp_path):
