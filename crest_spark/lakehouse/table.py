@@ -11,9 +11,22 @@ environment. Same transactional model Iceberg/Delta use:
         data/txn-<uuid>/part-*.parquet   files written BEFORE the commit
 
 - **Atomic commit**: data files land first (invisible), then the commit
-  record is os.rename'd into the next sequential version slot — rename is
-  atomic on POSIX, and an existing target means a concurrent writer won:
-  re-read and retry (optimistic concurrency).
+  record is ``os.link``'d into the next sequential version slot — link
+  is an atomic create-if-absent on POSIX (a rename would silently
+  replace a concurrent winner's record), and an existing target means
+  a concurrent writer won: re-read and retry (optimistic concurrency).
+- **One retry driver**: every read-modify-write verb runs its attempt
+  through ``_retrying``, which hands it a fresh base version and folded
+  state, commits against that base, and on ``CommitConflict`` records
+  the lost race (``commit_conflict_counts``) and re-derives. Budgets:
+  50 attempts for the metadata-only verbs (``publish_staged``,
+  ``discard_staged``, ``fast_forward``, ``rename_column``,
+  ``drop_column``), ``_MERGE_RETRIES`` = 5 for the data-rewriting ones
+  (``merge``, ``delete``, ``update``, ``compact``), and
+  ``_REBUILD_MAX_PASSES`` for the staged vector-index rebuild. After
+  the budget the verb raises ``CommitConflict`` chained to the last
+  lost race. Every successful commit writes the periodic checkpoint
+  itself.
 - **Snapshot isolation**: readers list the log once and read exactly the
   files committed at that version (time travel via ``version=``).
 - **Exactly-once streaming sink**: commits carry an optional
@@ -44,7 +57,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
@@ -132,6 +145,33 @@ _NULLS_KEY = "__nulls__"  # reserved per-file stats slot: column null counts
 # executor memory as a broadcast. ~1M keys × ~32 B/key ≈ 32 MB, the top
 # of the sane broadcast range.
 _DELTA_BROADCAST_MAX_KEYS = 1_000_000
+
+
+def _write_txn(df_writer, root: str) -> tuple[str, list[str]]:
+    """Write one transaction's parquet files into a fresh
+    ``<root>/txn-<uuid>`` directory (invisible until a commit lists
+    them): returns the directory and its sorted parquet file paths."""
+    txn_dir = os.path.join(root, f"txn-{uuid.uuid4().hex}")
+    df_writer.mode("overwrite").parquet(txn_dir)
+    return txn_dir, sorted(
+        os.path.join(txn_dir, f)
+        for f in os.listdir(txn_dir)
+        if f.endswith(".parquet")
+    )
+
+
+def _range_cond(predicates: dict) -> Column:
+    """Row condition for ALL ``{col: (lo, hi)}`` range predicates (either
+    bound may be None). NULL-safe: a NULL in a predicate column is "not
+    matched" (False), never NULL — ``~cond`` would otherwise drop the
+    row silently."""
+    cond = F.lit(True)
+    for col, (lo, hi) in predicates.items():
+        if lo is not None:
+            cond = cond & (F.col(col) >= lo)
+        if hi is not None:
+            cond = cond & (F.col(col) <= hi)
+    return F.coalesce(cond, F.lit(False))
 
 
 def _require_range_predicates(predicates: dict, verb: str) -> None:
@@ -409,7 +449,7 @@ def _coalesce_groups(groups: list[dict]) -> list[dict]:
 def _group_excluded(state: dict, predicates: dict) -> set:
     """Files provably excluded by the manifest-group summaries for the
     given (normalized) predicates — the shared prefilter behind
-    ``pruned_files`` and the merge/delete/update keep-touch loops.
+    ``pruned_files`` and ``_plan_touch`` (merge/delete/update).
     Group exclusion implies per-file exclusion for every member (see
     ``_group_stats``), so callers may skip the member files' own
     ``_stats_admit`` checks entirely.
@@ -1504,6 +1544,9 @@ class LakehouseTable:
         ``CommitConflict`` so the caller re-reads and re-derives — a
         concurrent append can never be silently dropped by a stale rewrite
         (Iceberg's validate-base / Delta's conflict-check semantics).
+
+        A won slot writes the periodic checkpoint before returning, so
+        no commit path can skip it.
         """
         os.makedirs(self.log_path, exist_ok=True)
         for _ in range(50):
@@ -1521,12 +1564,34 @@ class LakehouseTable:
             try:
                 # atomic create-if-absent: link() fails if target exists
                 os.link(tmp, target)
-                os.unlink(tmp)
-                return version
             except FileExistsError:
                 os.unlink(tmp)
                 continue  # concurrent writer won this version; retry
+            os.unlink(tmp)
+            self._maybe_checkpoint(version)
+            return version
         raise CommitConflict(f"could not commit to {self.namespace}.{self.name}")
+
+    def _retrying(self, op: str, attempt, tries: int):
+        """The one optimistic read-modify-write loop: call
+        ``attempt(base, state)`` on a fresh head ``base`` and its folded
+        ``state``; the attempt commits with ``expected_base=base``. A
+        ``CommitConflict`` (the head moved) is recorded against
+        ``(table, op)`` and retried on a fresh read, up to ``tries``
+        attempts; any other exception propagates untouched. State that
+        must survive a retry belongs to the caller, not the attempt."""
+        table = f"{self.namespace}.{self.name}"
+        last: CommitConflict | None = None
+        for _ in range(tries):
+            base = self.version()
+            try:
+                return attempt(base, self._state(upto=base))
+            except CommitConflict as e:
+                last = e
+                _record_conflict(table, op)
+        raise CommitConflict(
+            f"{op} on {table} lost the commit race {tries} times"
+        ) from last
 
     def create(self, schema: StructType) -> None:
         """DDL: create the table with a pinned schema (no data)."""
@@ -1759,18 +1824,12 @@ class LakehouseTable:
                 if cluster_partitions
                 else df.repartitionByRange(*cluster_by)
             ).sortWithinPartitions(*cluster_by)
-        txn_dir = os.path.join(self.data_path, f"txn-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
+        writer = df.write
         if max_rows_per_file is not None:
             # hard per-file row cap (file-sizing policy; the reference's
             # batching.maxRows intent, enforced by the writer itself)
             writer = writer.option("maxRecordsPerFile", max_rows_per_file)
-        writer.parquet(txn_dir)
-        files = sorted(
-            os.path.join(txn_dir, f)
-            for f in os.listdir(txn_dir)
-            if f.endswith(".parquet")
-        )
+        txn_dir, files = _write_txn(writer, self.data_path)
         num_rows = _footer_row_count(files)
         stats = _footer_stats(files)
         if bloom_for:
@@ -1782,7 +1841,7 @@ class LakehouseTable:
             json.dumps(table_schema.jsonValue()),
             txn_dir,
         )
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "append",
                 "files": files,
@@ -1814,8 +1873,6 @@ class LakehouseTable:
                 ),
             }
         )
-        self._maybe_checkpoint(version)
-        return version
 
     # ----------------------------------------------------- write-audit-publish
     def pending_staged(self, version: int | None = None) -> dict[int, dict]:
@@ -1878,67 +1935,21 @@ class LakehouseTable:
         # read-back, but a retry whose conflict was an add_constraint
         # (or drop+re-add) sees a new signature and re-validates — the
         # new constraint must gate the publish (ADVICE r9 #1)
-        for _ in range(50):
-            state = self._state()
-            pending = {int(v): e for v, e in (state.get("staged") or {}).items()}
-            take = sorted(pending) if versions is None else sorted(versions)
-            missing = [v for v in take if v not in pending]
-            if versions is not None and missing:
-                raise StagedVersionsGone(
-                    f"versions {missing} are not pending staged commits of "
-                    f"{self.namespace}.{self.name}"
-                )
+
+        def attempt(base: int, state: dict) -> int | None:
+            take = self._staged_take(state, versions)
             if not take:
                 return None
-            schema = StructType.fromJson(json.loads(state["schema"]))
-            files: list[str] = []
-            stats: dict = {}
-            num_rows = 0
-            for v in take:
-                e = pending[v]
-                files.extend(e["files"])
-                stats.update(e.get("stats", {}))
-                num_rows += max(e.get("num_rows", 0), 0)
-                schema = self._evolved_schema(
-                    schema, StructType.fromJson(json.loads(e["schema"]))
-                )
-            cons = dict(state.get("constraints") or {})
-            sig = frozenset(cons.items())
-            self._validate_late_constraints(
-                {v: pending[v] for v in take if (v, sig) not in validated},
+            pending = state["staged"]
+            return self._land_entries(
+                state,
+                {v: pending[str(v)] for v in take},
+                {"publish_of": take},
                 spark,
-                current=cons,
+                validated,
             )
-            validated.update((v, sig) for v in take)
-            try:
-                version = self._try_commit(
-                    {
-                        "operation": "append",
-                        "files": files,
-                        "stats": stats,
-                        "schema": json.dumps(schema.jsonValue()),
-                        "commit_ts": time.time(),
-                        "num_rows": num_rows,
-                        # r14: published files join the grouped
-                        # admission path like any other commit's
-                        # (stage time deliberately records none —
-                        # staged files are invisible)
-                        **(
-                            {"group_stats": _group_stats(files, stats)}
-                            if files
-                            else {}
-                        ),
-                        "extra": {"publish_of": take},
-                    },
-                    expected_base=state["version"],
-                )
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(version)
-            return version
-        raise CommitConflict(
-            f"could not publish staged commits of {self.namespace}.{self.name}"
-        )
+
+        return self._retrying("publish_staged", attempt, 50)
 
     def discard_staged(self, versions: list[int] | None = None) -> int | None:
         """Reject staged commits: a metadata-only commit removes them
@@ -1946,37 +1957,94 @@ class LakehouseTable:
         physical files stay referenced by the (historical) staged
         commit record until ``expire_snapshots`` drops it, after which
         ``vacuum`` collects them."""
-        for _ in range(50):
-            state = self._state()
-            pending = {int(v) for v in (state.get("staged") or {})}
-            take = sorted(pending) if versions is None else sorted(versions)
-            missing = [v for v in take if v not in pending]
-            if versions is not None and missing:
-                raise StagedVersionsGone(
-                    f"versions {missing} are not pending staged commits of "
-                    f"{self.namespace}.{self.name}"
-                )
+
+        def attempt(base: int, state: dict) -> int | None:
+            take = self._staged_take(state, versions)
             if not take:
                 return None
-            try:
-                version = self._try_commit(
-                    {
-                        "operation": "append",
-                        "files": [],
-                        "stats": {},
-                        "schema": state["schema"],
-                        "commit_ts": time.time(),
-                        "num_rows": 0,
-                        "extra": {"discard_of": take},
-                    },
-                    expected_base=state["version"],
-                )
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(version)
-            return version
-        raise CommitConflict(
-            f"could not discard staged commits of {self.namespace}.{self.name}"
+            return self._try_commit(
+                {
+                    "operation": "append",
+                    "files": [],
+                    "stats": {},
+                    "schema": state["schema"],
+                    "commit_ts": time.time(),
+                    "num_rows": 0,
+                    "extra": {"discard_of": take},
+                },
+                expected_base=base,
+            )
+
+        return self._retrying("discard_staged", attempt, 50)
+
+    def _staged_take(self, state: dict, versions: list[int] | None) -> list[int]:
+        """The staged versions a publish/discard acts on: all pending
+        ones, or exactly ``versions`` — ``StagedVersionsGone`` when a
+        racer already took some of them."""
+        pending = {int(v) for v in (state.get("staged") or {})}
+        if versions is None:
+            return sorted(pending)
+        missing = [v for v in sorted(versions) if v not in pending]
+        if missing:
+            raise StagedVersionsGone(
+                f"versions {missing} are not pending staged commits of "
+                f"{self.namespace}.{self.name}"
+            )
+        return sorted(versions)
+
+    def _land_entries(
+        self,
+        state: dict,
+        entries: dict[int, dict],
+        extra: dict,
+        spark: SparkSession | None,
+        validated: set[tuple[int, frozenset]],
+    ) -> int:
+        """Commit pending staged/branch ``entries`` ({commit version:
+        entry}) as ONE metadata-only ``append`` onto ``state``: their
+        files, stats and rows fold in version order, the schema evolves
+        to the union, and constraints added since each entry was written
+        are validated first (verdicts cached in the caller-owned
+        ``validated`` set, which outlives conflict retries). Landed
+        files join the grouped admission path like any other commit's
+        (r14; stage/branch time deliberately records none — those files
+        are invisible)."""
+        schema = StructType.fromJson(json.loads(state["schema"]))
+        files: list[str] = []
+        stats: dict = {}
+        num_rows = 0
+        for v in sorted(entries):
+            e = entries[v]
+            files.extend(e["files"])
+            stats.update(e.get("stats", {}))
+            num_rows += max(e.get("num_rows", 0), 0)
+            schema = self._evolved_schema(
+                schema, StructType.fromJson(json.loads(e["schema"]))
+            )
+        cons = dict(state.get("constraints") or {})
+        sig = frozenset(cons.items())
+        self._validate_late_constraints(
+            {v: e for v, e in entries.items() if (v, sig) not in validated},
+            spark,
+            current=cons,
+        )
+        validated.update((v, sig) for v in entries)
+        return self._try_commit(
+            {
+                "operation": "append",
+                "files": files,
+                "stats": stats,
+                "schema": json.dumps(schema.jsonValue()),
+                "commit_ts": time.time(),
+                "num_rows": num_rows,
+                **(
+                    {"group_stats": _group_stats(files, stats)}
+                    if files
+                    else {}
+                ),
+                "extra": extra,
+            },
+            expected_base=state["version"],
         )
 
     # -------------------------------------------------------- branch refs
@@ -2005,7 +2073,7 @@ class LakehouseTable:
                 f"branch {name!r} already exists on "
                 f"{self.namespace}.{self.name}"
             )
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "append",
                 "files": [],
@@ -2019,8 +2087,6 @@ class LakehouseTable:
                 },
             }
         )
-        self._maybe_checkpoint(version)
-        return version
 
     def _branch_info(self, name: str) -> dict:
         info = (self._state().get("branches") or {}).get(name)
@@ -2074,7 +2140,7 @@ class LakehouseTable:
         drops them, after which ``vacuum`` collects them."""
         self._branch_info(name)  # descriptive error if absent
         state = self._state()
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "append",
                 "files": [],
@@ -2085,8 +2151,6 @@ class LakehouseTable:
                 "extra": {"drop_branch": name},
             }
         )
-        self._maybe_checkpoint(version)
-        return version
 
     def fast_forward(
         self, name: str, spark: SparkSession | None = None
@@ -2106,70 +2170,24 @@ class LakehouseTable:
         # (version, constraint-signature) cache rule as publish_staged:
         # a retry under unchanged constraints skips the read-back, a
         # retry whose conflict added/changed a constraint re-validates
-        for _ in range(50):
-            state = self._state()
+
+        def attempt(base: int, state: dict) -> int | None:
             info = (state.get("branches") or {}).get(name)
             if info is None:
                 raise ValueError(
                     f"no branch {name!r} on {self.namespace}.{self.name}"
                 )
-            schema = StructType.fromJson(json.loads(state["schema"]))
-            files: list[str] = []
-            stats: dict = {}
-            num_rows = 0
-            for v in sorted(info["entries"], key=int):
-                e = info["entries"][v]
-                files.extend(e["files"])
-                stats.update(e.get("stats", {}))
-                num_rows += max(e.get("num_rows", 0), 0)
-                schema = self._evolved_schema(
-                    schema, StructType.fromJson(json.loads(e["schema"]))
-                )
-            cons = dict(state.get("constraints") or {})
-            sig = frozenset(cons.items())
-            self._validate_late_constraints(
-                {
-                    int(v): e
-                    for v, e in info["entries"].items()
-                    if (int(v), sig) not in validated
-                },
+            entries = {int(v): e for v, e in info["entries"].items()}
+            version = self._land_entries(
+                state,
+                entries,
+                {"publish_branch": name, "publish_of": sorted(entries)},
                 spark,
-                current=cons,
+                validated,
             )
-            validated.update((int(v), sig) for v in info["entries"])
-            try:
-                version = self._try_commit(
-                    {
-                        "operation": "append",
-                        "files": files,
-                        "stats": stats,
-                        "schema": json.dumps(schema.jsonValue()),
-                        "commit_ts": time.time(),
-                        "num_rows": num_rows,
-                        # r14: landed branch files join the grouped
-                        # admission path (see publish_staged)
-                        **(
-                            {"group_stats": _group_stats(files, stats)}
-                            if files
-                            else {}
-                        ),
-                        "extra": {
-                            "publish_branch": name,
-                            "publish_of": [
-                                int(v) for v in sorted(info["entries"], key=int)
-                            ],
-                        },
-                    },
-                    expected_base=state["version"],
-                )
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(version)
-            return version if info["entries"] else None
-        raise CommitConflict(
-            f"could not fast-forward branch {name!r} of "
-            f"{self.namespace}.{self.name}"
-        )
+            return version if entries else None
+
+        return self._retrying("fast_forward", attempt, 50)
 
     # --------------------------------------------------- CHECK constraints
     def constraints(self, version: int | None = None) -> dict[str, str]:
@@ -2215,7 +2233,7 @@ class LakehouseTable:
                     f"cannot add constraint {name!r} ({expr}): existing "
                     f"rows of {self.namespace}.{self.name} violate it"
                 )
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "append",
                 "files": [],
@@ -2226,8 +2244,6 @@ class LakehouseTable:
                 "extra": {"set_constraint": {name: expr}},
             }
         )
-        self._maybe_checkpoint(version)
-        return version
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint by name (descriptive error if
@@ -2237,7 +2253,7 @@ class LakehouseTable:
             raise ValueError(
                 f"no constraint {name!r} on {self.namespace}.{self.name}"
             )
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "append",
                 "files": [],
@@ -2248,8 +2264,6 @@ class LakehouseTable:
                 "extra": {"drop_constraint": name},
             }
         )
-        self._maybe_checkpoint(version)
-        return version
 
     # ------------------------------------------- schema evolution (in place)
     def _guard_schema_evolution(self, state: dict, cols: list[str]) -> None:
@@ -2322,58 +2336,25 @@ class LakehouseTable:
                 "rename_column: a nested rename must keep the parent "
                 "path (a.b -> a.c)"
             )
-        for _ in range(50):
-            state = self._state()
-            if state["schema"] is None:
-                raise FileNotFoundError(
-                    f"table {self.namespace}.{self.name} does not exist"
+        def _rename(fields: list[StructField], leaf: str):
+            if pn[-1] in [f.name for f in fields]:
+                raise ValueError(
+                    f"column {new!r} already exists on "
+                    f"{self.namespace}.{self.name}"
                 )
-            schema = StructType.fromJson(json.loads(state["schema"]))
+            return [
+                StructField(pn[-1], f.dataType, f.nullable, f.metadata)
+                if f.name == leaf
+                else f
+                for f in fields
+            ]
 
-            def _rename(fields: list[StructField], leaf: str):
-                if pn[-1] in [f.name for f in fields]:
-                    raise ValueError(
-                        f"column {new!r} already exists on "
-                        f"{self.namespace}.{self.name}"
-                    )
-                return [
-                    StructField(pn[-1], f.dataType, f.nullable, f.metadata)
-                    if f.name == leaf
-                    else f
-                    for f in fields
-                ]
-
-            try:
-                evolved = _edit_struct_path(schema, po, _rename)
-            except ValueError as exc:
-                if str(exc).startswith("no field"):
-                    raise ValueError(
-                        f"no column {old!r} on "
-                        f"{self.namespace}.{self.name}"
-                    ) from None
-                raise
-            self._guard_schema_evolution(state, [old])
-            try:
-                version = self._try_commit(
-                    {
-                        "operation": "append",
-                        "files": [],
-                        "stats": {},
-                        "schema": json.dumps(evolved.jsonValue()),
-                        "commit_ts": time.time(),
-                        "num_rows": 0,
-                        "extra": {
-                            "rename_column": {"from": old, "to": new}
-                        },
-                    },
-                    expected_base=state["version"],
-                )
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(version)
-            return version
-        raise CommitConflict(
-            f"could not rename column on {self.namespace}.{self.name}"
+        return self._retrying(
+            "rename_column",
+            lambda base, state: self._commit_evolved(
+                state, old, _rename, {"rename_column": {"from": old, "to": new}}
+            ),
+            50,
         )
 
     def drop_column(self, name: str) -> int:
@@ -2387,55 +2368,52 @@ class LakehouseTable:
         struct members drop by dotted path (``a.b``); dropping the last
         member of a struct is rejected (drop the struct instead)."""
         parts = name.split(".")
-        for _ in range(50):
-            state = self._state()
-            if state["schema"] is None:
-                raise FileNotFoundError(
-                    f"table {self.namespace}.{self.name} does not exist"
-                )
-            schema = StructType.fromJson(json.loads(state["schema"]))
 
-            def _drop(fields: list[StructField], leaf: str):
-                if len(fields) == 1:
-                    raise ValueError(
-                        "cannot drop the only "
-                        + ("member of struct "
-                           + ".".join(parts[:-1]) + " of "
-                           if len(parts) > 1
-                           else "column of ")
-                        + f"{self.namespace}.{self.name}"
-                    )
-                return [f for f in fields if f.name != leaf]
-
-            try:
-                evolved = _edit_struct_path(schema, parts, _drop)
-            except ValueError as exc:
-                if str(exc).startswith("no field"):
-                    raise ValueError(
-                        f"no column {name!r} on "
-                        f"{self.namespace}.{self.name}"
-                    ) from None
-                raise
-            self._guard_schema_evolution(state, [name])
-            try:
-                version = self._try_commit(
-                    {
-                        "operation": "append",
-                        "files": [],
-                        "stats": {},
-                        "schema": json.dumps(evolved.jsonValue()),
-                        "commit_ts": time.time(),
-                        "num_rows": 0,
-                        "extra": {"drop_column": name},
-                    },
-                    expected_base=state["version"],
+        def _drop(fields: list[StructField], leaf: str):
+            if len(fields) == 1:
+                raise ValueError(
+                    "cannot drop the only "
+                    + ("member of struct "
+                       + ".".join(parts[:-1]) + " of "
+                       if len(parts) > 1
+                       else "column of ")
+                    + f"{self.namespace}.{self.name}"
                 )
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(version)
-            return version
-        raise CommitConflict(
-            f"could not drop column on {self.namespace}.{self.name}"
+            return [f for f in fields if f.name != leaf]
+
+        return self._retrying(
+            "drop_column",
+            lambda base, state: self._commit_evolved(
+                state, name, _drop, {"drop_column": name}
+            ),
+            50,
+        )
+
+    def _commit_evolved(self, state: dict, col: str, edit, extra: dict) -> int:
+        """One in-place evolution attempt: apply ``edit`` to the struct
+        holding the dotted path ``col``, check the evolution guards, and
+        commit the evolved schema metadata-only onto ``state``."""
+        schema = StructType.fromJson(json.loads(state["schema"]))
+        try:
+            evolved = _edit_struct_path(schema, col.split("."), edit)
+        except ValueError as exc:
+            if str(exc).startswith("no field"):
+                raise ValueError(
+                    f"no column {col!r} on {self.namespace}.{self.name}"
+                ) from None
+            raise
+        self._guard_schema_evolution(state, [col])
+        return self._try_commit(
+            {
+                "operation": "append",
+                "files": [],
+                "stats": {},
+                "schema": json.dumps(evolved.jsonValue()),
+                "commit_ts": time.time(),
+                "num_rows": 0,
+                "extra": extra,
+            },
+            expected_base=state["version"],
         )
 
     def field_ids(self, version: int | None = None) -> dict[str, int]:
@@ -2634,13 +2612,7 @@ class LakehouseTable:
         re-encode per retry would never win the race against a live
         micro-batch stream). Files staged here but never committed are
         invisible orphans; ``vacuum`` reclaims them."""
-        txn_dir = os.path.join(self.data_path, f"txn-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(txn_dir)
-        new_files = sorted(
-            os.path.join(txn_dir, f)
-            for f in os.listdir(txn_dir)
-            if f.endswith(".parquet")
-        )
+        txn_dir, new_files = _write_txn(df.write, self.data_path)
         stats = _footer_stats(new_files)
         if bloom_for:
             for f, blooms in _file_blooms(new_files, bloom_for).items():
@@ -2711,7 +2683,7 @@ class LakehouseTable:
                     "rows": run_rows,
                 },
             }
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "replace",
                 "files": files,
@@ -2740,8 +2712,6 @@ class LakehouseTable:
             },
             expected_base=expected_version,
         )
-        self._maybe_checkpoint(version)
-        return version
 
     _MERGE_RETRIES = 5
 
@@ -2807,6 +2777,47 @@ class LakehouseTable:
             if _stats_admit(fs, preds):
                 return True
         return False
+
+    def _plan_touch(
+        self, state: dict, predicates: dict
+    ) -> tuple[list[str], list[str], list[str]]:
+        """Copy-on-write file plan for a rewrite restricted to ``{col:
+        (lo, hi)}`` ranges: ``(keep, touch, drop)``, each in the state's
+        file order. ``keep``: stats (manifest group first, then the
+        file's own) prove the file holds no matching row AND no pending
+        MoR delete could affect it (a replace clears pending deletes, so
+        an affected file must be rewritten with them applied) — it moves
+        into the new snapshot by reference. ``touch``: every other file.
+        ``drop`` ⊆ ``touch``: files whose stats prove EVERY row matches
+        and that no pending SEQUENCE-AWARE delta reaches — a delete may
+        leave them out unread (the Iceberg partition-drop shape; pending
+        removal deltas only remove a subset of such a file's rows, but a
+        sequence-aware delta ranks other files' rows against this one's,
+        so dropping it unread could let a superseded row win). Empty
+        ``predicates`` touch every file.
+
+        The group prefilter (r13) keeps planning O(groups + touched) at
+        the 10^6-file regime: a group-excluded file is provably excluded
+        per-file too, so its own stats are never consulted."""
+        excluded = _group_excluded(state, predicates)
+        keep: list[str] = []
+        touch: list[str] = []
+        drop: list[str] = []
+        for f in state["files"]:
+            fs = None if f in excluded else self._file_stats(state, f)
+            if (
+                fs is None or not _stats_admit(fs, predicates)
+            ) and not self._delete_affected(state, f):
+                keep.append(f)
+                continue
+            touch.append(f)
+            if fs is None:
+                fs = self._file_stats(state, f)
+            if _stats_all_match(fs, predicates) and not (
+                self._delete_affected(state, f, seq_only=True)
+            ):
+                drop.append(f)
+        return keep, touch, drop
 
     def _apply_pending_deletes(
         self,
@@ -2915,13 +2926,7 @@ class LakehouseTable:
             eq_groups: dict[tuple, list[dict]] = {}
             for d in batch:
                 if d.get("pred") is not None:
-                    cond = F.lit(True)
-                    for c, (lo, hi) in d["pred"].items():
-                        if lo is not None:
-                            cond = cond & (F.col(c) >= lo)
-                        if hi is not None:
-                            cond = cond & (F.col(c) <= hi)
-                    cond = F.coalesce(cond, F.lit(False)) & (
+                    cond = _range_cond(d["pred"]) & (
                         F.col("__crest_seq") <= int(d["seq"])
                     )
                     out = out.where(~cond)
@@ -3060,7 +3065,6 @@ class LakehouseTable:
         ``sequence_col`` (an unconditional tombstone has no sound
         sequence value)."""
         table_schema = StructType.fromJson(json.loads(state["schema"]))
-        del_dir = os.path.join(self.deletes_path, f"txn-{uuid.uuid4().hex}")
         if sequence_col is None:
             kd = updates.select(*keys).distinct()
             if extra_delete_keys is not None:
@@ -3078,12 +3082,7 @@ class LakehouseTable:
                 else F.max(F.when(F.lit(False), F.col(sequence_col)))
             )
             kd = updates.groupBy(*keys).agg(tomb.alias("__crest_tomb_seq"))
-        kd.sort(*keys).write.mode("overwrite").parquet(del_dir)
-        del_files = sorted(
-            os.path.join(del_dir, f)
-            for f in os.listdir(del_dir)
-            if f.endswith(".parquet")
-        )
+        del_dir, del_files = _write_txn(kd.sort(*keys).write, self.deletes_path)
         num_keys = _footer_row_count(del_files)
         dstats = _footer_stats(del_files)
         bounds: dict[str, list] = {}
@@ -3119,13 +3118,7 @@ class LakehouseTable:
                 for f in table_schema.fields
             ]
         )
-        txn_dir = os.path.join(self.data_path, f"txn-{uuid.uuid4().hex}")
-        rows.write.mode("overwrite").parquet(txn_dir)
-        files = sorted(
-            os.path.join(txn_dir, f)
-            for f in os.listdir(txn_dir)
-            if f.endswith(".parquet")
-        )
+        txn_dir, files = _write_txn(rows.write, self.data_path)
         stats = _footer_stats(files)
         if bloom_for:
             for f, blooms in _file_blooms(files, bloom_for).items():
@@ -3164,7 +3157,7 @@ class LakehouseTable:
         }
         if change_files is not None:
             extra["change_files"] = change_files
-        version = self._try_commit(
+        return self._try_commit(
             {
                 "operation": "rowdelta",
                 "files": files,
@@ -3185,29 +3178,21 @@ class LakehouseTable:
             },
             expected_base=base,
         )
-        self._maybe_checkpoint(version)
-        return version
 
-    def _stage_changes(
-        self, old_df: DataFrame, new_df: DataFrame, keys: list[str]
-    ) -> list[str]:
-        """Stage the CDF rows for a copy-on-write rewrite: the multiset
-        diff of the touched region, classified Delta-CDF style by key
-        presence on the other side (update_preimage/update_postimage
-        vs delete/insert). Computed as a diff of old-vs-new rather than
-        fused into the merge window: provably consistent with the
-        observable rowset under every edge case (sequence losers,
-        tombstones, duplicate-key collapse), at the cost of a second
-        pass over the touched region — the same O(touched files) class
-        as the rewrite itself. Unchanged rows never appear in the feed.
+    @staticmethod
+    def _net_changes(
+        old_df: DataFrame, new_df: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """The multiset diff of a rewritten region: ``(pre, post)`` —
+        the rows of ``old_df`` not in ``new_df`` and vice versa, each
+        with its multiplicity. Unchanged rows never appear.
 
         The diff runs as ONE signed-count aggregate over old ∪ new
         (r14): Spark rewrites each EXCEPT ALL into exactly this
-        aggregate internally (RewriteExceptAll), so the former
-        ``old.exceptAll(new)`` + ``new.exceptAll(old)`` pair aggregated
-        the touched region twice in sign-inverted copies AQE cannot
-        share; pre (net > 0) and post (net < 0) now both derive from
-        one aggregate — half the corpus-scale staging shuffle
+        aggregate internally (RewriteExceptAll), so an ``exceptAll``
+        pair would aggregate the region twice in sign-inverted copies
+        AQE cannot share; pre (net > 0) and post (net < 0) both derive
+        from one aggregate — half the corpus-scale staging shuffle
         (interleaved A/B 0.82–0.88x locally). Rows are replicated
         |net| times via explode(sequence(...)), which materializes an
         array per distinct row: per-row multiplicity in a touched
@@ -3248,6 +3233,21 @@ class LakehouseTable:
             )
             .drop(i_col, net_col)
         )
+        return pre, post
+
+    def _stage_changes(
+        self, old_df: DataFrame, new_df: DataFrame, keys: list[str]
+    ) -> list[str]:
+        """Stage the CDF rows for a merge's copy-on-write rewrite: the
+        ``_net_changes`` diff of the touched region, classified Delta-CDF
+        style by key presence on the other side (update_preimage/
+        update_postimage vs delete/insert). Computed as a diff of
+        old-vs-new rather than fused into the merge window: provably
+        consistent with the observable rowset under every edge case
+        (sequence losers, tombstones, duplicate-key collapse), at the
+        cost of a second pass over the touched region — the same
+        O(touched files) class as the rewrite itself."""
+        pre, post = self._net_changes(old_df, new_df)
         pre_keys = pre.select(*keys).distinct()
         post_keys = post.select(*keys).distinct()
         ct = "_change_type"
@@ -3270,13 +3270,7 @@ class LakehouseTable:
                 )
             )
         )
-        txn_dir = os.path.join(self.changes_path, f"txn-{uuid.uuid4().hex}")
-        changes.write.mode("overwrite").parquet(txn_dir)
-        return sorted(
-            os.path.join(txn_dir, f)
-            for f in os.listdir(txn_dir)
-            if f.endswith(".parquet")
-        )
+        return _write_txn(changes.write, self.changes_path)[1]
 
     def merge(
         self,
@@ -3462,109 +3456,73 @@ class LakehouseTable:
             # pin it so a non-deterministic plan cannot diverge the
             # staged feed from the committed rows
             updates = updates.localCheckpoint(eager=True)
-        last_err: Exception | None = None
-        for _ in range(self._MERGE_RETRIES):
-            base = self.version()
-            state = self._state(upto=base)
-            stats: dict = state.get("stats", {})
-            keep: list[str] = []
-            touch: list[str] = []
-            # manifest-group fast path (r13): a file whose GROUP summary
-            # is disjoint from some key's bounds is provably disjoint
-            # per-file too (group cols exist only when every member
-            # records stats), so the per-file check is skipped — the
-            # CDC-merge planning term stays O(groups + touched) at the
-            # 10^6-file regime instead of O(files)
-            # one multi-key call: _stats_admit excludes on ANY column's
-            # disjointness, so this equals the union of per-key calls
-            # without re-walking the groups per key (review r13)
-            bounded = {
-                k: (key_bounds[k][0], key_bounds[k][1])
-                for k in keys
-                if key_bounds[k][0] is not None
-            }
-            grp_disjoint: set = (
-                _group_excluded(state, bounded)
-                if bounded and not sync
-                else set()
-            )
-            for f in state["files"]:
-                disjoint = f in grp_disjoint
-                if not disjoint and not sync:
-                    fs = self._file_stats(state, f)
-                    disjoint = any(
-                        key_bounds[k][0] is not None
-                        and k in fs
-                        and not _stats_admit(fs, {k: key_bounds[k]})
-                        for k in keys
-                    )
-                # a kept file must also be unaffected by PENDING MoR
-                # deletes: the replace commit clears them, so any file
-                # they could touch must be rewritten with them applied
-                if disjoint and not self._delete_affected(state, f):
-                    keep.append(f)  # some key range provably disjoint
-                else:
-                    touch.append(f)
-            def derive_merged(current: DataFrame) -> DataFrame:
-                """Post-merge rowset of the touched region — shared by
-                the CoW rewrite and the MoR change-feed staging (the MoR
-                scan is constructed to show exactly this rowset)."""
-                if sequence_col is None:
-                    upd_rows = updates
-                    if delete_col is not None:
-                        upd_rows = upd_rows.where(~F.col("__del"))
-                    if sync:
-                        # not-matched-by-source rows are deleted, so the
-                        # result is exactly the (non-tombstoned) source
-                        return upd_rows.select(*current.columns)
-                    kept = current.join(
-                        updates.select(*keys), on=keys, how="left_anti"
-                    )
-                    return kept.unionByName(
-                        upd_rows.select(*current.columns)
-                    )
-                # union the CONTESTED rows (current rows whose key the
-                # batch touches) with the updates, keep the per-key
-                # winner by (sequence desc, update-flag desc) — one
-                # shuffle on the contested subset only; ties prefer the
-                # update (idempotent replay). Rows of untouched keys
-                # pass through un-windowed: windowing them too would
-                # collapse legitimate duplicate keys of the touched
-                # region as a side effect of PHYSICAL file layout
-                # (which files the key-bounds pruning happens to
-                # touch) — layout-dependent semantics, and a divergence
-                # from the merge-on-read scan, which resolves only
-                # contested keys.
-                upd_keys = updates.select(*keys).distinct()
-                cur = (
-                    current.join(upd_keys, on=keys, how="left_semi")
-                    .withColumn("__is_upd", F.lit(0))
-                    .withColumn("__del", F.lit(False))
-                )
-                upd = updates.select(
-                    *current.columns,
-                    *(["__del"] if delete_col is not None else []),
-                ).withColumn("__is_upd", F.lit(1))
-                if delete_col is None:
-                    upd = upd.withColumn("__del", F.lit(False))
-                w = Window.partitionBy(*keys).orderBy(
-                    F.desc_nulls_last(sequence_col), F.desc("__is_upd")
-                )
-                winners = (
-                    cur.unionByName(upd)
-                    .withColumn("__rn", F.row_number().over(w))
-                    .where((F.col("__rn") == 1) & ~F.col("__del"))
-                    .drop("__rn", "__is_upd", "__del")
-                )
-                if sync:
-                    # keys absent from the source are deleted; contested
-                    # keys still resolve by sequence (a stale snapshot
-                    # row never overwrites a newer target version)
-                    return winners
-                return current.join(
-                    upd_keys, on=keys, how="left_anti"
-                ).unionByName(winners)
+        # bounded key ranges prune the rewrite; a sync touches every file
+        bounded = {
+            k: key_bounds[k] for k in keys if key_bounds[k][0] is not None
+        }
 
+        def derive_merged(current: DataFrame) -> DataFrame:
+            """Post-merge rowset of the touched region — shared by
+            the CoW rewrite and the MoR change-feed staging (the MoR
+            scan is constructed to show exactly this rowset)."""
+            if sequence_col is None:
+                upd_rows = updates
+                if delete_col is not None:
+                    upd_rows = upd_rows.where(~F.col("__del"))
+                if sync:
+                    # not-matched-by-source rows are deleted, so the
+                    # result is exactly the (non-tombstoned) source
+                    return upd_rows.select(*current.columns)
+                kept = current.join(
+                    updates.select(*keys), on=keys, how="left_anti"
+                )
+                return kept.unionByName(
+                    upd_rows.select(*current.columns)
+                )
+            # union the CONTESTED rows (current rows whose key the
+            # batch touches) with the updates, keep the per-key
+            # winner by (sequence desc, update-flag desc) — one
+            # shuffle on the contested subset only; ties prefer the
+            # update (idempotent replay). Rows of untouched keys
+            # pass through un-windowed: windowing them too would
+            # collapse legitimate duplicate keys of the touched
+            # region as a side effect of PHYSICAL file layout
+            # (which files the key-bounds pruning happens to
+            # touch) — layout-dependent semantics, and a divergence
+            # from the merge-on-read scan, which resolves only
+            # contested keys.
+            upd_keys = updates.select(*keys).distinct()
+            cur = (
+                current.join(upd_keys, on=keys, how="left_semi")
+                .withColumn("__is_upd", F.lit(0))
+                .withColumn("__del", F.lit(False))
+            )
+            upd = updates.select(
+                *current.columns,
+                *(["__del"] if delete_col is not None else []),
+            ).withColumn("__is_upd", F.lit(1))
+            if delete_col is None:
+                upd = upd.withColumn("__del", F.lit(False))
+            w = Window.partitionBy(*keys).orderBy(
+                F.desc_nulls_last(sequence_col), F.desc("__is_upd")
+            )
+            winners = (
+                cur.unionByName(upd)
+                .withColumn("__rn", F.row_number().over(w))
+                .where((F.col("__rn") == 1) & ~F.col("__del"))
+                .drop("__rn", "__is_upd", "__del")
+            )
+            if sync:
+                # keys absent from the source are deleted; contested
+                # keys still resolve by sequence (a stale snapshot
+                # row never overwrites a newer target version)
+                return winners
+            return current.join(
+                upd_keys, on=keys, how="left_anti"
+            ).unionByName(winners)
+
+        def attempt(base: int, state: dict) -> int:
+            keep, touch, _ = self._plan_touch(state, {} if sync else bounded)
             if strategy == "mor" or (
                 strategy == "auto"
                 and len(touch) >= mor_file_threshold
@@ -3607,25 +3565,18 @@ class LakehouseTable:
                         keys,
                         "left_anti",
                     )
-                try:
-                    return self._commit_row_delta(
-                        spark,
-                        updates,
-                        keys,
-                        state,
-                        base,
-                        bloom_for,
-                        sequence_col=sequence_col,
-                        change_files=cf,
-                        extra_delete_keys=extra_del,
-                        caller_extra=extra,
-                    )
-                except CommitConflict as e:
-                    last_err = e
-                    _record_conflict(
-                        f"{self.namespace}.{self.name}", "merge"
-                    )
-                    continue
+                return self._commit_row_delta(
+                    spark,
+                    updates,
+                    keys,
+                    state,
+                    base,
+                    bloom_for,
+                    sequence_col=sequence_col,
+                    change_files=cf,
+                    extra_delete_keys=extra_del,
+                    caller_extra=extra,
+                )
             current = self._apply_pending_deletes(
                 spark,
                 self._read_files(spark, touch, state["schema"], state=state),
@@ -3649,22 +3600,15 @@ class LakehouseTable:
                 commit_extra["change_files"] = self._stage_changes(
                     current, merged, keys
                 )
-            try:
-                return self.overwrite(
-                    merged,
-                    extra=commit_extra,
-                    expected_version=base,
-                    keep_files=keep,
-                    bloom_for=bloom_for,
-                )
-            except CommitConflict as e:
-                last_err = e
-                _record_conflict(f"{self.namespace}.{self.name}", "merge")
-                continue  # head advanced: re-read and re-derive
-        raise CommitConflict(
-            f"merge into {self.namespace}.{self.name} lost the commit race "
-            f"{self._MERGE_RETRIES} times"
-        ) from last_err
+            return self.overwrite(
+                merged,
+                extra=commit_extra,
+                expected_version=base,
+                keep_files=keep,
+                bloom_for=bloom_for,
+            )
+
+        return self._retrying("merge", attempt, self._MERGE_RETRIES)
 
     def delete(
         self,
@@ -3707,153 +3651,84 @@ class LakehouseTable:
         if mode not in ("cow", "mor"):
             raise ValueError(f"delete mode {mode!r}: cow | mor")
         _require_range_predicates(predicates, "delete")
-        last_err: Exception | None = None
-        if mode == "mor":
-            for _ in range(self._MERGE_RETRIES):
-                base = self.version()
-                state = self._state(upto=base)
-                entry = {
-                    "pred": {c: list(b) for c, b in predicates.items()},
-                    "seq": base,
-                }
-                extra: dict = {
-                    "merge_on_read": True,
-                    "deletes": [entry],
-                    "delete": {c: list(b) for c, b in predicates.items()},
-                }
-                if change_feed:
-                    # every removed row is a 'delete' change. Staging it
-                    # reads the predicate-affected files (the one case
-                    # that reads anything — the plain MoR delete is pure
-                    # metadata), which is the same O(affected files)
-                    # class the CoW delete CDC pays; the commit itself
-                    # still rewrites nothing.
-                    stats = state.get("stats", {})
-                    # union the predicate-admitted set with every
-                    # seq-affected file (mirrors the keep/touch guard in
-                    # merge and the scan() extension): a pending
-                    # sequence-aware entry whose contested keys span
-                    # admitted and non-admitted files would otherwise
-                    # resolve winners over a partial read and stage a
-                    # superseded row as the removed preimage, corrupting
-                    # the change feed incremental views fold.
-                    affected = [
-                        f
-                        for f in state["files"]
-                        if _stats_admit(self._file_stats(state, f), predicates)
-                        or self._delete_affected(state, f, seq_only=True)
-                    ]
-                    current = self._apply_pending_deletes(
-                        spark,
-                        self._read_files(
-                            spark, affected, state["schema"], state=state
-                        ),
-                        affected,
-                        state,
-                    )
-                    cond = F.lit(True)
-                    for col, (lo, hi) in predicates.items():
-                        if lo is not None:
-                            cond = cond & (F.col(col) >= lo)
-                        if hi is not None:
-                            cond = cond & (F.col(col) <= hi)
-                    removed = current.where(
-                        F.coalesce(cond, F.lit(False))
-                    ).withColumn("_change_type", F.lit("delete"))
-                    txn_dir = os.path.join(
-                        self.changes_path, f"txn-{uuid.uuid4().hex}"
-                    )
-                    removed.write.mode("overwrite").parquet(txn_dir)
-                    extra["change_files"] = sorted(
-                        os.path.join(txn_dir, f)
-                        for f in os.listdir(txn_dir)
-                        if f.endswith(".parquet")
-                    )
-                try:
-                    version = self._try_commit(
-                        {
-                            "operation": "rowdelta",
-                            "files": [],
-                            "stats": {},
-                            "schema": state["schema"],
-                            "commit_ts": time.time(),
-                            "num_rows": 0,
-                            "extra": extra,
-                        },
-                        expected_base=base,
-                    )
-                except CommitConflict as e:
-                    last_err = e
-                    _record_conflict(
-                        f"{self.namespace}.{self.name}", "delete"
-                    )
-                    continue
-                self._maybe_checkpoint(version)
-                return version
-            raise CommitConflict(
-                f"delete on {self.namespace}.{self.name} lost the commit "
-                f"race {self._MERGE_RETRIES} times"
-            ) from last_err
-        for _ in range(self._MERGE_RETRIES):
-            base = self.version()
-            state = self._state(upto=base)
-            stats: dict = state.get("stats", {})
-            keep: list[str] = []
-            touch: list[str] = []
-            drop: list[str] = []
-            # group fast path (r13): a group-excluded file provably
-            # holds no matching row — skip its per-file stats check
-            grp_excluded = _group_excluded(state, predicates)
-            for f in state["files"]:
-                affected = self._delete_affected(state, f)
-                if f in grp_excluded and not affected:
-                    keep.append(f)  # provably no matching row
-                    continue
-                fs = self._file_stats(state, f)
-                if not _stats_admit(fs, predicates) and not affected:
-                    keep.append(f)  # provably no matching row
-                elif _stats_all_match(fs, predicates) and not (
-                    self._delete_affected(state, f, seq_only=True)
-                ):
-                    # provably EVERY row matches: the file leaves the
-                    # snapshot without being read or rewritten — a
-                    # retention delete on a clustered table is
-                    # metadata-only (the Iceberg partition-drop shape).
-                    # Pending REMOVAL deltas only remove a SUBSET of the
-                    # file's rows, so dropping it whole stays correct;
-                    # a pending SEQUENCE-AWARE delta does not get this
-                    # shortcut — other files' rows rank against this
-                    # file's rows, so dropping it unread would let a
-                    # superseded row win the rewrite's resolution
-                    # (same family as the keep/touch split bug the
-                    # interleaving fuzz caught in merge).
-                    drop.append(f)
-                else:
-                    touch.append(f)  # may hold matching rows: rewrite
+        pred_extra = {c: list(b) for c, b in predicates.items()}
+
+        def attempt_mor(base: int, state: dict) -> int:
+            extra: dict = {
+                "merge_on_read": True,
+                "deletes": [{"pred": pred_extra, "seq": base}],
+                "delete": pred_extra,
+            }
+            if change_feed:
+                # every removed row is a 'delete' change. Staging it
+                # reads the predicate-affected files (the one case
+                # that reads anything — the plain MoR delete is pure
+                # metadata), which is the same O(affected files)
+                # class the CoW delete CDC pays; the commit itself
+                # still rewrites nothing.
+                #
+                # union the predicate-admitted set with every
+                # seq-affected file (mirrors the keep/touch guard in
+                # merge and the scan() extension): a pending
+                # sequence-aware entry whose contested keys span
+                # admitted and non-admitted files would otherwise
+                # resolve winners over a partial read and stage a
+                # superseded row as the removed preimage, corrupting
+                # the change feed incremental views fold.
+                affected = [
+                    f
+                    for f in state["files"]
+                    if _stats_admit(self._file_stats(state, f), predicates)
+                    or self._delete_affected(state, f, seq_only=True)
+                ]
+                current = self._apply_pending_deletes(
+                    spark,
+                    self._read_files(
+                        spark, affected, state["schema"], state=state
+                    ),
+                    affected,
+                    state,
+                )
+                removed = current.where(_range_cond(predicates)).withColumn(
+                    "_change_type", F.lit("delete")
+                )
+                extra["change_files"] = _write_txn(
+                    removed.write, self.changes_path
+                )[1]
+            return self._try_commit(
+                {
+                    "operation": "rowdelta",
+                    "files": [],
+                    "stats": {},
+                    "schema": state["schema"],
+                    "commit_ts": time.time(),
+                    "num_rows": 0,
+                    "extra": extra,
+                },
+                expected_base=base,
+            )
+
+        def attempt_cow(base: int, state: dict) -> int:
+            keep, touch, drop = self._plan_touch(state, predicates)
+            dropped = set(drop)
+            touch = [f for f in touch if f not in dropped]
             current = self._apply_pending_deletes(
                 spark,
                 self._read_files(spark, touch, state["schema"], state=state),
                 touch,
                 state,
             )
-            cond = F.lit(True)
-            for col, (lo, hi) in predicates.items():
-                if lo is not None:
-                    cond = cond & (F.col(col) >= lo)
-                if hi is not None:
-                    cond = cond & (F.col(col) <= hi)
-            # NULL in a predicate column = not matched = KEPT (~null is
-            # null and would silently drop the row without the coalesce)
-            remaining = current.where(~F.coalesce(cond, F.lit(False)))
+            cond = _range_cond(predicates)
+            remaining = current.where(~cond)
             del_extra: dict = {
-                "delete": {c: list(b) for c, b in predicates.items()},
+                "delete": pred_extra,
                 **({"dropped_files": len(drop)} if drop else {}),
             }
             if change_feed:
                 # every removed row is a 'delete' change; no diff needed.
                 # CDF must enumerate dropped files' rows too — the one
                 # case that reads them (metadata-only otherwise).
-                removed = current.where(F.coalesce(cond, F.lit(False)))
+                removed = current.where(cond)
                 if drop:
                     removed = removed.unionByName(
                         self._apply_pending_deletes(
@@ -3866,30 +3741,21 @@ class LakehouseTable:
                 removed = removed.withColumn(
                     "_change_type", F.lit("delete")
                 )
-                txn_dir = os.path.join(
-                    self.changes_path, f"txn-{uuid.uuid4().hex}"
-                )
-                removed.write.mode("overwrite").parquet(txn_dir)
-                del_extra["change_files"] = sorted(
-                    os.path.join(txn_dir, f)
-                    for f in os.listdir(txn_dir)
-                    if f.endswith(".parquet")
-                )
-            try:
-                return self.overwrite(
-                    remaining,
-                    extra=del_extra,
-                    expected_version=base,
-                    keep_files=keep,
-                )
-            except CommitConflict as e:
-                last_err = e
-                _record_conflict(f"{self.namespace}.{self.name}", "delete")
-                continue
-        raise CommitConflict(
-            f"delete from {self.namespace}.{self.name} lost the commit race "
-            f"{self._MERGE_RETRIES} times"
-        ) from last_err
+                del_extra["change_files"] = _write_txn(
+                    removed.write, self.changes_path
+                )[1]
+            return self.overwrite(
+                remaining,
+                extra=del_extra,
+                expected_version=base,
+                keep_files=keep,
+            )
+
+        return self._retrying(
+            "delete",
+            attempt_mor if mode == "mor" else attempt_cow,
+            self._MERGE_RETRIES,
+        )
 
     def update(
         self,
@@ -3913,40 +3779,16 @@ class LakehouseTable:
         if unknown:
             raise ValueError(f"update sets unknown columns {unknown}")
         _require_range_predicates(predicates, "update")
-        last_err: Exception | None = None
-        for _ in range(self._MERGE_RETRIES):
-            base = self.version()
-            state = self._state(upto=base)
-            stats: dict = state.get("stats", {})
-            keep: list[str] = []
-            touch: list[str] = []
-            # group fast path (r13) — see delete()
-            grp_excluded = _group_excluded(state, predicates)
-            for f in state["files"]:
-                if f in grp_excluded:
-                    if self._delete_affected(state, f):
-                        touch.append(f)
-                    else:
-                        keep.append(f)
-                elif _stats_admit(
-                    self._file_stats(state, f), predicates
-                ) or self._delete_affected(state, f):
-                    touch.append(f)
-                else:
-                    keep.append(f)
+        cond = _range_cond(predicates)
+
+        def attempt(base: int, state: dict) -> int:
+            keep, touch, _ = self._plan_touch(state, predicates)
             current = self._apply_pending_deletes(
                 spark,
                 self._read_files(spark, touch, state["schema"], state=state),
                 touch,
                 state,
             )
-            cond = F.lit(True)
-            for col, (lo, hi) in predicates.items():
-                if lo is not None:
-                    cond = cond & (F.col(col) >= lo)
-                if hi is not None:
-                    cond = cond & (F.col(col) <= hi)
-            cond = F.coalesce(cond, F.lit(False))
             # pin the pre-update types: SET must not drift a column's type
             cur_types = {f.name: f.dataType for f in current.schema.fields}
             updated = current.select(
@@ -3968,37 +3810,30 @@ class LakehouseTable:
                 }
             }
             if change_feed:
+                # pin the updated rowset before it is read twice (staging
+                # and overwrite): a SET fixed per query (current_timestamp)
+                # or a non-deterministic one would otherwise stage a feed
+                # that diverges from the committed rows (same rule as
+                # merge's change-feed path)
+                updated = updated.localCheckpoint(eager=True)
+                pre, post = self._net_changes(current, updated)
                 ct = "_change_type"
-                pre = current.exceptAll(updated).withColumn(
-                    ct, F.lit("update_preimage")
-                )
-                post = updated.exceptAll(current).withColumn(
-                    ct, F.lit("update_postimage")
-                )
-                txn_dir = os.path.join(
-                    self.changes_path, f"txn-{uuid.uuid4().hex}"
-                )
-                pre.unionByName(post).write.mode("overwrite").parquet(txn_dir)
-                upd_extra["change_files"] = sorted(
-                    os.path.join(txn_dir, f)
-                    for f in os.listdir(txn_dir)
-                    if f.endswith(".parquet")
-                )
-            try:
-                return self.overwrite(
-                    updated,
-                    extra=upd_extra,
-                    expected_version=base,
-                    keep_files=keep,
-                )
-            except CommitConflict as e:
-                last_err = e
-                _record_conflict(f"{self.namespace}.{self.name}", "update")
-                continue
-        raise CommitConflict(
-            f"update of {self.namespace}.{self.name} lost the commit race "
-            f"{self._MERGE_RETRIES} times"
-        ) from last_err
+                upd_extra["change_files"] = _write_txn(
+                    pre.withColumn(ct, F.lit("update_preimage"))
+                    .unionByName(
+                        post.withColumn(ct, F.lit("update_postimage"))
+                    )
+                    .write,
+                    self.changes_path,
+                )[1]
+            return self.overwrite(
+                updated,
+                extra=upd_extra,
+                expected_version=base,
+                keep_files=keep,
+            )
+
+        return self._retrying("update", attempt, self._MERGE_RETRIES)
 
     def compact(
         self,
@@ -4075,10 +3910,8 @@ class LakehouseTable:
             "zorder" if zorder_by else ("cluster" if cluster_by else "pack")
         )
         run_cols = list(zorder_by or cluster_by or [])
-        last_err: Exception | None = None
-        for _ in range(self._MERGE_RETRIES):
-            base = self.version()
-            state = self._state(upto=base)
+
+        def attempt(base: int, state: dict) -> int:
             keep: list[str] = []
             if tail_only:
                 runs = [
@@ -4199,24 +4032,17 @@ class LakehouseTable:
                 "compaction": True,
                 "cluster_run": {"mode": run_mode, "cols": run_cols},
             }
-            try:
-                # compaction preserves the rowset — tagged so incremental
-                # consumers (read_changes, the crest_table stream) skip it
-                return self.overwrite(
-                    clustered,
-                    extra=extra,
-                    expected_version=base,
-                    keep_files=keep,
-                    bloom_for=bloom_for,
-                )
-            except CommitConflict as e:
-                last_err = e
-                _record_conflict(f"{self.namespace}.{self.name}", "compact")
-                continue
-        raise CommitConflict(
-            f"compact of {self.namespace}.{self.name} lost the commit race "
-            f"{self._MERGE_RETRIES} times"
-        ) from last_err
+            # compaction preserves the rowset — tagged so incremental
+            # consumers (read_changes, the crest_table stream) skip it
+            return self.overwrite(
+                clustered,
+                extra=extra,
+                expected_version=base,
+                keep_files=keep,
+                bloom_for=bloom_for,
+            )
+
+        return self._retrying("compact", attempt, self._MERGE_RETRIES)
 
     def read_changes(
         self,

@@ -1035,8 +1035,6 @@ def rebuild_if_drifted(
 
     import numpy as np
 
-    from crest_spark.lakehouse.table import CommitConflict
-
     kind, meta = latest_build_meta(t)
     thr = _resolve_threshold(meta, threshold)
     if not force and ivf_drift(t) <= thr:
@@ -1125,9 +1123,8 @@ def rebuild_if_drifted(
     carried_deletes: list[dict] = []
     repaired: set[int] = set()
     seen_deletes: set[int] = set()
-    version: int | None = None
-    for _ in range(_REBUILD_MAX_PASSES):
-        head = t.version()
+
+    def attempt(head: int, state: dict) -> int:
         tail = [s for s in t.snapshots() if s.version > b0]
         for s in tail:
             # EVERY delete entry recorded after b0 joins the carry —
@@ -1211,7 +1208,6 @@ def rebuild_if_drifted(
                 rep["cluster_run_member"] = False
                 rep["file_seq_stamp"] = int(s.version)
                 prepared.append(rep)
-            continue  # re-list the head: more adds may have landed
         extra = _ivf_build_extra(kind, new_meta, meta_extra)
         if carried_deletes:
             # atomic carry (review r14): the entries land ON the
@@ -1224,21 +1220,16 @@ def rebuild_if_drifted(
                 for p in prepared
                 for f in p["files"]
             }
-        try:
-            version = t._commit_prepared_replace(
-                prepared,
-                extra=extra,
-                expected_version=head,
-            )
-            break
-        except CommitConflict:
-            continue  # a writer landed in the metadata window: repair
-    if version is None:
-        raise CommitConflict(
-            f"index rebuild of {t.namespace}.{t.name} could not win "
-            f"the publish race in {_REBUILD_MAX_PASSES} passes"
+        # a writer that landed in the metadata window (or during the
+        # repairs above) moves the head past ``head``: the conflict
+        # retries on a fresh head and repairs just that delta
+        return t._commit_prepared_replace(
+            prepared,
+            extra=extra,
+            expected_version=head,
         )
-    return version
+
+    return t._retrying("rebuild", attempt, _REBUILD_MAX_PASSES)
 
 
 def ivfpq_search(

@@ -168,6 +168,40 @@ def test_log_checkpointing(spark, catalog, sf_dir):
     assert t.read(spark).count() == 11 * n
 
 
+def test_rollback_writes_its_checkpoint(spark, catalog):
+    """A rollback commit landing on a checkpoint_interval multiple
+    writes that checkpoint like any other commit, and the state loaded
+    through it equals the state folded from the log alone."""
+    import json
+    import os
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, val string")
+    t = catalog.get_or_create_table("rb_ckpt", df.schema)  # v1
+    t.checkpoint_interval = 2
+    t.append(df)  # v2
+    t.append(df.limit(1), stage=True)  # v3: staged after the target
+    v = t.rollback(2)
+    assert v == 4
+    ck = t._checkpoint_file(v)
+    assert os.path.exists(ck)
+
+    def plain(state):
+        return json.loads(
+            json.dumps(
+                {k: x for k, x in state.items() if not k.startswith("_")},
+                sort_keys=True,
+            )
+        )
+
+    t._state_memo = {}
+    via_ckpt = plain(t._state())
+    os.remove(ck)
+    t._state_memo = {}
+    assert via_ckpt == plain(t._state())
+    assert t.read(spark).count() == 2
+    assert t.pending_staged() == {}
+
+
 def test_merge_sequence_out_of_order_converges(spark, catalog, sf_dir):
     """Sequence-conditioned MERGE (Delta's WHEN MATCHED AND s.seq > t.seq):
     delivering event batches deliberately OUT of order still converges to
@@ -343,6 +377,120 @@ def test_commit_conflict_metrics_counter(spark, catalog, sf_dir):
     key = (f"{t.namespace}.{t.name}", "merge")
     assert commit_conflict_counts().get(key, 0) == before.get(key, 0) + 1
     src.unpersist()
+
+
+_RACE_SCHEMA = "id int, val string, n int"
+
+
+def _race_setup(spark, catalog, verb):
+    """A tiny table on which ``verb`` has work to do, plus a callable
+    running the verb once (returns its result)."""
+    df = spark.createDataFrame(
+        [(i, f"v{i}", i) for i in range(4)], _RACE_SCHEMA
+    )
+    t = catalog.get_or_create_table(f"race_{verb}", df.schema)
+    t.append(df)
+    t.append(df.limit(1).selectExpr("id + 10 AS id", "val", "n"))
+    if verb in ("publish_staged", "discard_staged"):
+        t.append(df.limit(1).selectExpr("id + 20 AS id", "val", "n"), stage=True)
+    if verb == "fast_forward":
+        t.create_branch("b")
+        t.append(df.limit(1).selectExpr("id + 30 AS id", "val", "n"), branch="b")
+    upd = spark.createDataFrame([(0, "m", 0)], _RACE_SCHEMA)
+    run = {
+        "merge": lambda: t.merge(spark, upd, key="id"),
+        "update": lambda: t.update(spark, {"id": (0, 1)}, {"val": "'u'"}),
+        "delete_cow": lambda: t.delete(spark, {"id": (0, 0)}),
+        "delete_mor": lambda: t.delete(spark, {"id": (0, 0)}, mode="mor"),
+        "compact": lambda: t.compact(spark),
+        "publish_staged": lambda: t.publish_staged(),
+        "discard_staged": lambda: t.discard_staged(),
+        "fast_forward": lambda: t.fast_forward("b"),
+        "rename_column": lambda: t.rename_column("val", "label"),
+        "drop_column": lambda: t.drop_column("n"),
+    }[verb]
+    return t, run
+
+
+def _race_commits(t, race):
+    """Make ``t``'s conditional commits (those with an expected base)
+    race: before each one ``race`` commits through a second handle on
+    the same table, advancing the head behind the verb's back (the
+    one-shot wrapper pattern of the constraint race tests). Returns
+    the list the wrapper appends each conditional commit to."""
+    real = type(t)._try_commit
+    seen: list[int] = []
+
+    def racing(self, record, expected_base=None):
+        if expected_base is not None:
+            seen.append(expected_base)
+            race(len(seen))
+        return real(self, record, expected_base=expected_base)
+
+    t._try_commit = racing.__get__(t)
+    return seen
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "merge",
+        "update",
+        "delete_cow",
+        "delete_mor",
+        "compact",
+        "publish_staged",
+        "discard_staged",
+        "fast_forward",
+        "rename_column",
+        "drop_column",
+    ],
+)
+def test_commit_race_retried_by_every_verb(spark, catalog, verb):
+    """Every read-modify-write verb runs through the one retry driver: a
+    concurrent append landing between the verb's state read and its
+    conditional commit costs exactly one recorded conflict, the verb
+    re-derives and commits, and the concurrent row survives."""
+    from crest_spark.streaming.metrics import commit_conflict_counts
+
+    t, run = _race_setup(spark, catalog, verb)
+    racer = catalog.table(t.name)
+    row = spark.createDataFrame([(100, "racer", 100)], _RACE_SCHEMA)
+
+    def race(n):
+        if n == 1:
+            racer.append(row)
+
+    op = verb.split("_")[0] if verb.startswith("delete") else verb
+    key = (f"{t.namespace}.{t.name}", op)
+    before = commit_conflict_counts().get(key, 0)
+    seen = _race_commits(t, race)
+    assert run() is not None
+    assert len(seen) == 2
+    assert commit_conflict_counts().get(key, 0) == before + 1
+    assert t.read(spark).where(F.col("id") == 100).count() == 1
+
+
+@pytest.mark.parametrize(
+    "verb,budget", [("update", 5), ("rename_column", 50)]
+)
+def test_commit_race_exhausts_retry_budget(spark, catalog, verb, budget):
+    """A verb that loses every race gives up after exactly its budget
+    with a CommitConflict chained to the last lost race."""
+    from crest_spark.lakehouse.table import CommitConflict
+    from crest_spark.streaming.metrics import commit_conflict_counts
+
+    t, run = _race_setup(spark, catalog, verb)
+    racer = catalog.table(t.name)
+    key = (f"{t.namespace}.{t.name}", verb)
+    before = commit_conflict_counts().get(key, 0)
+    # a metadata-only racing commit: no Spark job per lost race
+    seen = _race_commits(t, lambda n: racer.create_branch(f"r{n}"))
+    with pytest.raises(CommitConflict, match="lost the commit race") as ei:
+        run()
+    assert isinstance(ei.value.__cause__, CommitConflict)
+    assert len(seen) == budget
+    assert commit_conflict_counts().get(key, 0) == before + budget
 
 
 def test_concurrent_mixed_workload_stress(spark, sf_dir, tmp_path):

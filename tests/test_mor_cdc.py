@@ -419,6 +419,35 @@ def test_cow_delete_drop_branch_respects_seq_delta(spark, tmp_path):
     assert t.read(spark).count() == 0
 
 
+def test_update_change_feed_postimages_match_committed_rows(spark, tmp_path):
+    """update(change_feed=True) stages the feed from the SAME rowset it
+    commits: a SET whose value is fixed per query (current_timestamp)
+    evaluated once for the staged feed and again for the rewrite would
+    stage postimages that differ from the live rows."""
+    t, _ = _mk(spark, tmp_path, n=20, files=2)
+    v0 = t.version()
+    t.update(
+        spark,
+        {"id": (0, 4)},
+        {"seq": "unix_micros(current_timestamp())"},
+        change_feed=True,
+    )
+    ch = t.read_changes(spark, after=v0, cdf=True)
+    post = sorted(
+        (r["id"], r["val"], r["seq"])
+        for r in ch.where(F.col("_change_type") == "update_postimage")
+        .collect()
+    )
+    live = sorted(
+        (r["id"], r["val"], r["seq"])
+        for r in t.read(spark).where(F.col("id") <= 4).collect()
+    )
+    assert len(post) == 5
+    assert post == live
+    pre = ch.where(F.col("_change_type") == "update_preimage")
+    assert sorted(r["seq"] for r in pre.collect()) == [0] * 5
+
+
 def test_stage_changes_multiset_multiplicity(spark, tmp_path):
     """_stage_changes' diff is a MULTISET diff (r14: one signed-count
     aggregate replacing the exceptAll pair): a row present 3x in old
