@@ -21,14 +21,23 @@ Layout produced under ``<table>/metadata/``:
     manifest-<v>.avro               one per commit that added files
     version-hint.text               current metadata version
 
-Mapping from the commit log:
+Mapping from the commit log, which the export replays ONCE through
+the table's own fold step (``table._fold_record``), so every snapshot
+shows exactly the state ``LakehouseTable`` reads at that version:
   - commit version  -> snapshot-id AND sequence-number (both monotone)
+  - a data file's sequence number is the table's ``file_seq`` for it,
+    so a file restored by rollback or folded into an expiry boundary
+    keeps its ORIGINAL sequence number (and its original manifest)
+    and pending merge-on-read deletes keep applying to exactly the
+    files the engine applies them to
   - append commit   -> new manifest with its added files (status=ADDED)
   - replace commit (overwrite/merge/compact) -> carried-over files keep
     their original manifest; genuinely new files get a new manifest;
     dropped manifests simply leave the manifest list (Iceberg semantics)
-  - parquet footer stats -> data_file lower/upper bounds in Iceberg
-    single-value binary serialization, keyed by field-id
+  - a manifest whose sequence number predates the oldest retained
+    snapshot (expiry) takes that snapshot's schema and field ids
+  - parquet footer stats (as folded) -> data_file lower/upper bounds in
+    Iceberg single-value binary serialization, keyed by field-id
 
 Everything here follows the public Apache Iceberg table spec
 (https://iceberg.apache.org/spec/); no Iceberg code is copied.
@@ -170,68 +179,6 @@ def iceberg_schema(
             }
         )
     return {"type": "struct", "schema-id": schema_id, "fields": fields}
-
-
-def _replay_field_ids(
-    snaps,
-) -> tuple[dict[int, dict[str, int]], dict[int, str], bool]:
-    """Per-snapshot stable top-level field ids AND the folded schema
-    json they belong to, replayed from the commit extras with the SAME
-    rules the table state fold uses (rename moves, drop retires,
-    append schemas union-evolve onto the fold so a stale-append race
-    cannot retire a moved id — shared via ``_folded_schema_json``,
-    ADVICE r9 #4; expire/rollback boundaries carry absolute maps).
-    Staged/branch commits don't advance the fold: their effective
-    schema is the last landed one (their files enter at publish, whose
-    commit carries the evolved schema itself — ADVICE r9 #2).
-    Returns ({version: {name: id}}, {version: folded_schema_json},
-    table_has_evolution_events)."""
-    from crest_spark.lakehouse.table import (
-        _fold_field_ids,
-        _folded_schema_json,
-    )
-
-    fid_by_version: dict[int, dict[str, int]] = {}
-    fjson_by_version: dict[int, str] = {}
-    ss: dict = {"field_ids": {}, "next_field_id": 1}
-    prev: str | None = None
-    has_events = False
-    for s in snaps:
-        ex = s.extra
-        if "schema_state" in ex:
-            st = ex["schema_state"]
-            ss["field_ids"] = dict(st.get("field_ids") or {})
-            ss["next_field_id"] = max(
-                int(st.get("next_field_id", 1)), int(ss["next_field_id"])
-            )
-            has_events = has_events or bool(st.get("events"))
-        if ex.get("rename_column") or ex.get("drop_column"):
-            has_events = True
-        if not (
-            ex.get("staged")
-            or ex.get("branch")
-            or ex.get("create_branch")
-            or ex.get("drop_branch")
-        ):
-            if s.schema_json != prev:
-                folded = _folded_schema_json(
-                    prev, s.schema_json, s.operation, ex
-                )
-                if folded != prev:
-                    _fold_field_ids(ss, ex, folded)
-                    # An add-only widening (merge_schema append, no
-                    # rename/drop extras) IS evolution to an external
-                    # reader: the data files carry no embedded field
-                    # ids, so files written before the add can only be
-                    # resolved through the name mapping. Any change to
-                    # the folded schema after the first version must
-                    # therefore emit schema.name-mapping.default.
-                    if prev is not None:
-                        has_events = True
-                prev = folded
-        fid_by_version[s.version] = dict(ss["field_ids"])
-        fjson_by_version[s.version] = prev if prev is not None else s.schema_json
-    return fid_by_version, fjson_by_version, has_events
 
 
 def _field_aliases(name: str, events: list[dict]) -> list[str]:
@@ -501,41 +448,54 @@ MANIFEST_FILE_SCHEMA = {
 
 
 # ------------------------------------------------------------------- exporter
-def _fold_add_versions(snaps: list[Snapshot]) -> dict[int, dict]:
-    """Walk the commit log once; for every version return
-    ``{version: {"live": {file: add_version}, "added": [files]}}``.
+def _replay_log(
+    table: LakehouseTable,
+) -> tuple[list[Snapshot], dict[int, dict], dict[str, dict], dict]:
+    """Walk the commit log ONCE, folding every record through the
+    table's own fold step (``_fold_record`` from ``_empty_state()`` —
+    the same code ``_state`` runs, so the export can never give a
+    record another meaning), and keep per version what the export
+    needs:
 
-    A replace commit (overwrite/merge/compact) lists the FULL live set;
-    carried-over files keep their original add version so their manifest
-    is reused, exactly how Iceberg rewrites reuse untouched manifests."""
-    out: dict[int, dict] = {}
-    live: dict[str, int] = {}
-    for s in snaps:
-        if s.extra.get("staged") or s.extra.get("branch"):
-            # write-audit-publish / branch refs: staged and branch files
-            # are invisible until their publish/fast-forward commit lists
-            # them as ordinary appended files — the exported snapshot for
-            # the stage/branch commit itself is an empty delta
-            out[s.version] = {"live": dict(live), "added": []}
-            continue
-        if s.operation in ("replace",):
-            new_live: dict[str, int] = {}
-            added = []
-            for f in s.files:
-                if f in live:
-                    new_live[f] = live[f]
-                else:
-                    new_live[f] = s.version
-                    added.append(f)
-            live = new_live
-        else:
-            added = []
-            for f in s.files:
-                if f not in live:
-                    live[f] = s.version
-                    added.append(f)
-        out[s.version] = {"live": dict(live), "added": added}
-    return out
+      - ``live``: ``{file: data sequence number}`` — the fold's
+        ``file_seq``, so a file restored by rollback or folded into an
+        expiry boundary keeps its original sequence number;
+      - ``added``: the live files whose sequence number is this version;
+      - ``deletes``: the pending merge-on-read delete entries;
+      - ``schema`` / ``field_ids`` / ``has_events``: the folded schema,
+        its stable ids and whether a rename/drop event is on record
+        (staged/branch commits don't advance them — their files enter
+        at publish, whose commit carries the evolved schema);
+      - ``num_rows``: the live row count (the summary's total-records).
+
+    Returns (snapshots, {version: view}, per-file stats as the fold
+    first saw them, head state)."""
+    from .table import _empty_state, _fold_record
+
+    state = _empty_state()
+    snaps: list[Snapshot] = []
+    views: dict[int, dict] = {}
+    file_stats: dict[str, dict] = {}
+    for v in table.versions():
+        with open(table._version_file(v)) as fh:
+            d = json.load(fh)
+        _fold_record(state, v, d)
+        snaps.append(Snapshot.from_record(v, d))
+        seq = state["file_seq"]
+        live = {f: int(seq.get(f, v)) for f in state["files"]}
+        for f in live:
+            if f not in file_stats:
+                file_stats[f] = state["stats"].get(f) or {}
+        views[v] = {
+            "live": live,
+            "added": [f for f, sv in live.items() if sv == v],
+            "deletes": list(state["deletes"]),
+            "schema": state["schema"] or d["schema"],
+            "field_ids": dict(state["field_ids"]),
+            "has_events": bool(state["schema_events"]),
+            "num_rows": state["num_rows"],
+        }
+    return snaps, views, file_stats, state
 
 
 def _file_footer(path: str) -> tuple[int, int]:
@@ -545,29 +505,12 @@ def _file_footer(path: str) -> tuple[int, int]:
     return pq.ParquetFile(path).metadata.num_rows, os.path.getsize(path)
 
 
-def _fold_pending_deletes(snaps: list[Snapshot]) -> dict[int, list[dict]]:
-    """Pending merge-on-read delete entries at every version: rowdelta
-    commits append entries; any replace folds them (its writers rewrote
-    or proved-disjoint every affected file) — the same fold `_state`
-    performs, re-derived here so each exported snapshot's manifest list
-    carries exactly the delete manifests live at that version."""
-    out: dict[int, list[dict]] = {}
-    pending: list[dict] = []
-    for s in snaps:
-        if s.operation == "replace":
-            pending = []
-        for e in s.extra.get("deletes") or []:
-            pending = pending + [{**e, "ver": s.version}]
-        out[s.version] = pending
-    return out
-
-
 _POS_DELETE_PATH_ID = 2147483546  # spec-reserved field ids for
 _POS_DELETE_POS_ID = 2147483545  # position-delete file columns
 
 
 def _materialize_position_deletes(
-    table: LakehouseTable, spark, head_version: int, meta_dir: str
+    table: LakehouseTable, spark, state: dict, meta_dir: str
 ) -> list[str]:
     """Fold EVERY delete entry pending at the head snapshot into Iceberg
     v2 POSITION-delete files (sorted ``file_path, pos`` parquet with the
@@ -581,12 +524,13 @@ def _materialize_position_deletes(
     O(dead rows) bytes written — strictly cheaper than the compact()
     round-trip it replaces, and the commit log itself is untouched.
 
-    Returns the written file paths (deterministically named under
+    ``state`` is the export's own fold at the head snapshot. Returns
+    the written file paths (deterministically named under
     ``meta_dir``; empty when nothing pending / nothing dead)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    state = table._state(upto=head_version)
+    head_version = state["version"]
     files = list(state["files"])
     if not files or not (state.get("deletes") or []):
         return []
@@ -660,7 +604,7 @@ def export_iceberg_metadata(
     is only needed when the head snapshot has pending merge-on-read
     deltas Iceberg's equality deletes cannot express — those are
     materialized into position-delete files at export time."""
-    snaps = table.snapshots()
+    snaps, views, file_stats, head_state = _replay_log(table)
     if not snaps:
         raise FileNotFoundError(
             f"table {table.namespace}.{table.name} does not exist"
@@ -681,10 +625,9 @@ def export_iceberg_metadata(
     # table exports without a compaction round-trip. Historical
     # unrepresentable snapshots are simply omitted from the export
     # window, like max_snapshots bounding.
-    folded_dels = _fold_pending_deletes(snaps)
 
     def _unrepresentable(s: Snapshot) -> str | None:
-        for e in folded_dels.get(s.version) or []:
+        for e in views[s.version]["deletes"]:
             if e.get("pred") is not None:
                 return "a merge-on-read PREDICATE delete"
             if e.get("seqcol"):
@@ -708,7 +651,7 @@ def export_iceberg_metadata(
     posdel_files: list[str] = []
     if head_bad:
         posdel_files = _materialize_position_deletes(
-            table, spark, snaps[-1].version, meta_dir
+            table, spark, head_state, meta_dir
         )
 
     # schema registry: distinct schemas in commit order -> schema-ids.
@@ -716,8 +659,15 @@ def export_iceberg_metadata(
     # (schema json, stable field-id assignment): the same column layout
     # before and after a drop/re-add is TWO schemas to Iceberg because
     # the re-added column carries a fresh id.
-    fid_by_version, fjson_by_version, has_evolution = _replay_field_ids(snaps)
-    _evo_events = table.schema_events() if has_evolution else []
+    # An add-only widening (merge_schema append, no rename/drop) IS
+    # evolution to an external reader too: the data files carry no
+    # embedded field ids, so files written before the add can only be
+    # resolved through the name mapping — any change of the folded
+    # schema across the log therefore emits it.
+    has_evolution = any(w["has_events"] for w in views.values()) or (
+        len({w["schema"] for w in views.values()}) > 1
+    )
+    _evo_events = list(head_state["schema_events"]) if has_evolution else []
 
     # The registry keys on the FOLDED schema + fold ids (never a
     # snapshot's raw recorded json): a staged widening's own json names
@@ -727,11 +677,10 @@ def export_iceberg_metadata(
     # fold has already resolved each version to the schema that was
     # actually LIVE there.
     def _skey(s: Snapshot) -> str:
+        w = views[s.version]
         if not has_evolution:
-            return fjson_by_version[s.version]
-        return fjson_by_version[s.version] + "|" + json.dumps(
-            sorted(fid_by_version[s.version].items())
-        )
+            return w["schema"]
+        return w["schema"] + "|" + json.dumps(sorted(w["field_ids"].items()))
 
     schema_ids: dict[str, int] = {}
     schema_src: dict[str, tuple[str, int]] = {}  # key -> (json, version)
@@ -739,19 +688,18 @@ def export_iceberg_metadata(
         k = _skey(s)
         if k not in schema_ids:
             schema_ids[k] = len(schema_ids)
-            schema_src[k] = (fjson_by_version[s.version], s.version)
+            schema_src[k] = (views[s.version]["schema"], s.version)
     iceberg_schemas = [
         iceberg_schema(
             schema_src[k][0],
             sid,
             top_ids=(
-                fid_by_version[schema_src[k][1]] if has_evolution else None
+                views[schema_src[k][1]]["field_ids"] if has_evolution else None
             ),
         )
         for k, sid in schema_ids.items()
     ]
 
-    folded = _fold_add_versions(snaps)
     snaps_by_v = {s.version: s for s in snaps}
     exported = [
         s
@@ -827,17 +775,6 @@ def export_iceberg_metadata(
     _PART_AVRO = {"int": "int", "long": "long", "string": "string"}
     part_col = cluster_cols[0] if cluster_cols else None
 
-    def _commit_stats(version: int) -> dict:
-        snap = snaps_by_v[version]
-        stats = snap.extra.get("stats") or {}
-        if not stats:
-            try:
-                with open(table._version_file(version)) as fh:
-                    stats = json.load(fh).get("stats", {})
-            except (OSError, json.JSONDecodeError):
-                stats = {}
-        return stats
-
     type_ok = {
         c: c in head_field_ids and head_field_ids[c][1] in _PART_AVRO
         for c in cluster_cols
@@ -848,9 +785,8 @@ def export_iceberg_metadata(
         for s in snaps:
             if (s.extra.get("cluster_by") or [None])[0] != part_col:
                 continue
-            stats = _commit_stats(s.version)
-            for f in folded[s.version]["added"]:
-                fstats = stats.get(f) or {}
+            for f in views[s.version]["added"]:
+                fstats = file_stats[f]
                 fnulls = fstats.get("__nulls__") or {}
                 for c in cluster_cols:
                     if not stats_ok[c]:
@@ -966,11 +902,17 @@ def export_iceberg_metadata(
         key = (add_version, live_subset)
         if key in manifest_info:
             return manifest_info[key]
-        snap = snaps_by_v[add_version]
+        # a sequence number older than the oldest retained snapshot
+        # (after expiry or rollback) takes that snapshot's schema and
+        # field ids; per-file stats always come from the fold
+        snap = snaps_by_v.get(add_version)
+        ref = snap or snaps[0]
         added = list(live_subset)
-        full = tuple(sorted(folded[add_version]["added"])) == live_subset
-        ids = _field_ids(snap)
-        stats = _commit_stats(add_version)
+        full = snap is not None and (
+            tuple(sorted(views[add_version]["added"])) == live_subset
+        )
+        ids = _field_ids(ref)
+        stats = file_stats
         # partition-spec eligibility per manifest: every file must have
         # a provable tuple for EVERY field of the spec — identity needs
         # min == max, truncate needs agreeing truncated endpoints, both
@@ -978,7 +920,7 @@ def export_iceberg_metadata(
         # spec 0 (bounds-only pruning).
         part_values: dict[str, dict] | None = None
         spec_id = 0
-        clustered_commit = part_spec is not None and (
+        clustered_commit = part_spec is not None and snap is not None and (
             (snap.extra.get("cluster_by") or [None])[0] == part_col
         )
 
@@ -1086,9 +1028,9 @@ def export_iceberg_metadata(
             entries,
             metadata={
                 "schema": json.dumps(
-                    iceberg_schemas[schema_ids[_skey(snap)]]
+                    iceberg_schemas[schema_ids[_skey(ref)]]
                 ),
-                "schema-id": str(schema_ids[_skey(snap)]),
+                "schema-id": str(schema_ids[_skey(ref)]),
                 "partition-spec": json.dumps(spec_fields),
                 "partition-spec-id": str(spec_id),
                 "format-version": "2",
@@ -1133,9 +1075,11 @@ def export_iceberg_metadata(
         key = (int(entry["seq"]), tuple(entry["paths"]))
         if key in delete_manifest_info:
             return delete_manifest_info[key]
-        ver = int(entry["ver"])
-        dseq = int(entry["seq"]) + 1  # spec: applies to data seq < this
-        snap = snaps_by_v[ver]
+        # the entry's commit version (it deletes against base ``seq``);
+        # an expired one takes the oldest retained snapshot's schema
+        ver = int(entry["seq"]) + 1
+        dseq = ver  # spec: applies to data seq < this
+        snap = snaps_by_v.get(ver) or snaps[0]
         ids = _field_ids(snap)
         try:
             eq_ids = [ids[k][0] for k in entry["keys"]]
@@ -1264,21 +1208,9 @@ def export_iceberg_metadata(
     snapshot_records = []
     snapshot_log = []
     prev_version = None
-    total_rows_at: dict[int, int] = {}
-    running = 0
-    for s in snaps:
-        if s.operation == "replace":
-            running = max(s.num_rows, 0)
-        elif s.operation != "create" and not (
-            s.extra.get("staged") or s.extra.get("branch")
-        ):
-            # staged/branch rows are not live until their landing
-            # commit, which carries the rows in its own num_rows
-            running += max(s.num_rows, 0)
-        total_rows_at[s.version] = running
     for s in snaps:
         in_export = s in exported
-        live = folded[s.version]["live"]
+        live = views[s.version]["live"]
         by_add: dict[int, list[str]] = {}
         for f, av in live.items():
             by_add.setdefault(av, []).append(f)
@@ -1318,9 +1250,9 @@ def export_iceberg_metadata(
                 pd_entries = [
                     (
                         _write_delete_manifest(entry),
-                        int(entry["ver"]) == s.version,
+                        int(entry["seq"]) + 1 == s.version,
                     )
-                    for entry in folded_dels.get(s.version) or []
+                    for entry in views[s.version]["deletes"]
                 ]
             for dinfo, is_new in pd_entries:
                 list_entries.append(
@@ -1368,7 +1300,7 @@ def export_iceberg_metadata(
                 "summary": {
                     "operation": op,
                     "total-data-files": str(len(live)),
-                    "total-records": str(total_rows_at[s.version]),
+                    "total-records": str(views[s.version]["num_rows"]),
                 },
                 "schema-id": schema_ids[_skey(s)],
             }
@@ -1468,7 +1400,7 @@ def export_iceberg_metadata(
                 {
                     "schema.name-mapping.default": json.dumps(
                         _name_mapping(
-                            fid_by_version[head.version], _evo_events
+                            views[head.version]["field_ids"], _evo_events
                         )
                     ),
                     "crest.schema-events": json.dumps(_evo_events),

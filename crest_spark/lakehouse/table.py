@@ -47,6 +47,14 @@ every state load reads one checkpoint + the log tail after it — O(tail)
 instead of O(all commits), the same mechanism as Delta's
 ``_last_checkpoint``. Row counts come from parquet footers (metadata
 only), never a second data scan.
+
+One fold gives a log record its meaning: ``_fold_record`` advances the
+state dict by one commit (starting from ``_empty_state()`` or a
+checkpoint). ``_state`` runs it over the log tail; ``expire_snapshots``
+reads the expired prefix's files, rows, deletes, file sequences,
+idempotence map, constraints, schema evolution and sorted runs from
+``_state`` instead of re-folding them; and the Iceberg export
+(``iceberg_export.py``) replays the whole log through the same step.
 """
 
 from __future__ import annotations
@@ -502,9 +510,10 @@ def _fold_runs_groups(
     OF this commit — callers fold the commit's schema first) and
     coalesce adjacent small groups (r14: micro-append layouts).
 
-    SHARED by ``_state`` and ``expire_snapshots`` (review r13): the
-    expiry prefix fold must track the live fold exactly, so there is
-    one copy of the rules."""
+    Called only from ``_fold_record``: ``expire_snapshots`` no longer
+    shares this step with a fold of its own — it reads the expired
+    prefix's runs and groups from ``_state``, so expiry cannot diverge
+    from the live fold."""
     if "cluster_run_state" in extra:
         runs = [dict(r) for r in extra["cluster_run_state"]]
     if "group_state" in extra:
@@ -978,9 +987,9 @@ def vintage_scan_groups(
 def _folded_schema_json(
     prev: str | None, schema_json: str, operation: str | None, extra: dict
 ) -> str:
-    """The schema the fold records for one commit — SHARED by the table
-    state fold and the Iceberg export's field-id replay so both resolve
-    the append-vs-rename race identically (ADVICE r9 #4). Appends may
+    """The schema the fold records for one commit (``_fold_record``,
+    which the Iceberg export replays too, so both resolve the
+    append-vs-rename race identically — ADVICE r9 #4). Appends may
     only WIDEN the schema (new nullable columns, type promotion) —
     union-evolve instead of trusting the commit's recorded json, so an
     append whose writer read the schema BEFORE a concurrent rename/drop
@@ -1002,6 +1011,238 @@ def _folded_schema_json(
         StructType.fromJson(json.loads(schema_json)),
     )
     return json.dumps(union.jsonValue())
+
+
+def _empty_state() -> dict:
+    """The folded state of a table before its first commit — the
+    starting point of every from-scratch fold (``_state`` without a
+    checkpoint, the Iceberg export's replay)."""
+    return {
+        "version": 0,
+        "files": [],
+        "stats": {},
+        "schema": None,
+        "num_rows": 0,
+        "committed": {},
+        "file_seq": {},
+        "deletes": [],
+        "staged": {},
+        "branches": {},
+        "constraints": {},
+        # in-place schema evolution (rename/drop): the ordered event
+        # log that lets readers resolve OLD files' physical column
+        # names to current names by file vintage, plus the
+        # Iceberg-style stable field-id assignment (ids move with
+        # renames, retire with drops, never get reused)
+        "schema_events": [],
+        "field_ids": {},
+        "next_field_id": 1,
+        # sorted-run bookkeeping for tail-proportional compaction
+        # (r13): each entry is {"mode", "cols", "files", "rows", "v"}
+        # — the files a clustered/packed compaction (or index build)
+        # wrote in one rewrite. compact(tail_only=True) rewrites only
+        # files OUTSIDE matching runs; the fold below keeps a run's
+        # file list intersected with the live set and drops empties.
+        "cluster_runs": [],
+        # manifest groups (r13): per-commit range-summarized chunks
+        # of file stats (_group_stats) — pruned_files admits groups
+        # before files. Same fold rules as cluster_runs.
+        "groups": [],
+    }
+
+
+def _fold_record(state: dict, v: int, d: dict) -> None:
+    """Fold log record ``d`` (version ``v``) into ``state`` in place.
+
+    The ONE interpretation of a commit record: ``_state`` runs it over
+    the log tail after its checkpoint, ``expire_snapshots`` reads the
+    expired prefix through ``_state``, and the Iceberg export replays
+    the whole log through it — so a new extra key or a fix here
+    reaches reads, expiry and the export together."""
+    extra = d.get("extra", {})
+    # table-level CHECK constraints: absolute state first (rollback
+    # / expire-boundary records carry the full folded map), then
+    # this commit's own set/drop. Metadata-only commits fall
+    # through to the generic fold (they carry no files).
+    if "constraint_state" in extra:
+        state["constraints"] = dict(extra["constraint_state"])
+    # absolute schema-evolution state (rollback / expire fold
+    # boundaries): replaces the running event log + field ids;
+    # the commit's OWN rename/drop extras still apply after it.
+    # next_field_id only ratchets UP — ids are never reused,
+    # even across a rollback that retires a column.
+    if "schema_state" in extra:
+        ss = extra["schema_state"]
+        state["schema_events"] = list(ss.get("events") or [])
+        state["field_ids"] = dict(ss.get("field_ids") or {})
+        state["next_field_id"] = max(
+            int(ss.get("next_field_id", 1)),
+            int(state.get("next_field_id", 1)),
+        )
+    if extra.get("set_constraint"):
+        state.setdefault("constraints", {}).update(
+            extra["set_constraint"]
+        )
+    if extra.get("drop_constraint"):
+        state.setdefault("constraints", {}).pop(
+            extra["drop_constraint"], None
+        )
+    if extra.get("create_branch"):
+        # branch ref creation: pure metadata — records the base
+        # version the branch forked from; no files, no schema
+        # change
+        state.setdefault("branches", {})[extra["create_branch"]] = {
+            "base": int(extra.get("branch_base", v)),
+            "entries": {},
+        }
+        state["version"] = v
+        return
+    if extra.get("drop_branch"):
+        state.setdefault("branches", {}).pop(
+            extra["drop_branch"], None
+        )
+        state["version"] = v
+        return
+    if extra.get("branch"):
+        # branch member commit: INVISIBLE to main (like staged),
+        # recorded under its branch; batch-idempotence folds now
+        # so a replayed branch micro-batch stays a no-op
+        br = state.setdefault("branches", {}).get(extra["branch"])
+        if br is not None:
+            br["entries"][str(v)] = {
+                "files": list(d["files"]),
+                "stats": dict(d.get("stats", {})),
+                "num_rows": max(d.get("num_rows", 0), 0),
+                "schema": d["schema"],
+            }
+        if (
+            d.get("writer_id") is not None
+            and d.get("batch_id") is not None
+        ):
+            state["committed"].setdefault(d["writer_id"], []).append(
+                d["batch_id"]
+            )
+        state["version"] = v
+        return
+    if extra.get("staged"):
+        # write-audit-publish: a staged append's files are
+        # INVISIBLE to every normal scan until a publish commit
+        # makes them live (and file_seq's them at publish time).
+        # Only the batch-idempotence map and the version counter
+        # fold now — a replayed staged micro-batch must stay a
+        # no-op even before publication.
+        state.setdefault("staged", {})[str(v)] = {
+            "files": list(d["files"]),
+            "stats": dict(d.get("stats", {})),
+            "num_rows": max(d.get("num_rows", 0), 0),
+            "schema": d["schema"],
+        }
+        if (
+            d.get("writer_id") is not None
+            and d.get("batch_id") is not None
+        ):
+            state["committed"].setdefault(d["writer_id"], []).append(
+                d["batch_id"]
+            )
+        state["version"] = v
+        return
+    if d.get("operation") == "replace":
+        state["files"] = list(d["files"])
+        state["stats"] = dict(d.get("stats", {}))
+        state["num_rows"] = max(d.get("num_rows", 0), 0)
+        # a replace describes the LIVE file set only; pending
+        # staged commits ride across it untouched — unless it is
+        # a rollback, which re-records the target snapshot's
+        # pending-staged state explicitly
+        if "staged_state" in extra:
+            state["staged"] = dict(extra["staged_state"])
+        if "branch_state" in extra:
+            state["branches"] = dict(extra["branch_state"])
+        # a replace materializes every pending MoR delete (its
+        # writers rewrite affected files or prove them disjoint)
+        # — EXCEPT a rollback, which explicitly re-records the
+        # target snapshot's pending deletes and file sequences
+        # so restored files stay inside their deltas' scope
+        state["deletes"] = list(extra.get("deletes") or [])
+        prev_seq = state.get("file_seq") or {}
+        explicit = extra.get("file_seq", {})
+        state["file_seq"] = {
+            f: int(explicit.get(f, prev_seq.get(f, v)))
+            for f in state["files"]
+        }
+    else:
+        state["files"] = state["files"] + list(d["files"])
+        state.setdefault("stats", {}).update(d.get("stats", {}))
+        state["num_rows"] += max(d.get("num_rows", 0), 0)
+        fseq = state.setdefault("file_seq", {})
+        explicit = extra.get("file_seq", {})
+        for f in d["files"]:
+            fseq[f] = int(explicit.get(f, v))
+        # rowdelta commits (and expire fold boundaries) carry
+        # merge-on-read delete entries; each entry already holds
+        # its own base "seq"
+        for entry in extra.get("deletes", []) or []:
+            state.setdefault("deletes", []).append(entry)
+        # a publish/discard commit resolves pending staged entries
+        for pv in extra.get("publish_of", []) or []:
+            state.get("staged", {}).pop(str(pv), None)
+        for pv in extra.get("discard_of", []) or []:
+            state.get("staged", {}).pop(str(pv), None)
+        # a fast-forward commit resolves its branch: the files
+        # it lists are now live on main
+        if extra.get("publish_branch"):
+            state.get("branches", {}).pop(
+                extra["publish_branch"], None
+            )
+    if extra.get("rename_column"):
+        state.setdefault("schema_events", []).append(
+            {
+                "op": "rename",
+                "from": extra["rename_column"]["from"],
+                "to": extra["rename_column"]["to"],
+                "v": v,
+            }
+        )
+    if extra.get("drop_column"):
+        state.setdefault("schema_events", []).append(
+            {"op": "drop", "name": extra["drop_column"], "v": v}
+        )
+    if d["schema"] != state["schema"]:
+        # union-evolve appends / keep raw for replaces and
+        # evolution commits — rationale and the append-vs-rename
+        # race story live on the shared _folded_schema_json
+        folded_schema = _folded_schema_json(
+            state["schema"], d["schema"], d.get("operation"), extra
+        )
+        if folded_schema != state["schema"]:
+            _fold_field_ids(state, extra, folded_schema)
+        state["schema"] = folded_schema
+    # sorted-run + manifest-group fold (r13) — shared step, see
+    # _fold_runs_groups. AFTER the schema fold (r14): new group
+    # records translate to field ids, and a merge_schema append
+    # that first introduces a column must have its id assigned
+    # before its own group summary folds.
+    state["cluster_runs"], state["groups"] = _fold_runs_groups(
+        state.get("cluster_runs") or [],
+        state.get("groups") or [],
+        d.get("operation"),
+        extra,
+        state["files"],
+        d.get("group_stats") or [],
+        v,
+        state.get("field_ids") or {},
+    )
+    if d.get("writer_id") is not None and d.get("batch_id") is not None:
+        state["committed"].setdefault(d["writer_id"], []).append(
+            d["batch_id"]
+        )
+    # a fold-boundary commit written by expire_snapshots carries the
+    # expired prefix's idempotence map — restore it so replayed
+    # batch ids stay no-ops after history expiration
+    for w, bids in d.get("extra", {}).get("committed", {}).items():
+        cur = state["committed"].setdefault(w, [])
+        cur.extend(b for b in bids if b not in cur)
+    state["version"] = v
 
 
 def _merge_committed(
@@ -1093,6 +1334,21 @@ class Snapshot:
     # manifest groups this commit recorded over its new files (r13)
     group_stats: list = field(default_factory=list)
 
+    @classmethod
+    def from_record(cls, version: int, d: dict) -> "Snapshot":
+        return cls(
+            version=version,
+            files=d["files"],
+            schema_json=d["schema"],
+            operation=d.get("operation", "append"),
+            commit_ts=d.get("commit_ts", 0.0),
+            num_rows=d.get("num_rows", -1),
+            writer_id=d.get("writer_id"),
+            batch_id=d.get("batch_id"),
+            extra=d.get("extra", {}),
+            group_stats=d.get("group_stats", []),
+        )
+
 
 class LakehouseTable:
     """Handle to one commit-log table."""
@@ -1134,21 +1390,7 @@ class LakehouseTable:
             if upto is not None and v > upto:
                 break
             with open(self._version_file(v)) as fh:
-                d = json.load(fh)
-            snaps.append(
-                Snapshot(
-                    version=v,
-                    files=d["files"],
-                    schema_json=d["schema"],
-                    operation=d.get("operation", "append"),
-                    commit_ts=d.get("commit_ts", 0.0),
-                    num_rows=d.get("num_rows", -1),
-                    writer_id=d.get("writer_id"),
-                    batch_id=d.get("batch_id"),
-                    extra=d.get("extra", {}),
-                    group_stats=d.get("group_stats", []),
-                )
-            )
+                snaps.append(Snapshot.from_record(v, json.load(fh)))
         return snaps
 
     def version(self) -> int:
@@ -1244,38 +1486,7 @@ class LakehouseTable:
         hit = cache.get(key)
         if hit is not None:
             return hit
-        state = {
-            "version": 0,
-            "files": [],
-            "stats": {},
-            "schema": None,
-            "num_rows": 0,
-            "committed": {},
-            "file_seq": {},
-            "deletes": [],
-            "staged": {},
-            "branches": {},
-            "constraints": {},
-            # in-place schema evolution (rename/drop): the ordered event
-            # log that lets readers resolve OLD files' physical column
-            # names to current names by file vintage, plus the
-            # Iceberg-style stable field-id assignment (ids move with
-            # renames, retire with drops, never get reused)
-            "schema_events": [],
-            "field_ids": {},
-            "next_field_id": 1,
-            # sorted-run bookkeeping for tail-proportional compaction
-            # (r13): each entry is {"mode", "cols", "files", "rows", "v"}
-            # — the files a clustered/packed compaction (or index build)
-            # wrote in one rewrite. compact(tail_only=True) rewrites only
-            # files OUTSIDE matching runs; the fold below keeps a run's
-            # file list intersected with the live set and drops empties.
-            "cluster_runs": [],
-            # manifest groups (r13): per-commit range-summarized chunks
-            # of file stats (_group_stats) — pruned_files admits groups
-            # before files. Same fold rules as cluster_runs.
-            "groups": [],
-        }
+        state = _empty_state()
         start_after = 0
         for cv in reversed(self._checkpoint_versions()):
             if cv <= versions[-1] and cv >= (versions[0] if versions else 0):
@@ -1312,190 +1523,7 @@ class LakehouseTable:
                 continue
             with open(self._version_file(v)) as fh:
                 d = json.load(fh)
-            extra = d.get("extra", {})
-            # table-level CHECK constraints: absolute state first (rollback
-            # / expire-boundary records carry the full folded map), then
-            # this commit's own set/drop. Metadata-only commits fall
-            # through to the generic fold (they carry no files).
-            if "constraint_state" in extra:
-                state["constraints"] = dict(extra["constraint_state"])
-            # absolute schema-evolution state (rollback / expire fold
-            # boundaries): replaces the running event log + field ids;
-            # the commit's OWN rename/drop extras still apply after it.
-            # next_field_id only ratchets UP — ids are never reused,
-            # even across a rollback that retires a column.
-            if "schema_state" in extra:
-                ss = extra["schema_state"]
-                state["schema_events"] = list(ss.get("events") or [])
-                state["field_ids"] = dict(ss.get("field_ids") or {})
-                state["next_field_id"] = max(
-                    int(ss.get("next_field_id", 1)),
-                    int(state.get("next_field_id", 1)),
-                )
-            if extra.get("set_constraint"):
-                state.setdefault("constraints", {}).update(
-                    extra["set_constraint"]
-                )
-            if extra.get("drop_constraint"):
-                state.setdefault("constraints", {}).pop(
-                    extra["drop_constraint"], None
-                )
-            if extra.get("create_branch"):
-                # branch ref creation: pure metadata — records the base
-                # version the branch forked from; no files, no schema
-                # change
-                state.setdefault("branches", {})[extra["create_branch"]] = {
-                    "base": int(extra.get("branch_base", v)),
-                    "entries": {},
-                }
-                state["version"] = v
-                continue
-            if extra.get("drop_branch"):
-                state.setdefault("branches", {}).pop(
-                    extra["drop_branch"], None
-                )
-                state["version"] = v
-                continue
-            if extra.get("branch"):
-                # branch member commit: INVISIBLE to main (like staged),
-                # recorded under its branch; batch-idempotence folds now
-                # so a replayed branch micro-batch stays a no-op
-                br = state.setdefault("branches", {}).get(extra["branch"])
-                if br is not None:
-                    br["entries"][str(v)] = {
-                        "files": list(d["files"]),
-                        "stats": dict(d.get("stats", {})),
-                        "num_rows": max(d.get("num_rows", 0), 0),
-                        "schema": d["schema"],
-                    }
-                if (
-                    d.get("writer_id") is not None
-                    and d.get("batch_id") is not None
-                ):
-                    state["committed"].setdefault(d["writer_id"], []).append(
-                        d["batch_id"]
-                    )
-                state["version"] = v
-                continue
-            if extra.get("staged"):
-                # write-audit-publish: a staged append's files are
-                # INVISIBLE to every normal scan until a publish commit
-                # makes them live (and file_seq's them at publish time).
-                # Only the batch-idempotence map and the version counter
-                # fold now — a replayed staged micro-batch must stay a
-                # no-op even before publication.
-                state.setdefault("staged", {})[str(v)] = {
-                    "files": list(d["files"]),
-                    "stats": dict(d.get("stats", {})),
-                    "num_rows": max(d.get("num_rows", 0), 0),
-                    "schema": d["schema"],
-                }
-                if (
-                    d.get("writer_id") is not None
-                    and d.get("batch_id") is not None
-                ):
-                    state["committed"].setdefault(d["writer_id"], []).append(
-                        d["batch_id"]
-                    )
-                state["version"] = v
-                continue
-            if d.get("operation") == "replace":
-                state["files"] = list(d["files"])
-                state["stats"] = dict(d.get("stats", {}))
-                state["num_rows"] = max(d.get("num_rows", 0), 0)
-                # a replace describes the LIVE file set only; pending
-                # staged commits ride across it untouched — unless it is
-                # a rollback, which re-records the target snapshot's
-                # pending-staged state explicitly
-                if "staged_state" in extra:
-                    state["staged"] = dict(extra["staged_state"])
-                if "branch_state" in extra:
-                    state["branches"] = dict(extra["branch_state"])
-                # a replace materializes every pending MoR delete (its
-                # writers rewrite affected files or prove them disjoint)
-                # — EXCEPT a rollback, which explicitly re-records the
-                # target snapshot's pending deletes and file sequences
-                # so restored files stay inside their deltas' scope
-                state["deletes"] = list(extra.get("deletes") or [])
-                prev_seq = state.get("file_seq") or {}
-                explicit = extra.get("file_seq", {})
-                state["file_seq"] = {
-                    f: int(explicit.get(f, prev_seq.get(f, v)))
-                    for f in state["files"]
-                }
-            else:
-                state["files"] = state["files"] + list(d["files"])
-                state.setdefault("stats", {}).update(d.get("stats", {}))
-                state["num_rows"] += max(d.get("num_rows", 0), 0)
-                fseq = state.setdefault("file_seq", {})
-                explicit = extra.get("file_seq", {})
-                for f in d["files"]:
-                    fseq[f] = int(explicit.get(f, v))
-                # rowdelta commits (and expire fold boundaries) carry
-                # merge-on-read delete entries; each entry already holds
-                # its own base "seq"
-                for entry in extra.get("deletes", []) or []:
-                    state.setdefault("deletes", []).append(entry)
-                # a publish/discard commit resolves pending staged entries
-                for pv in extra.get("publish_of", []) or []:
-                    state.get("staged", {}).pop(str(pv), None)
-                for pv in extra.get("discard_of", []) or []:
-                    state.get("staged", {}).pop(str(pv), None)
-                # a fast-forward commit resolves its branch: the files
-                # it lists are now live on main
-                if extra.get("publish_branch"):
-                    state.get("branches", {}).pop(
-                        extra["publish_branch"], None
-                    )
-            if extra.get("rename_column"):
-                state.setdefault("schema_events", []).append(
-                    {
-                        "op": "rename",
-                        "from": extra["rename_column"]["from"],
-                        "to": extra["rename_column"]["to"],
-                        "v": v,
-                    }
-                )
-            if extra.get("drop_column"):
-                state.setdefault("schema_events", []).append(
-                    {"op": "drop", "name": extra["drop_column"], "v": v}
-                )
-            if d["schema"] != state["schema"]:
-                # union-evolve appends / keep raw for replaces and
-                # evolution commits — rationale and the append-vs-rename
-                # race story live on the shared _folded_schema_json
-                folded_schema = _folded_schema_json(
-                    state["schema"], d["schema"], d.get("operation"), extra
-                )
-                if folded_schema != state["schema"]:
-                    _fold_field_ids(state, extra, folded_schema)
-                state["schema"] = folded_schema
-            # sorted-run + manifest-group fold (r13) — shared step, see
-            # _fold_runs_groups. AFTER the schema fold (r14): new group
-            # records translate to field ids, and a merge_schema append
-            # that first introduces a column must have its id assigned
-            # before its own group summary folds.
-            state["cluster_runs"], state["groups"] = _fold_runs_groups(
-                state.get("cluster_runs") or [],
-                state.get("groups") or [],
-                d.get("operation"),
-                extra,
-                state["files"],
-                d.get("group_stats") or [],
-                v,
-                state.get("field_ids") or {},
-            )
-            if d.get("writer_id") is not None and d.get("batch_id") is not None:
-                state["committed"].setdefault(d["writer_id"], []).append(
-                    d["batch_id"]
-                )
-            # a fold-boundary commit written by expire_snapshots carries the
-            # expired prefix's idempotence map — restore it so replayed
-            # batch ids stay no-ops after history expiration
-            for w, bids in d.get("extra", {}).get("committed", {}).items():
-                cur = state["committed"].setdefault(w, [])
-                cur.extend(b for b in bids if b not in cur)
-            state["version"] = v
+            _fold_record(state, v, d)
         while len(cache) >= self._STATE_CACHE_SLOTS:
             cache.pop(next(iter(cache)))  # FIFO evict
         cache[key] = state
@@ -4379,65 +4407,38 @@ class LakehouseTable:
             cutoff = versions[idx - 1]
         if cutoff <= versions[0] and _boundary_unsafe(by_version[versions[0]]):
             return []
-        live_files: set[str] = set()
-        # files referenced by the retained suffix (respecting replaces)
-        for v in versions:
-            s = by_version[v]
-            if s.operation == "replace":
-                live_files.clear()
-            live_files.update(s.files)
-            live_files.update(
-                p
-                for e in (s.extra.get("deletes") or [])
-                for p in e.get("paths", [])
-            )
-        expired = []
-        removable: set[str] = set()
-        # fold the expired prefix into a checkpoint-style base commit;
-        # rows fold WITH replace semantics (a replace supersedes prior
-        # rows — summing across it would overcount), while the
-        # idempotence map folds across replaces (batch-id memory must
-        # survive rewrites or replayed batches double-commit)
-        base_files: list[str] = []
-        base_rows = 0
-        folded_committed: dict[str, list[int]] = {}
-        # merge-on-read state folded across the expired prefix: delete
-        # entries (cleared by a replace, which materializes them) and the
-        # original per-file add versions — losing a file's seq would make
-        # later deletes wrongly apply to rows re-inserted after them
-        folded_deletes: list[dict] = []
-        folded_file_seq: dict[str, int] = {}
-        base_delete_paths: set[str] = set()
-        # CHECK constraints accumulated over the expired prefix — losing
-        # a set_constraint commit to expiry must not un-gate the table
-        folded_constraints: dict[str, str] = {}
-        # schema-evolution state over the expired prefix: losing a
-        # rename event would make retained old-vintage files read NULL
-        # under the new name; losing the field-id map would re-number
-        # ids in the Iceberg export
-        folded_schema_events: list[dict] = []
-        sstate: dict = {"field_ids": {}, "next_field_id": 1}
-        prev_schema_json: str | None = None
-        # STICKY extras: a commit may list extra keys under
+        expired = [v for v in versions if v < cutoff]
+        if not expired:
+            return []
+        # the expired prefix's folded state, read through the one fold
+        # (_fold_record via _state): files, rows, pending deletes, file
+        # sequences, idempotence map, constraints, schema evolution and
+        # run/group membership all ride into the boundary record below
+        prev = self._state(upto=cutoff - 1)
+        # files the head still references (live data, pending deletes)
+        # are never removed, whatever the prefix walk collects
+        head = self._state()
+        live_files = set(head["files"]) | {
+            p for e in head["deletes"] for p in e.get("paths", [])
+        }
+        # The walk over the expired records keeps two jobs the fold does
+        # not do. STICKY extras: a commit may list extra keys under
         # 'sticky_extra' that must SURVIVE expiry even when the commit
         # itself is folded away — e.g. the IVF/IVF-PQ index tables stamp
         # their centroids/codebooks on the build commit only; expiring
         # that commit without carrying the metadata forward would leave
         # a readable index that can never be probed again. Latest
         # occurrence wins; the boundary commit's own value (if any)
-        # wins over the folded one.
+        # wins over the folded one. REMOVABLE files: every data file,
+        # delete file and staged change set an expired commit listed
+        # (a RESOLVED staged/branch commit's files — pending/live ones
+        # clamped the cutoff above — either ride in their landing
+        # commit's own file list or are dead, and are not collected
+        # here); the prefix's live files and pending deletes are taken
+        # back out below unless the cutoff supersedes them.
         folded_sticky: dict = {}
-        # sorted-run membership folded over the expired prefix: losing a
-        # run record to expiry would degrade its files to "unclustered
-        # tail" and trigger one needless full re-cluster on the next
-        # tail compaction (same carry rationale as drift accounting)
-        folded_runs: list[dict] = []
-        # manifest groups folded the same way: losing them only slows
-        # admission back to the flat walk, but the carry is cheap
-        folded_groups: list[dict] = []
-        for v in versions:
-            if v >= cutoff:
-                break
+        removable: set[str] = set()
+        for v in expired:
             s = by_version[v]
             for k in s.extra.get("sticky_extra") or []:
                 if k in s.extra:
@@ -4460,114 +4461,17 @@ class LakehouseTable:
                             "_origin_num_rows": max(int(s.num_rows or 0), 0),
                         }
                     folded_sticky[k] = val
-            if "constraint_state" in s.extra:
-                folded_constraints = dict(s.extra["constraint_state"])
-            if "schema_state" in s.extra:
-                ss = s.extra["schema_state"]
-                folded_schema_events = list(ss.get("events") or [])
-                sstate["field_ids"] = dict(ss.get("field_ids") or {})
-                sstate["next_field_id"] = max(
-                    int(ss.get("next_field_id", 1)),
-                    int(sstate["next_field_id"]),
+            if not _boundary_unsafe(s):
+                removable.update(s.files)
+                removable.update(
+                    p
+                    for e in (s.extra.get("deletes") or [])
+                    for p in e.get("paths", [])
                 )
-            if not (
-                s.extra.get("staged")
-                or s.extra.get("branch")
-                or s.extra.get("create_branch")
-                or s.extra.get("drop_branch")
-            ):
-                if s.extra.get("rename_column"):
-                    folded_schema_events.append(
-                        {
-                            "op": "rename",
-                            "from": s.extra["rename_column"]["from"],
-                            "to": s.extra["rename_column"]["to"],
-                            "v": v,
-                        }
-                    )
-                if s.extra.get("drop_column"):
-                    folded_schema_events.append(
-                        {"op": "drop", "name": s.extra["drop_column"], "v": v}
-                    )
-                if s.schema_json != prev_schema_json:
-                    _fold_field_ids(sstate, s.extra, s.schema_json)
-                    prev_schema_json = s.schema_json
-            if s.extra.get("set_constraint"):
-                folded_constraints.update(s.extra["set_constraint"])
-            if s.extra.get("drop_constraint"):
-                folded_constraints.pop(s.extra["drop_constraint"], None)
-            if s.extra.get("staged") or s.extra.get("branch") or (
-                s.extra.get("create_branch") or s.extra.get("drop_branch")
-            ):
-                # a RESOLVED staged/branch commit (pending/live ones
-                # clamped the cutoff above): if published/fast-forwarded,
-                # its files ride in the landing commit's own file list;
-                # if discarded/dropped, they are dead — either way they
-                # do not fold into the live prefix. Batch-id memory
-                # still folds (below) so a replayed batch stays a no-op
-                # after expiry.
-                if s.writer_id is not None and s.batch_id is not None:
-                    folded_committed.setdefault(s.writer_id, []).append(
-                        s.batch_id
-                    )
-                expired.append(v)
-                continue
-            if s.operation == "replace":
-                # a rollback replace re-records the target's pending
-                # deletes + file sequences; fold them like _state does
-                new_deletes = [dict(e) for e in s.extra.get("deletes") or []]
-                new_delete_paths = {
-                    p for e in new_deletes for p in e.get("paths", [])
-                }
-                removable.update(set(base_files) - set(s.files))
-                removable.update(base_delete_paths - new_delete_paths)
-                base_files = list(s.files)
-                base_rows = max(s.num_rows, 0)
-                folded_deletes = new_deletes
-                base_delete_paths = new_delete_paths
-                explicit = s.extra.get("file_seq", {})
-                prev = folded_file_seq
-                folded_file_seq = {
-                    f: int(explicit.get(f, prev.get(f, v)))
-                    for f in s.files
-                }
-            else:
-                base_files.extend(s.files)
-                base_rows += max(s.num_rows, 0)
-                explicit = s.extra.get("file_seq", {})
-                for f in s.files:
-                    folded_file_seq.setdefault(f, int(explicit.get(f, v)))
-                for e in s.extra.get("deletes") or []:
-                    folded_deletes.append(e)
-                    base_delete_paths.update(e.get("paths", []))
-            # run/group membership folds with the SAME shared step as
-            # _state (_fold_runs_groups) so expiry can never diverge
-            folded_runs, folded_groups = _fold_runs_groups(
-                folded_runs,
-                folded_groups,
-                s.operation,
-                s.extra,
-                s.files,
-                s.group_stats or [],
-                v,
-                sstate.get("field_ids") or {},
-            )
-            # an expired commit's staged change set lies below the fold
-            # boundary, where incremental reads can no longer reach it
-            for cf in s.extra.get("change_files", []) or []:
-                removable.add(cf)
-            if s.writer_id is not None and s.batch_id is not None:
-                folded_committed.setdefault(s.writer_id, []).append(s.batch_id)
-            # an expired commit may itself be a previous fold boundary
-            # carrying an already-folded idempotence map — merge it, or
-            # batch-id memory older than one expiration is lost and a
-            # replayed batch double-commits
-            for w, bids in s.extra.get("committed", {}).items():
-                cur = folded_committed.setdefault(w, [])
-                cur.extend(b for b in bids if b not in cur)
-            expired.append(v)
-        if not expired:
-            return []
+                # an expired commit's staged change set lies below the
+                # fold boundary, where incremental reads can no longer
+                # reach it
+                removable.update(s.extra.get("change_files") or [])
         # rewrite the oldest retained boundary: merge expired prefix into
         # one synthetic commit so the retained log still reads correctly
         first_keep = by_version[cutoff]
@@ -4575,21 +4479,23 @@ class LakehouseTable:
             # the cutoff itself supersedes the whole expired prefix
             # (including any pending MoR deletes — the replace that wrote
             # it materialized or disproved them)
-            removable.update(base_files)
-            removable.update(base_delete_paths)
             merged_files = list(first_keep.files)
-            folded_deletes = []
-            folded_file_seq = {}
+            prefix_deletes: list[dict] = []
+            prefix_seq: dict[str, int] = {}
+            num_rows = first_keep.num_rows
         else:
-            merged_files = base_files + list(first_keep.files)
+            merged_files = list(prev["files"]) + list(first_keep.files)
+            prefix_deletes = list(prev["deletes"])
+            prefix_seq = dict(prev["file_seq"])
+            num_rows = prev["num_rows"] + max(first_keep.num_rows, 0)
+            removable -= set(prev["files"])
+            removable -= {p for e in prefix_deletes for p in e.get("paths", [])}
         record = {
             "operation": "replace" if first_keep.operation == "replace" else "append",
             "files": merged_files,
             "schema": first_keep.schema_json,
             "commit_ts": first_keep.commit_ts,
-            "num_rows": base_rows + max(first_keep.num_rows, 0)
-            if first_keep.operation != "replace"
-            else first_keep.num_rows,
+            "num_rows": num_rows,
             "writer_id": first_keep.writer_id,
             "batch_id": first_keep.batch_id,
             # recompute pruning stats for the merged prefix (metadata-only;
@@ -4635,9 +4541,9 @@ class LakehouseTable:
                 # apply AFTER constraint_state in the state fold, so
                 # ordering is preserved.
                 **(
-                    {"constraint_state": folded_constraints}
+                    {"constraint_state": dict(prev["constraints"])}
                     if (
-                        folded_constraints
+                        prev["constraints"]
                         and "constraint_state" not in first_keep.extra
                     )
                     else {}
@@ -4646,9 +4552,9 @@ class LakehouseTable:
                 # as above); the cutoff's own cluster_run extra still
                 # appends AFTER the absolute state in the fold
                 **(
-                    {"cluster_run_state": folded_runs}
+                    {"cluster_run_state": list(prev["cluster_runs"])}
                     if (
-                        folded_runs
+                        prev["cluster_runs"]
                         and "cluster_run_state" not in first_keep.extra
                     )
                     else {}
@@ -4656,9 +4562,9 @@ class LakehouseTable:
                 # prefix-folded manifest groups (same rule); the
                 # cutoff's own group_stats record still appends after
                 **(
-                    {"group_state": folded_groups}
+                    {"group_state": list(prev["groups"])}
                     if (
-                        folded_groups
+                        prev["groups"]
                         and "group_state" not in first_keep.extra
                     )
                     else {}
@@ -4669,39 +4575,39 @@ class LakehouseTable:
                 **(
                     {
                         "schema_state": {
-                            "events": folded_schema_events,
-                            "field_ids": sstate["field_ids"],
-                            "next_field_id": sstate["next_field_id"],
+                            "events": list(prev["schema_events"]),
+                            "field_ids": dict(prev["field_ids"]),
+                            "next_field_id": prev["next_field_id"],
                         }
                     }
                     if (
-                        sstate["field_ids"]
+                        prev["field_ids"]
                         and "schema_state" not in first_keep.extra
                     )
                     else {}
                 ),
                 "checkpointed": expired,
                 "committed": _merge_committed(
-                    folded_committed, first_keep.extra.get("committed", {})
+                    prev["committed"], first_keep.extra.get("committed", {})
                 ),
                 # carry pending MoR deletes (prefix-order preserved) and
                 # the per-file add versions their scoping depends on
                 **(
                     {
-                        "deletes": folded_deletes
+                        "deletes": prefix_deletes
                         + list(first_keep.extra.get("deletes") or [])
                     }
-                    if folded_deletes or first_keep.extra.get("deletes")
+                    if prefix_deletes or first_keep.extra.get("deletes")
                     else {}
                 ),
                 **(
                     {
                         "file_seq": {
-                            **folded_file_seq,
+                            **prefix_seq,
                             **first_keep.extra.get("file_seq", {}),
                         }
                     }
-                    if folded_file_seq or first_keep.extra.get("file_seq")
+                    if prefix_seq or first_keep.extra.get("file_seq")
                     else {}
                 ),
             },

@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from crest_spark.session import _DEFAULTS
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -36,18 +38,19 @@ REGISTRY: dict[str, QuerySpec] = {}
 # driver constructs its own SparkSession without our factory): nanosecond
 # parquet timestamps are unreadable in Spark 4 without nanosAsLong, and
 # epoch outputs / timestamp literals require a UTC session to match the
-# (naive-timestamp) DuckDB oracle.
-_REQUIRED_CONFS = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+# (naive-timestamp) DuckDB oracle. Values come from the session factory's
+# one table (``session._DEFAULTS``).
+_REQUIRED_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
     # perf (all runtime-settable): AQE coalesces the vanilla 200-partition
     # shuffles down to the data's real size at any scale factor
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-}
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.adaptive.skewJoin.enabled",
+    "spark.sql.execution.arrow.pyspark.enabled",
+)
 
 
 def _ensure_package_shipped(spark: SparkSession) -> None:
@@ -88,7 +91,8 @@ def _ensure_package_shipped(spark: SparkSession) -> None:
 
 def ensure_session_confs(spark: SparkSession) -> None:
     _ensure_package_shipped(spark)
-    for k, v in _REQUIRED_CONFS.items():
+    for k in _REQUIRED_CONFS:
+        v = _DEFAULTS[k]
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
@@ -156,376 +160,51 @@ def load_all() -> dict[str, QuerySpec]:
     return REGISTRY
 
 
-# Driver-check rotation memory: the round each query was LAST checked
-# in (union of the CORRECTNESS_r01..r09 rows; absent = never checked).
-# Everything has been checked at least once (r5 closed coverage), so
-# rotation's job is FRESHNESS: each round's fixed-size driver prefix
-# lands on the stalest entries — the ones whose implementation files
-# have churned most since their last check (VERDICT r5 next-round #5).
-# The r9 prefix cleared the r4 tier entirely, certified the 3 r9
-# additions, and took 34 of the 50 r5-stale entries; the r10 prefix
-# therefore leads with this round's additions (tier 0), the 16
-# remaining r5-stale entries, then the round-6 tier of 50 (VERDICT r9
-# next-round #6).
-_LAST_CHECKED: dict[str, int] = {
-    # --- r9 additions, first-checked in round 9 ---
-    "dedup_containment_capped": 9, "curation_dsir_weights": 9,
-    "lake_schema_rename_drop": 9,
-    # --- last checked in round 4 (13 entries) ---
-    "curation_chunk_documents": 9, "curation_shuffle_order": 9,
-    "dedup_embedding_ann": 9, "dedup_remove_spans": 9,
-    "q24e_correlated_max": 9, "q26c_filtered_aggs": 9, "q29_lateral_topk": 9,
-    "q40_returned_items": 9, "q41_important_parts": 9, "stats_histogram": 9,
-    "stats_percentiles": 9, "stream_static_join": 9, "text_unigram_nll": 9,
-    # --- last checked in round 5 (50 entries) ---
-    "ann_brute_topk": 9, "curation_oversample": 9,
-    "curation_stratified_sample": 9, "dedup_exact": 9, "dedup_fuzzy_pairs": 9,
-    "dedup_ngram_jaccard": 9, "lake_mor_upsert": 9, "llm_curation_pipeline": 9,
-    "multimodal_binary_meta": 9, "multimodal_features_hex": 9,
-    "multimodal_image_decode": 9, "multimodal_image_resize": 9,
-    "mv_hourly_rollup": 9, "mv_percentile_rollup": 9, "q01_filter_project": 9,
-    "q02_predicates": 9, "q15f_grouping_id": 5, "q16e_regex_zoo": 9,
-    "q18f_explode_outer": 5, "q18g_array_ops": 5,
-    "q20b_asof_forward_tolerance": 5, "q22_cosine_topk": 9,
-    "q24_scalar_subquery": 9, "q24b_correlated_scalar": 9,
-    "q26d_regression_aggs": 5, "q28_profit_by_nation_year": 9,
-    "q30_small_qty_revenue": 5, "q31_waiting_suppliers": 5,
-    "q32_dormant_customers": 5, "q33_sessionize": 9, "q34_gapfill": 9,
-    "q35_min_acctbal_supplier": 9, "q42_ship_class_priority": 9,
-    "q43_part_supplier_count": 5, "q44_disjunctive_revenue": 5,
-    "q45_dominant_suppliers": 5, "q47_recursive_hierarchy": 9, "q48_mode": 5,
-    "q49_ntile_buckets": 5, "skew_salted_agg": 9, "skew_salted_join": 9,
-    "stats_correlation": 5, "stats_minmax_percentile": 9, "stats_moments": 9,
-    "stats_percentiles_approx": 5, "stats_profile": 5,
-    "stream_tumbling_window": 9, "text_lang_id": 9, "text_tfidf": 9,
-    "udf_scalar_pandas": 9,
-    # --- last checked in round 6 (50 entries) ---
-    "dedup_incremental": 6, "dedup_minhash_lsh": 6, "dedup_simhash": 6,
-    "dedup_simhash_weighted": 6, "graph_pagerank": 6, "knn_self_join_topk": 6,
-    "lake_mor_cdf": 6, "lake_schema_widening": 6, "lake_time_travel": 6,
-    "lake_wap_publish": 6, "multimodal_video_frames": 6, "mv_mor_cdc_fold": 6,
-    "q05_join_groupby": 6, "q06_join3_topk": 6, "q07_left_outer": 6,
-    "q07b_full_outer": 6, "q08_semi_join": 6, "q08b_anti_join": 6,
-    "q09_broadcast_dim": 6, "q10_range_join": 6, "q10b_theta_join": 6,
-    "q11_rank_window": 6, "q12_frame_window": 6, "q13_topk": 6,
-    "q14_intersect": 6, "q14b_except": 6, "q14c_union": 6, "q15_rollup": 6,
-    "q15b_cube": 6, "q16_scalar_zoo": 6, "q16b_datetime_zoo": 6,
-    "q17_json_extract": 6, "q17b_json_schema": 6, "q18_array_access": 6,
-    "q18b_explode": 6, "q18c_array_hof": 6, "q18d_map_functions": 6,
-    "q50_percent_rank_cume_dist": 6, "q51_event_funnel": 6,
-    "q52_cohort_retention": 6, "q53_user_paths": 6,
-    "q54_rolling_active_users": 6, "q55_union_harmonize": 6,
-    "q56_rolling_median": 6, "q57_pareto_frontier": 6, "q58_market_basket": 6,
-    "q59_audience_overlap": 6, "stats_entropy": 6, "stats_gini": 6,
-    "text_bm25_topk": 6,
-    # --- last checked in round 7 (50 entries) ---
-    "ann_ivf_indexed_topk": 7, "ann_lsh_topk": 7, "curation_pack_sequences": 7,
-    "curation_paragraph_dedup": 7, "curation_train_split": 7,
-    "dedup_components": 7, "dedup_embedding_cosine": 7,
-    "graph_bfs_distances": 7, "graph_triangle_count": 7, "lake_branch_ff": 7,
-    "lake_constraints": 7, "multimodal_features": 7,
-    "multimodal_png_decode": 7, "multimodal_resize": 7,
-    "q03_agg_pricing_summary": 7, "q04b_approx_distinct": 7,
-    "q10c_cross_join": 7, "q12b_range_frame": 7, "q15c_grouping_sets": 7,
-    "q17c_to_json": 7, "q18e_posexplode": 7, "q19_tumbling_batch": 7,
-    "q20_asof_join": 7, "q21_dedup_groups": 7, "q21b_distinct": 7,
-    "q24c_in_subquery": 7, "q27_having": 7, "q28b_order_count_distribution": 7,
-    "q36_priority_count": 7, "q46_multires_rollup": 7, "q60_scd2_build": 7,
-    "q61_scd2_point_in_time": 7, "q62_attribution_last_touch": 7,
-    "q63_longest_streak": 7, "q64_markov_transitions": 7,
-    "q65_rfm_segments": 7, "q66_attribution_position": 7, "stats_anova_f": 7,
-    "stats_benford": 7, "stats_chi2_independence": 7, "stats_ks_test": 7,
-    "stats_mann_whitney": 7, "stats_welch_ttest": 7, "stats_winsorized": 7,
-    "stream_sliding_window": 7, "text_quality": 7, "ts_cusum_changepoint": 7,
-    "ts_ewma": 7, "ts_zscore_anomaly": 7, "udf_grouped_agg_pandas": 7,
-    # --- last checked in round 8 (50 entries) ---
-    "ann_ivf_topk": 8, "curation_decontaminate": 8, "curation_domain_mix": 8,
-    "curation_pii_scrub": 8, "dedup_canonical": 8, "dedup_containment": 8,
-    "dedup_embedding_components": 8, "dedup_semantic_clusters": 8,
-    "dedup_substring_spans": 8, "lake_mor_sync": 8, "lake_retention_delete": 8,
-    "multimodal_audio_chunks": 8, "multimodal_audio_chunks_real": 8,
-    "multimodal_audio_decode": 8, "mv_cdc_fold": 8, "mv_topk_rollup": 8,
-    "q04_distinct_agg": 8, "q05b_shuffle_hash_join": 8, "q11b_window_zoo": 8,
-    "q14d_intersect_all": 8, "q14e_except_all": 8, "q15d_pivot": 8,
-    "q15e_unpivot": 8, "q16d_null_zoo": 8, "q24d_cte": 8,
-    "q25_deterministic_sample": 8, "q26_misc_aggs": 8, "q26b_string_agg": 8,
-    "q28c_volume_shipping": 8, "q28d_top_supplier": 8, "q28e_big_orders": 8,
-    "q28f_promo_share": 8, "q34b_gapfill_interpolate": 8,
-    "q37_local_supplier_volume": 8, "q38_revenue_forecast": 8,
-    "q39_market_share": 8, "stats_quantile_binning": 8,
-    "stream_dedup_counts": 8, "stream_session_window": 8,
-    "stream_stream_join": 8, "text_bigram_nll": 8, "text_fingerprint": 8,
-    "text_heavy_hitters": 8, "text_repetition": 8, "text_token_stats": 8,
-    "text_word_counts": 8, "ts_interval_coverage": 8, "ts_stl_decompose": 8,
-    "udf_grouped_map_zscore": 8, "udtf_ngrams": 8,
-}
-
-# --- round-10 driver check (CORRECTNESS_r10.json: 44/44 oracle rows
-# green + 6 rows-only; covers the r10 additions and the full r5-stale
-# remainder plus most of the r6 tier) ---
-for _n in (
-    "dedup_minhash_incr", "lake_nested_evolution", "ann_pq_topk",
-    "q20b_asof_forward_tolerance", "stats_profile", "q18f_explode_outer",
-    "q18g_array_ops", "q43_part_supplier_count", "q15f_grouping_id",
-    "q26d_regression_aggs", "q44_disjunctive_revenue", "q48_mode",
-    "q30_small_qty_revenue", "q45_dominant_suppliers", "q49_ntile_buckets",
-    "q31_waiting_suppliers", "stats_correlation", "q32_dormant_customers",
-    "stats_percentiles_approx", "q52_cohort_retention", "dedup_incremental",
-    "graph_pagerank", "lake_mor_cdf", "multimodal_video_frames",
-    "q05_join_groupby", "knn_self_join_topk", "q50_percent_rank_cume_dist",
-    "text_bm25_topk", "q53_user_paths", "dedup_minhash_lsh",
-    "mv_mor_cdc_fold", "q06_join3_topk", "stats_entropy",
-    "q54_rolling_active_users", "dedup_simhash", "lake_schema_widening",
-    "q07_left_outer", "q51_event_funnel", "q58_market_basket",
-    "dedup_simhash_weighted", "lake_time_travel", "q07b_full_outer",
-    "q56_rolling_median", "q59_audience_overlap", "lake_wap_publish",
-    "q08_semi_join", "q57_pareto_frontier", "q08b_anti_join", "stats_gini",
-    "q09_broadcast_dim",
-):
-    _LAST_CHECKED[_n] = 10
-
-# --- round-11 driver check (CORRECTNESS_r11.json: 43/43 oracle rows
-# green + 7 rows-only; the tier-0 ann_ivfpq_topk first check, the 3
-# r10-fix-affected re-checks, all 19 r6-stale and 27 of the r7 tier) ---
-for _n in (
-    "ann_ivfpq_topk", "dedup_minhash_incr", "lake_time_travel",
-    "ann_pq_topk", "q10_range_join", "q10b_theta_join", "q11_rank_window",
-    "q12_frame_window", "q13_topk", "q14_intersect", "q14b_except",
-    "q14c_union", "q15_rollup", "q15b_cube", "q16_scalar_zoo",
-    "q16b_datetime_zoo", "q17_json_extract", "q17b_json_schema",
-    "q18_array_access", "q18b_explode", "q18c_array_hof",
-    "q18d_map_functions", "q55_union_harmonize", "q64_markov_transitions",
-    "dedup_embedding_cosine", "curation_train_split", "graph_triangle_count",
-    "lake_branch_ff", "multimodal_features", "multimodal_png_decode",
-    "q03_agg_pricing_summary", "ann_lsh_topk", "q15c_grouping_sets",
-    "q24c_in_subquery", "q60_scd2_build", "text_quality",
-    "q46_multires_rollup", "q28b_order_count_distribution",
-    "q36_priority_count", "udf_grouped_agg_pandas", "ann_ivf_indexed_topk",
-    "stream_sliding_window", "q65_rfm_segments", "dedup_components",
-    "curation_pack_sequences", "graph_bfs_distances", "lake_constraints",
-    "multimodal_resize", "q19_tumbling_batch", "stats_welch_ttest",
-):
-    _LAST_CHECKED[_n] = 11
-
-# --- round-12 fix-affected force-recheck (VERDICT r11 next-round #6):
-# entries whose implementation changed THIS round jump the staleness
-# queue — tier 1 sorts right after tier 0 (no new entries this round),
-# ahead of the 23 remaining r7-stale and the r8 tier.
-# dedup_minhash_incr: pruned verify fetch + replay anti-join;
-# ann_ivfpq_topk / ann_ivf_indexed_topk: single IN-list probed scan +
-# cell-grouped ADC LUTs; lake_nested_evolution: add-only histories now
-# count as evolution in the export replay; lake_retention_delete:
-# expiry fold stamps origin row counts on sticky extras.
-for _n in (
-    "dedup_minhash_incr", "ann_ivfpq_topk", "ann_ivf_indexed_topk",
-    "lake_nested_evolution", "lake_retention_delete",
-):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-12 driver check: the 50-entry prefix of CORRECTNESS_r12
-# (44/44 oracle green, 6 rows-only by design — VERDICT r12) ---
-for _n in (
-    "lake_batch_point_lookup", "dedup_minhash_incr",
-    "lake_retention_delete", "ann_ivfpq_topk", "lake_nested_evolution",
-    "ann_ivf_indexed_topk", "curation_paragraph_dedup", "q20_asof_join",
-    "stats_chi2_independence", "q61_scd2_point_in_time", "ts_ewma",
-    "q21_dedup_groups", "stats_benford", "q62_attribution_last_touch",
-    "ts_zscore_anomaly", "q21b_distinct", "stats_winsorized",
-    "q63_longest_streak", "ts_cusum_changepoint", "q27_having",
-    "stats_ks_test", "q66_attribution_position", "q18e_posexplode",
-    "stats_mann_whitney", "q17c_to_json", "stats_anova_f",
-    "q12b_range_frame", "q10c_cross_join", "q04b_approx_distinct",
-    "dedup_embedding_components", "curation_decontaminate", "mv_cdc_fold",
-    "multimodal_audio_chunks", "multimodal_audio_decode",
-    "q04_distinct_agg", "ann_ivf_topk", "q15d_pivot", "q24d_cte",
-    "text_token_stats", "q34b_gapfill_interpolate", "q28c_volume_shipping",
-    "q37_local_supplier_volume", "udf_grouped_map_zscore",
-    "stream_session_window", "dedup_canonical", "curation_pii_scrub",
-    "mv_topk_rollup", "multimodal_audio_chunks_real", "q14d_intersect_all",
-    "q15e_unpivot",
-):
-    _LAST_CHECKED[_n] = 12
-
-# --- round-13 driver check: the 50-entry prefix of CORRECTNESS_r13
-# (46/46 oracle green, 4 rows-only by design — VERDICT r13): the
-# tier-0 lake_tail_compaction_lookup first check, the 6 r12-fix-
-# affected re-checks, all 28 r8-stale and 15 of the r9 tier. ---
-for _n in (
-    "lake_tail_compaction_lookup", "dedup_minhash_incr",
-    "lake_retention_delete", "ann_ivfpq_topk", "lake_nested_evolution",
-    "ann_ivf_indexed_topk", "lake_batch_point_lookup",
-    "dedup_substring_spans", "curation_domain_mix", "lake_mor_sync",
-    "q14e_except_all", "q16d_null_zoo", "q26_misc_aggs",
-    "text_fingerprint", "ts_stl_decompose", "q28d_top_supplier",
-    "q38_revenue_forecast", "udtf_ngrams", "stream_dedup_counts",
-    "dedup_containment", "q05b_shuffle_hash_join", "q11b_window_zoo",
-    "q26b_string_agg", "text_word_counts", "ts_interval_coverage",
-    "q28e_big_orders", "q39_market_share", "stream_stream_join",
-    "dedup_semantic_clusters", "stats_quantile_binning",
-    "q25_deterministic_sample", "text_heavy_hitters", "q28f_promo_share",
-    "text_repetition", "text_bigram_nll", "dedup_exact",
-    "llm_curation_pipeline", "q47_recursive_hierarchy", "mv_hourly_rollup",
-    "multimodal_binary_meta", "multimodal_image_decode",
-    "q01_filter_project", "q22_cosine_topk", "skew_salted_agg",
-    "stats_moments", "q24_scalar_subquery", "text_lang_id",
-    "q33_sessionize", "q28_profit_by_nation_year",
-    "q35_min_acctbal_supplier",
-):
-    _LAST_CHECKED[_n] = 13
-
-# --- round-14 fix-affected force-recheck (VERDICT r13 next-round #3):
-# tier 1 jumps the queue ahead of the 35 remaining r9-stale entries
-# and the r10 tier. This round moves the drift-triggered index rebuild
-# off the serial ingest hook (staged build + conditional publish —
-# vector_index.py / streaming/ingest.py) and coalesces manifest groups
-# across commits under field-id keys (table.py fold + pruned_files) —
-# so the index-maintenance entries and the lakehouse lookup/retention/
-# evolution entries re-certify first.
-for _n in (
-    "ann_ivfpq_topk", "ann_ivf_indexed_topk", "dedup_minhash_incr",
-    "lake_batch_point_lookup", "lake_tail_compaction_lookup",
-    "lake_nested_evolution", "lake_retention_delete",
-):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-14 optimization-affected force-recheck: the r14 OPTIMIZATION
-# round re-evaluates the stable 4-dp aggregates through BIGINT split
-# sums on the Spark side (sum4x/avg4x, functions/stable.py — oracle
-# strings unchanged), drops ann_pq_topk's single-consumer checkpoint,
-# and splits skew_salted_agg's two-level partials. Every entry whose
-# Spark-side fn changed re-certifies against its UNCHANGED oracle hash
-# ahead of the staleness tiers (OPTIMIZATION_r14.md). ---
-for _n in (
-    "q03_agg_pricing_summary", "q06_join3_topk", "q15_rollup", "q15b_cube",
-    "q19_tumbling_batch", "q27_having", "q05b_shuffle_hash_join",
-    "q55_union_harmonize", "text_unigram_nll", "text_bm25_topk",
-    "text_bigram_nll", "q34_gapfill", "q34b_gapfill_interpolate",
-    "q28_profit_by_nation_year", "q28c_volume_shipping", "q28e_big_orders",
-    "q37_local_supplier_volume", "q38_revenue_forecast",
-    "q40_returned_items", "q44_disjunctive_revenue", "curation_dsir_weights",
-    "stream_tumbling_window", "stream_sliding_window", "stream_static_join",
-    "stream_session_window", "stream_dedup_counts", "stream_stream_join",
-    "skew_salted_agg", "ann_pq_topk",
-):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-14 optimization, second batch: the matview histogram partial
-# became a two-level aggregate (matview.py _hist_partial — codegen
-# restored; _partial's key/column assembly touched for ALL view kinds)
-# and connected_components' convergence check became the label-sum
-# invariant (dedup.py). Affected entries re-certify first. ---
-for _n in (
-    "mv_percentile_rollup", "mv_hourly_rollup", "mv_cdc_fold",
-    "mv_topk_rollup", "dedup_components", "dedup_embedding_components",
-    "dedup_canonical",
-):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-14 optimization, third batch: the remaining Spark-side
-# wide-decimal aggregates with MEASURED wins moved to BIGINT split
-# partials (stable.sumdec / sum4x — stats.py correlation/pivot/unpivot,
-# tpch_shapes.py q28e HAVING bound, matview_query.py retention agg;
-# high-cardinality and scan-bound sites measured neutral-or-worse and
-# left alone, see OPTIMIZATION_r14.md). Affected entries re-certify
-# against their UNCHANGED oracle hashes first. q28e_big_orders and
-# lake_retention_delete are already tier-1 above. ---
-for _n in (
-    "stats_correlation", "q15d_pivot", "q15e_unpivot",
-):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-14 optimization, eighth batch: seven per-doc-heavy text
-# entries spread the single-file documents scan to size-adaptive width
-# before tokenizing (rows untouched; the cheap corpus passes stay
-# unspread by measurement). Re-certify against UNCHANGED oracle
-# hashes first. ---
-for _n in (
-    "text_repetition",
-    "text_lang_id",
-    "text_tfidf",
-    "text_bm25_topk",
-    "text_unigram_nll",
-    "text_token_stats",
-    "text_bigram_nll",
-):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-14 optimization, seventh batch: multimodal_png_decode's
-# key relation hash-spreads to core count before the per-doc Python
-# codec work (rows untouched; single-file scan was capping the decode
-# at ONE task). Re-certify against its UNCHANGED oracle hash first. ---
-_LAST_CHECKED["multimodal_png_decode"] = 1
-
-# --- round-14 optimization, sixth batch: _stage_changes (the CDF
-# staging diff every change_feed=True merge/delete runs) computes ONE
-# signed-count aggregate over old ∪ new instead of two sign-inverted
-# exceptAll aggregates (standalone A/B 0.82-0.88x; identical staged
-# rows asserted). Re-certify every consumer against its UNCHANGED
-# oracle hash first (lake_mor_cdf already stamped above). ---
-for _n in ("mv_cdc_fold", "mv_mor_cdc_fold", "lake_mor_sync"):
-    _LAST_CHECKED[_n] = 1
-
-# --- round-14 optimization, fifth batch: q58's pair mining now
-# explodes each basket's sorted distinct-item array (ONE basket-key
-# exchange) instead of distinct + equi-self-join; rows proved identical
-# at sf0.1 and oracle-matched at sf0.001/0.01 pre-commit. Re-certify
-# against its UNCHANGED oracle hash first. ---
-_LAST_CHECKED["q58_market_basket"] = 1
-
-# --- round-14 optimization, fourth batch: lake_mor_cdf's fold==scan
-# assertion became ONE unioned exceptAll action instead of two (the
-# returned rowset is untouched; AQE reuses the fold/scan sub-exchanges
-# between the two directions, 32 verification jobs -> 17). Re-certify
-# against its UNCHANGED oracle hash first. ---
-_LAST_CHECKED["lake_mor_cdf"] = 1
+# Entries whose implementation changed since their last driver check:
+# tier 1, right after never-checked entries, so the next fixed-size
+# prefix re-certifies them first. Drop a name once a committed
+# CORRECTNESS_rN.json has checked it again.
+_RECHECK = (
+    # NOT IN -> NOT EXISTS precondition: footer null-count guard
+    "q24c_in_subquery",
+    # connected_components' overflow guard moved to DataFrame.isEmpty()
+    "dedup_components", "dedup_embedding_components", "dedup_canonical",
+    # call a lakehouse verb that now runs on the one retry driver
+    # (LakehouseTable._retrying) ...
+    "mv_cdc_fold", "lake_retention_delete", "lake_mor_upsert",
+    "lake_mor_cdf", "mv_mor_cdc_fold", "lake_time_travel",
+    "lake_wap_publish", "lake_branch_ff", "lake_mor_sync",
+    "lake_schema_rename_drop", "lake_nested_evolution",
+    "lake_tail_compaction_lookup",
+    # ... or reach one through a helper: IncrementalAggView.refresh
+    # (merge), ivf_add (tail compact) and rebuild_if_drifted
+    "mv_hourly_rollup", "mv_percentile_rollup", "mv_topk_rollup",
+    "lake_index_rebuild_roundtrip",
+)
 
 
-# --- round-14 driver check recorded: the 50-entry prefix the r14
-# driver verified (CORRECTNESS_r14.json — 46 rows+schema+hash green,
-# 4 no-oracle by design) is no longer stale. Re-stamp to its actual
-# last-checked round so the r15 prefix spends its slots on this
-# round's changed entries plus the genuinely stalest backlog. ---
-for _n in (
-    "ann_ivf_indexed_topk", "ann_ivfpq_topk", "ann_pq_topk",
-    "curation_dsir_weights", "dedup_canonical", "dedup_components",
-    "dedup_embedding_components", "dedup_minhash_incr",
-    "lake_index_rebuild_roundtrip", "lake_mor_cdf",
-    "lake_retention_delete", "multimodal_png_decode", "mv_cdc_fold",
-    "mv_hourly_rollup", "mv_mor_cdc_fold", "mv_percentile_rollup",
-    "mv_topk_rollup", "q03_agg_pricing_summary", "q05b_shuffle_hash_join",
-    "q06_join3_topk", "q15_rollup", "q15b_cube", "q15d_pivot",
-    "q15e_unpivot", "q19_tumbling_batch", "q27_having",
-    "q28_profit_by_nation_year", "q28c_volume_shipping", "q28e_big_orders",
-    "q34_gapfill", "q34b_gapfill_interpolate", "q37_local_supplier_volume",
-    "q38_revenue_forecast", "q40_returned_items", "q44_disjunctive_revenue",
-    "q58_market_basket", "skew_salted_agg", "stats_correlation",
-    "stream_dedup_counts", "stream_session_window", "stream_sliding_window",
-    "stream_static_join", "stream_stream_join", "stream_tumbling_window",
-    "text_bm25_topk", "text_lang_id", "text_repetition", "text_tfidf",
-    "text_token_stats", "text_unigram_nll",
-):
-    _LAST_CHECKED[_n] = 14
+def _last_checked() -> dict[str, int]:
+    """Driver-check rotation memory: the round each query was LAST
+    checked in — the highest N whose committed ``CORRECTNESS_rN.json``
+    (beside the package) names it; absent = never checked — with the
+    ``_RECHECK`` entries pinned to tier 1."""
+    import glob
+    import json
+    import os
+    import re
 
-# --- round-15 optimization force-recheck: tier 1 jumps the queue.
-# Every entry whose PLANNED Spark-side evaluation changed this round
-# re-certifies against its UNCHANGED oracle hash first
-# (OPTIMIZATION_r15.md): the six MERGE-pinned join entries (q24c also
-# switches its NOT IN evaluation to the NOT EXISTS decorrelation — the
-# null-aware anti join is broadcast-only in Spark), the streamed q58
-# pair expansion, the three spread_fact aggregate entries, and the q54
-# DAU/WAU split. The r15 helper guards (_docs conditional spread,
-# _stage_changes sentinel uniquification, the components overflow
-# guard) produce BYTE-IDENTICAL local plans for every registry
-# consumer (id-normalized plan diffs committed under plans/r15), so
-# those consumers are NOT re-stamped — their planned evaluation is
-# unchanged. ---
-for _n in (
-    "q03_agg_pricing_summary", "q06_join3_topk", "q07_left_outer",
-    "q10_range_join", "q24c_in_subquery", "q26_misc_aggs",
-    "q37_local_supplier_volume", "q40_returned_items",
-    "q54_rolling_active_users", "q58_market_basket", "stats_moments",
-):
-    _LAST_CHECKED[_n] = 1
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is None:
+            continue
+        with open(path) as fh:
+            for name in json.load(fh):
+                out[name] = max(out.get(name, 0), int(m.group(1)))
+    for name in _RECHECK:
+        out[name] = 1
+    return out
 
 
 def ordered_registry() -> dict[str, QuerySpec]:
@@ -543,14 +222,19 @@ def ordered_registry() -> dict[str, QuerySpec]:
     each round's prefix re-certify the entries whose last green is
     oldest — the ones with the most implementation churn since — instead
     of the same representatives every round.
+
+    Tiers come from ``_last_checked()``: the committed driver results
+    (``CORRECTNESS_rN.json``) give each entry's last-checked round, and
+    ``_RECHECK`` pins entries changed since then to tier 1.
     """
     specs = load_all()
-    tiers = sorted({_LAST_CHECKED.get(s.name, 0) for s in specs.values()})
+    last = _last_checked()
+    tiers = sorted({last.get(s.name, 0) for s in specs.values()})
 
     def queues_for(tier: int) -> list[list[QuerySpec]]:
         by_module: dict[str, list[QuerySpec]] = {}
         for spec in specs.values():
-            if _LAST_CHECKED.get(spec.name, 0) == tier:
+            if last.get(spec.name, 0) == tier:
                 by_module.setdefault(spec.module, []).append(spec)
         for queue in by_module.values():
             queue.sort(key=lambda s: s.oracle is None)  # oracles first

@@ -827,3 +827,61 @@ def test_export_emits_nested_leaf_bounds(spark, tmp_path):
 
                     lows.append(_s.unpack("<d", kv["value"])[0])
     assert sorted(lows) == [1.0, 26.0]  # one bound per clustered file
+
+
+# ------------------------------------- export replays the table's own fold
+def _kv_rows(df) -> list[tuple]:
+    return sorted((r["k"], r["v"]) for r in df.select("k", "v").collect())
+
+
+def _kv_with_pending_mor_delete(spark, tmp_path) -> LakehouseTable:
+    """Ten rows, then a merge-on-read upsert of key 3 that leaves an
+    equality delete pending against the first file."""
+    t = LakehouseTable(str(tmp_path), "ns", "kv")
+    t.append(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10)], "k long, v string"
+        )
+    )
+    t.merge(
+        spark,
+        spark.createDataFrame([(3, "new3")], "k long, v string"),
+        key="k",
+        strategy="mor",
+        mor_file_threshold=0,
+    )
+    assert t._state()["deletes"]
+    return t
+
+
+def test_export_after_rollback_over_pending_mor_delete(spark, tmp_path):
+    """A rollback re-records the target's pending delete together with
+    the restored files' original sequence numbers; the export must give
+    the restored files those numbers too, or the re-recorded equality
+    delete no longer reaches them and the deleted row comes back."""
+    t = _kv_with_pending_mor_delete(spark, tmp_path)
+    merge_v = t.version()
+    t.compact(spark)
+    t.rollback(merge_v)
+    want = _kv_rows(t.read(spark))
+    assert [r for r in want if r[0] == 3] == [(3, "new3")]
+    export_iceberg_metadata(t, spark=spark)
+    assert _kv_rows(read_iceberg(spark, t.path)) == want
+
+
+def test_export_after_expiry_with_pending_mor_delete(spark, tmp_path):
+    """Expiry folds the prefix into an append boundary that lists every
+    prefix file; the export must keep each file's folded sequence
+    number so the carried delete still applies to the rows it
+    deleted."""
+    t = _kv_with_pending_mor_delete(spark, tmp_path)
+    t.append(spark.createDataFrame([(10, "v10")], "k long, v string"))
+    want = _kv_rows(t.read(spark))
+    assert [r for r in want if r[0] == 3] == [(3, "new3")]
+    export_iceberg_metadata(t, spark=spark)
+    assert _kv_rows(read_iceberg(spark, t.path)) == want
+    assert t.expire_snapshots(keep_last=1)
+    assert t._state()["deletes"]  # still pending after the fold
+    assert _kv_rows(t.read(spark)) == want
+    export_iceberg_metadata(t, spark=spark)
+    assert _kv_rows(read_iceberg(spark, t.path)) == want

@@ -618,6 +618,28 @@ def test_tags_protect_snapshots_and_export(spark, sf_dir, tmp_path):
     assert t.read(spark).count() == 400
 
 
+def test_expiry_keeps_files_a_rollback_restored_in_the_prefix(spark, tmp_path):
+    """A file a compaction dropped and a rollback restored, both in the
+    expired prefix, is live at the cutoff: the boundary record lists it,
+    so expiry must not delete it even when a later compaction dropped it
+    again — or the tagged cutoff snapshot can no longer be read."""
+    t = _cat(tmp_path).get_or_create_table(
+        "rb", spark.range(0).withColumn("v", F.col("id")).schema
+    )
+    for lo in (0, 100):
+        v_restored = t.append(
+            spark.range(lo, lo + 100).withColumn("v", F.col("id"))
+        )
+    t.compact(spark)
+    t.rollback(v_restored)
+    v_cut = t.append(spark.range(200, 300).withColumn("v", F.col("id")))
+    t.compact(spark)
+    t.set_tag("cut", v_cut)
+    assert t.expire_snapshots(keep_last=1)
+    assert t.read_tag(spark, "cut").count() == 300
+    assert t.read(spark).count() == 300
+
+
 def test_bloom_survives_merge_and_compact_rebuild(spark, sf_dir, tmp_path):
     """Copy-on-write merge carries kept files' Bloom filters via the
     stats copy; compact(bloom_for=...) rebuilds filters for the rewritten

@@ -298,7 +298,8 @@ def test_avro_zigzag_varint_roundtrip(n):
 # sequence ordering, with tombstones) / range delete(cow|mor) / compact /
 # rollback / expire / stage / publish / discard (write-audit-publish) —
 # must scan identically to a DuckDB replay of the same ops (staged rows
-# enter the replay only at publish), and (when every commit staged a
+# enter the replay only at publish) and read back identically through
+# its Iceberg export, and (when every commit staged a
 # change set) the CDF fold must equal the final state. This is the state-machine certification of
 # the CoW/MoR equivalence the r6 merge-on-read work claims: strategy is
 # drawn per-op, so cow and mor paths interleave on the same key history.
@@ -582,6 +583,20 @@ def test_lakehouse_interleaving_matches_duckdb_replay(ops, spark):
         (r["id"], r["val"], r["seq"]) for r in tab.read(spark).collect()
     )
     assert got == want, f"scan != replay after {ops}"
+
+    # the Iceberg export replays the same log: reading the table back
+    # through the exported metadata alone must give the model rows too
+    from crest_spark.lakehouse.iceberg_export import (
+        export_iceberg_metadata,
+        read_iceberg,
+    )
+
+    export_iceberg_metadata(tab, spark=spark)
+    got_ice = sorted(
+        (r["id"], r["val"], r["seq"])
+        for r in read_iceberg(spark, tab.path).collect()
+    )
+    assert got_ice == want, f"read_iceberg != replay after {ops}"
 
     if foldable and ver_after[-1] > ver_after[0]:
         ch = tab.read_changes(spark, after=ver_after[0], cdf=True)

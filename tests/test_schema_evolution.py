@@ -351,6 +351,39 @@ def test_export_field_ids_match_table_after_stale_append_race(spark, cat):
     assert "value" in exported_ids and "v" in exported_ids
 
 
+def test_expiry_keeps_field_ids_after_stale_append_race(spark, cat):
+    """Expiry must fold the prefix's field ids exactly like the state
+    fold: after an append-vs-rename race (the stale append records the
+    pre-rename schema) the live renamed column keeps its id — a fold
+    that assigned ids from the raw recorded schema retired it and
+    minted a fresh one."""
+    import time as _time
+
+    df = spark.createDataFrame([(1, 10.0)], "a int, b double")
+    t = cat.get_or_create_table("race_expiry", df.schema)
+    t.append(df)
+    old_schema_json = t._state()["schema"]
+    t.rename_column("b", "c")
+    t._try_commit(
+        {
+            "operation": "append",
+            "files": [],
+            "stats": {},
+            "schema": old_schema_json,
+            "commit_ts": _time.time(),
+            "num_rows": 0,
+            "extra": {},
+        }
+    )
+    t.append(spark.createDataFrame([(2, 20.0, None)], t.schema()))
+    before = dict(t._state()["field_ids"])
+    assert before == {"a": 1, "c": 2, "b": 3}
+    rows = sorted((r["a"], r["c"]) for r in t.read(spark).collect())
+    assert t.expire_snapshots(keep_last=1)
+    assert t._state()["field_ids"] == before
+    assert sorted((r["a"], r["c"]) for r in t.read(spark).collect()) == rows
+
+
 # --------------------------------------------------- nested-field evolution
 def _mk_nested(spark, cat, name="nt"):
     from pyspark.sql import Row
