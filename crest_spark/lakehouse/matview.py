@@ -35,7 +35,9 @@ of decomposable aggregates). Maintenance is BATCH-INCREMENTAL:
   All sound under crest's append-only ingestion.
   ``read_changes`` raises on a non-compaction replace in the range, so
   an overwrite/rollback of the source can never silently corrupt
-  min/max; call ``full_refresh()`` after such surgery.
+  min/max, and on a range that starts inside expired source history
+  (``expire_snapshots`` past the view's watermark merged that history
+  into one boundary record); call ``full_refresh()`` after either.
 - Single maintainer per view (the reference's model: one pipeline owns
   a view). Concurrent refreshes of the SAME view would double-count —
   the commit-conflict retry in merge protects against racing WRITERS,

@@ -69,6 +69,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
+from crest_spark.sources.table_stream import _commit, _versions, plan_changes
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _VERSION_WIDTH = 20
@@ -1373,24 +1375,14 @@ class LakehouseTable:
         return os.path.join(self.log_path, f"{version:0{_VERSION_WIDTH}d}.json")
 
     def versions(self) -> list[int]:
-        if not os.path.isdir(self.log_path):
-            return []
-        out = []
-        for f in os.listdir(self.log_path):
-            if f.endswith(".json"):
-                try:
-                    out.append(int(f[: -len(".json")]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return _versions(self.log_path)
 
     def snapshots(self, upto: int | None = None) -> list[Snapshot]:
         snaps = []
         for v in self.versions():
             if upto is not None and v > upto:
                 break
-            with open(self._version_file(v)) as fh:
-                snaps.append(Snapshot.from_record(v, json.load(fh)))
+            snaps.append(Snapshot.from_record(v, _commit(self.log_path, v)))
         return snaps
 
     def version(self) -> int:
@@ -1521,9 +1513,7 @@ class LakehouseTable:
         for v in versions:
             if v <= start_after:
                 continue
-            with open(self._version_file(v)) as fh:
-                d = json.load(fh)
-            _fold_record(state, v, d)
+            _fold_record(state, v, _commit(self.log_path, v))
         while len(cache) >= self._STATE_CACHE_SLOTS:
             cache.pop(next(iter(cache)))  # FIFO evict
         cache[key] = state
@@ -4083,13 +4073,17 @@ class LakehouseTable:
         appended by commits in ``(after, upto]``. Downstream consumers
         checkpoint the last version they processed and read only the new
         files — no diffing, no full-table re-read, O(new data) cost.
+        ``plan_changes`` picks the files, as for the ``crest_table`` stream.
 
         Compaction replaces are SKIPPED — they rewrite files but preserve
         the rowset, so the delta they contribute is empty (their rows were
-        already delivered by the original appends). Any other ``replace``
-        (overwrite/rollback) raises: rewritten history is no longer
-        expressible as a file delta — the same contract Iceberg's
-        incremental scan enforces.
+        already delivered by the original appends); so are staged and
+        branch commits (their rows arrive at the publish / fast-forward
+        commit). Any other ``replace`` (overwrite/rollback) raises:
+        rewritten history is no longer expressible as a file delta — the
+        same contract Iceberg's incremental scan enforces. So does a range
+        that starts inside expired history: re-read the full snapshot (an
+        incremental view's ``full_refresh()``).
 
         ``cdf=True``: change-data-feed form (Delta's
         ``readChangeFeed``). Output carries ``_change_type`` and
@@ -4103,66 +4097,10 @@ class LakehouseTable:
         ``input_file_name`` (one scan regardless of how many commits
         the window spans). Replaces without a staged change set still
         raise."""
-        versions = [v for v in self.versions() if v > after]
-        if upto is not None:
-            versions = [v for v in versions if v <= upto]
-        files: list[str] = []
-        change_files: list[str] = []
-        ver_of: dict[str, int] = {}
-        for v in versions:
-            with open(self._version_file(v)) as fh:
-                d = json.load(fh)
-            if d.get("extra", {}).get("staged") or d.get("extra", {}).get(
-                "branch"
-            ):
-                # staged (write-audit-publish) and branch commits
-                # contribute NO delta — their rows surface as inserts at
-                # the version of the publish / fast-forward commit that
-                # makes them live
-                continue
-            if d.get("operation") == "rowdelta" or d.get("extra", {}).get(
-                "deletes"
-            ):
-                dextra = d.get("extra", {})
-                if cdf and dextra.get("change_files") is not None:
-                    # a MoR merge made with change_feed=True staged its
-                    # row-level change set at commit time — consume that
-                    # instead of the data files (the postimages/inserts
-                    # in the change set cover every row the delta added,
-                    # and the preimages/deletes express what its
-                    # equality-delete retracts)
-                    change_files.extend(dextra["change_files"])
-                    for f in dextra["change_files"]:
-                        ver_of[os.path.abspath(f)] = v
-                    continue
-                raise ValueError(
-                    f"incremental read across a merge-on-read commit "
-                    f"(version {v}): its deletes are not expressible as a "
-                    "file delta; compact() folds them, then re-read the "
-                    "snapshot"
-                    + (
-                        " (or re-merge with change_feed=True to stage a "
-                        "foldable change set)"
-                        if cdf
-                        else ""
-                    )
-                )
-            if d.get("operation") == "replace":
-                dextra = d.get("extra", {})
-                if dextra.get("compaction"):
-                    continue  # rowset-preserving: empty delta
-                if cdf and dextra.get("change_files") is not None:
-                    change_files.extend(dextra["change_files"])
-                    for f in dextra["change_files"]:
-                        ver_of[os.path.abspath(f)] = v
-                    continue
-                raise ValueError(
-                    f"incremental read across a replace commit (version {v}); "
-                    "re-read the full snapshot instead"
-                )
-            files.extend(d["files"])
-            for f in d["files"]:
-                ver_of[os.path.abspath(f)] = v
+        plan = plan_changes(self.log_path, after, upto, cdf)
+        files = [p for p, kind, _ in plan if kind == "ins"]
+        change_files = [p for p, kind, _ in plan if kind == "chg"]
+        ver_of = {os.path.abspath(p): v for p, _, v in plan}
         st = self._state(upto=upto)
         if st["schema"] is None:
             raise FileNotFoundError(

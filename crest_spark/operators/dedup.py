@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from crest_spark.functions.stable import round4
 from crest_spark.registry import register
-from crest_spark.sources.tables import load_table
+from crest_spark.sources.tables import load_table, spread_fact
 
 SHINGLE = 3  # tokens per shingle (vocab is small => unigrams are useless)
 MINHASH_K = 64  # signature length
@@ -63,9 +63,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         nbytes = 0
     cores = spark.sparkContext.defaultParallelism
     parts = max(8, min(4 * cores, nbytes // (4 << 20) or 8))
-    if df.rdd.getNumPartitions() >= parts:
-        return df
-    return df.repartition(int(parts), "doc_id")
+    return spread_fact(spark, df, "doc_id", parts)
 
 
 def with_shingles(df: DataFrame, text_col: str = "text") -> DataFrame:

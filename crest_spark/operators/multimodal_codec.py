@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crest_spark.registry import register
-from crest_spark.sources.tables import load_table
+from crest_spark.sources.tables import load_table, spread_fact
 
 # ---- synthesis parameters (shared by the encoders AND the SQL oracles)
 _IMG_W_BASE, _IMG_W_MOD = 16, 32  # width  = 16 + doc_id % 32
@@ -214,9 +214,9 @@ def _docs_ids(
     0.58 -> 1.20) and stay unspread."""
     df = load_table(spark, sf_dir, "documents").select("doc_id")
     if spread:
-        n = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < n:
-            df = df.repartition(n, "doc_id")
+        df = spread_fact(
+            spark, df, "doc_id", spark.sparkContext.defaultParallelism
+        )
     return df
 
 

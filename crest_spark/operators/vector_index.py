@@ -445,11 +445,7 @@ def ivf_add(
     if version is None:
         return None  # idempotent replay: nothing added, drift unchanged
     if recluster == "inline" and ivf_drift(t) > recluster_threshold:
-        ivf = None
-        for s in reversed(t.snapshots()):
-            ivf = s.extra.get("ivf")
-            if ivf:
-                break
+        ivf = _build_meta(t, "ivf")
         corpus = t.read(spark).select("vec_id", "embedding")
         _write_ivf(
             spark,
@@ -540,12 +536,8 @@ def ivf_delete(
         },
     )
     if ivf_drift(t) > recluster_threshold:
-        ivf = None
-        for s in reversed(t.snapshots()):
-            ivf = s.extra.get("ivf")
-            if ivf or s.extra.get("ivfpq"):
-                break
-        if ivf is None:
+        kind, ivf = latest_build_meta(t)
+        if kind != "ivf":
             # codes-only IVF-PQ index: no floats to refit from — drift
             # stays pending and observable; rebuild_if_drifted (which
             # has the source binding) is the refit path
@@ -568,19 +560,11 @@ def ivf_delete(
 
 
 def load_ivf_centroids(t: LakehouseTable):
-    """Centroids of the CURRENT index snapshot (walks the log head-first
-    to the latest rebuild)."""
+    """Centroids of the CURRENT index snapshot (its latest rebuild)."""
     import numpy as np
 
-    for s in reversed(t.snapshots()):
-        ivf = s.extra.get("ivf")
-        if ivf:
-            return np.array(ivf["centroids"], dtype=np.float64), int(
-                ivf["n_cells"]
-            )
-    raise ValueError(
-        f"{t.namespace}.{t.name} carries no IVF index metadata"
-    )
+    ivf = _build_meta(t, "ivf")
+    return np.array(ivf["centroids"], dtype=np.float64), int(ivf["n_cells"])
 
 
 def ivf_index_search(
@@ -836,17 +820,12 @@ def load_ivfpq_meta(t: LakehouseTable):
     """(centroids, codebooks, m, n_cells) of the current index snapshot."""
     import numpy as np
 
-    for s in reversed(t.snapshots()):
-        meta = s.extra.get("ivfpq")
-        if meta:
-            return (
-                np.array(meta["centroids"], dtype=np.float64),
-                np.array(meta["books"], dtype=np.float64),
-                int(meta["m"]),
-                int(meta["n_cells"]),
-            )
-    raise ValueError(
-        f"{t.namespace}.{t.name} carries no IVF-PQ index metadata"
+    meta = _build_meta(t, "ivfpq")
+    return (
+        np.array(meta["centroids"], dtype=np.float64),
+        np.array(meta["books"], dtype=np.float64),
+        int(meta["m"]),
+        int(meta["n_cells"]),
     )
 
 
@@ -865,6 +844,21 @@ def latest_build_meta(t: LakehouseTable) -> tuple[str, dict]:
     raise ValueError(
         f"{t.namespace}.{t.name} carries no IVF index metadata"
     )
+
+
+def _build_meta(t: LakehouseTable, kind: str) -> dict:
+    """Metadata of the newest (re)build, which must be a ``kind``
+    (``"ivf"`` or ``"ivfpq"``) build."""
+    try:
+        got, meta = latest_build_meta(t)
+    except ValueError:
+        got = None
+    if got != kind:
+        label = "IVF" if kind == "ivf" else "IVF-PQ"
+        raise ValueError(
+            f"{t.namespace}.{t.name} carries no {label} index metadata"
+        )
+    return meta
 
 
 def rebuild_pending(t: LakehouseTable, threshold: float | None = None) -> bool:

@@ -10,27 +10,38 @@ pattern).
 Mechanics (public Python Data Source API, SPARK-44076):
 - offsets are commit versions (``{"version": N}``), checkpointed by the
   engine like any streaming source — restart-safe for free;
-- ``partitions(start, end)`` lists the files appended in the version
-  range (metadata-only: one commit-log listing);
+- ``partitions(start, end)`` is ``plan_changes`` over the version range
+  (metadata-only: one commit-log listing plus the range's records);
 - ``read(partition)`` runs on executors and yields Arrow batches
   straight from the parquet file — no row-by-row Python;
-- rowset-preserving compactions are skipped (their delta is empty);
-  a true overwrite in the range fails the stream, matching
-  ``LakehouseTable.read_changes``' contract;
 - ``option("readChangeFeed", "true")`` streams the CHANGE FEED instead
   (Delta's streaming CDF): appended rows arrive as
   ``_change_type='insert'`` and merge/delete commits made with
   ``change_feed=True`` contribute their staged retractions/additions
   instead of failing the stream.
 
+One change planner: ``plan_changes`` decides which files a version
+range contributes, for this stream and ``LakehouseTable.read_changes``
+alike, so an offset range replays to the rows a batch incremental read
+of the same range returns:
+- staged and branch commits contribute nothing; their rows arrive once,
+  at the publish / fast-forward commit that lists them;
+- rowset-preserving compactions contribute nothing;
+- merge-on-read and overwrite commits contribute their staged change
+  files under ``readChangeFeed`` and otherwise fail the range;
+- a range that starts below the oldest retained version of an expired
+  history fails: the expiry boundary record merged the whole expired
+  prefix into its cutoff commit, so re-read the full snapshot.
+
 Process model constraint: the data-source class is UNPICKLED in
 dedicated Python processes (a driver-side source runner for offsets, a
 planner worker for schema) that see neither the driver's ``sys.path``
 nor ``addPyFile`` includes. This module is therefore self-contained —
-stdlib + pyspark only, re-implementing the tiny commit-log-tail reads
-it needs instead of importing ``crest_spark.lakehouse`` — and
-``register_table_stream`` registers it for cloudpickle
-pickle-by-value so the class definition travels inside the pickle.
+stdlib + pyspark only, with its own tiny commit-log reads instead of
+importing ``crest_spark.lakehouse`` — and ``register_table_stream``
+registers it for cloudpickle pickle-by-value so the class definition
+travels inside the pickle. That is also why the planner lives here and
+the table imports it, not the other way round.
 
 Register once per session: ``register_table_stream(spark)``.
 """
@@ -64,6 +75,55 @@ def _versions(log: str) -> list[int]:
 def _commit(log: str, version: int) -> dict:
     with open(os.path.join(log, f"{version:020d}.json")) as fh:
         return json.load(fh)
+
+
+def plan_changes(
+    log: str, after: int, upto: int | None, cdf: bool
+) -> list[tuple[str, str, int]]:
+    """``(path, kind, version)`` of every file the commits in ``(after,
+    upto]`` contribute: ``"ins"`` for appended data files, ``"chg"`` for
+    staged change files. The rules are in the module docstring."""
+    vs = _versions(log)
+    if vs and vs[0] > 1 and after < vs[0]:
+        raise ValueError(
+            f"incremental read from version {after}: history before "
+            f"version {vs[0]} was expired into that version's record, "
+            "so the range has no file delta; re-read the full snapshot"
+        )
+    out: list[tuple[str, str, int]] = []
+    for v in vs:
+        if v <= after or (upto is not None and v > upto):
+            continue
+        d = _commit(log, v)
+        extra = d.get("extra", {})
+        op = d.get("operation")
+        mor = op == "rowdelta" or extra.get("deletes")
+        if extra.get("staged") or extra.get("branch"):
+            continue  # rows arrive at the publish / fast-forward commit
+        if op == "replace" and extra.get("compaction") and not mor:
+            continue  # rowset-preserving: empty delta
+        if not (mor or op == "replace"):
+            out.extend((f, "ins", v) for f in d["files"])
+        elif cdf and extra.get("change_files") is not None:
+            out.extend((f, "chg", v) for f in extra["change_files"])
+        elif mor:
+            raise ValueError(
+                f"incremental read across a merge-on-read commit (version "
+                f"{v}): its deletes are not expressible as a file delta; "
+                "compact() folds them, then re-read the full snapshot"
+                + (
+                    " (or commit MoR merges with change_feed=True to stage "
+                    "a foldable change set)"
+                    if cdf
+                    else ""
+                )
+            )
+        else:
+            raise ValueError(
+                f"incremental read across a replace commit (version {v}); "
+                "re-read the full snapshot instead"
+            )
+    return out
 
 
 class _FilePartition(InputPartition):
@@ -108,52 +168,12 @@ class CrestTableStreamReader(DataSourceStreamReader):
         return {"version": vs[-1] if vs else 0}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        parts: list[_FilePartition] = []
-        for v in _versions(self.log):
-            if not (start["version"] < v <= end["version"]):
-                continue
-            d = _commit(self.log, v)
-            if d.get("operation") == "rowdelta" or d.get("extra", {}).get(
-                "deletes"
-            ):
-                dextra = d.get("extra", {})
-                if self.cdf and dextra.get("change_files") is not None:
-                    # a merge-on-read commit that staged its change set
-                    # (merge/delete with change_feed=True) streams like
-                    # any other CDF commit: the staged rows express the
-                    # delta's retractions + additions
-                    parts.extend(
-                        _FilePartition(f, "chg", v)
-                        for f in dextra["change_files"]
-                    )
-                    continue
-                raise ValueError(
-                    f"crest_table stream hit a merge-on-read commit at "
-                    f"version {v}: its deletes are not a file delta; "
-                    "compact() the table and restart from a full read"
-                    + (
-                        " (or commit MoR merges with change_feed=True to "
-                        "stage streamable change sets)"
-                        if self.cdf
-                        else ""
-                    )
-                )
-            if d.get("operation") == "replace":
-                dextra = d.get("extra", {})
-                if dextra.get("compaction"):
-                    continue  # rowset-preserving: empty delta
-                if self.cdf and dextra.get("change_files") is not None:
-                    parts.extend(
-                        _FilePartition(f, "chg", v)
-                        for f in dextra["change_files"]
-                    )
-                    continue
-                raise ValueError(
-                    f"crest_table stream hit a non-compaction replace at "
-                    f"version {v}; restart the stream from a full read"
-                )
-            parts.extend(_FilePartition(f, "ins", v) for f in d["files"])
-        return parts or [_FilePartition("")]
+        return [
+            _FilePartition(p, k, v)
+            for p, k, v in plan_changes(
+                self.log, start["version"], end["version"], self.cdf
+            )
+        ] or [_FilePartition("")]
 
     def read(self, partition: _FilePartition) -> Iterator:  # executor-side
         if not partition.path or not os.path.exists(partition.path):

@@ -95,7 +95,8 @@ def spread_fact(
     win (q03 0.85x / q26 0.66x / stats_moments 0.62x measured); scan-
     or output-dominated entries LOSE the exchange (q01 2.2x, q04 4.5x,
     q12 2.5x, q38 2.0x, q58 1.8x, udf_scalar_pandas 2.8x) and stay
-    unspread."""
+    unspread. ``parts`` overrides the target: the ``documents`` spreads
+    in ``dedup`` and ``multimodal_codec`` size their own."""
     n = parts or max(8, spark.sparkContext.defaultParallelism // 2)
     if df.rdd.getNumPartitions() >= n:
         return df

@@ -573,22 +573,34 @@ class IngestionService:
         tail first crosses the compaction threshold aborts the
         ingestion loop possibly hours in. The cell count is known the
         moment the index exists, so the spec is checked once then
-        (memoized per table); the compaction-time raise stays as the
+        (memoized per table); the compaction-time check stays as the
         backstop."""
-        spec_target = spec.get("compact_target_files")
-        if spec_target is None or (ns, name) in self._layout_checked:
+        if (
+            spec.get("compact_target_files") is None
+            or (ns, name) in self._layout_checked
+        ):
             return
+        self._checked_cells(spec, t, kind, ns, name)
+        self._layout_checked.add((ns, name))
+
+    @staticmethod
+    def _checked_cells(spec: dict, t, kind: str, ns: str, name: str) -> int:
+        """The index's cell count, after checking the layout contract
+        against it: every run file must stay single-valued on cell,
+        which ``cluster_partitions >= n_cells`` guarantees, so an
+        explicit ``compact_target_files`` below the cell count raises."""
         from crest_spark.operators.vector_index import (
             load_ivf_centroids,
             load_ivfpq_meta,
         )
 
-        n_cells = (
+        n_cells = int(
             load_ivf_centroids(t)[1]
             if kind == "ivf"
             else load_ivfpq_meta(t)[3]
         )
-        if int(spec_target) < int(n_cells):
+        spec_target = spec.get("compact_target_files")
+        if spec_target is not None and int(spec_target) < n_cells:
             raise ValueError(
                 f"index {ns}.{name}: compact_target_files="
                 f"{spec_target} is below the index's cell "
@@ -598,7 +610,7 @@ class IngestionService:
                 "compact_target_files or drop it from the "
                 "spec"
             )
-        self._layout_checked.add((ns, name))
+        return n_cells
 
     def _index_compact_limits(
         self, spec: dict
@@ -830,39 +842,11 @@ class IngestionService:
                     and t.unclustered_file_count(cluster_by=["cell"])
                     >= ivf_after
                 ):
-                    from crest_spark.operators.vector_index import (
-                        load_ivf_centroids,
-                        load_ivfpq_meta,
-                    )
-
-                    n_cells = (
-                        load_ivf_centroids(t)[1]
-                        if kind == "ivf"
-                        else load_ivfpq_meta(t)[3]
-                    )
-                    # layout-contract guard (VERDICT r12 #7): the probe
-                    # contract needs every run file single-valued on
-                    # cell, which cluster_partitions >= n_cells
-                    # guarantees; an explicit spec-level target below
-                    # the cell count is a mis-configuration that would
-                    # silently widen probe I/O. Normally caught at
-                    # first index load (ADVICE r13 #3, above); kept
-                    # here as the compaction-time backstop for a spec
-                    # mutated after validation.
-                    spec_target = spec.get("compact_target_files")
-                    if (
-                        spec_target is not None
-                        and int(spec_target) < int(n_cells)
-                    ):
-                        raise ValueError(
-                            f"index {ns}.{name}: compact_target_files="
-                            f"{spec_target} is below the index's cell "
-                            f"count {n_cells}; per-cell point stats "
-                            "(the probe-pruning contract) need "
-                            "cluster_partitions >= n_cells — raise "
-                            "compact_target_files or drop it from the "
-                            "spec"
-                        )
+                    # layout-contract guard (VERDICT r12 #7). Normally
+                    # caught at first index load (ADVICE r13 #3, above);
+                    # checked again here as the compaction-time
+                    # backstop for a spec mutated after validation.
+                    n_cells = self._checked_cells(spec, t, kind, ns, name)
                     # tail_only (r13): rewrites only the per-cell delta
                     # files accreted since the last trigger into a new
                     # cell-clustered run (ONE file per touched cell);

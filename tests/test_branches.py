@@ -201,3 +201,30 @@ def test_branch_base_isolated_from_later_main_merges(spark, sf_dir, cat):
     t.fast_forward("iso")
     rows = {r["id"]: r["val"] for r in t.read(spark).collect()}
     assert rows[3] == "UPD" and rows[900] == "b" and len(rows) == 101
+
+
+def test_read_changes_from_before_expired_branch_history_raises(spark, cat):
+    """Branch rows arrive once, at the fast-forward commit. After expiry
+    folds the fork and the landing into the boundary record, a range
+    starting below the boundary raises instead of replaying them."""
+    t, _ = _mk(spark, cat, n=1)
+    v0 = t.version()
+
+    def changes(after):
+        return sorted(
+            r["id"] for r in t.read_changes(spark, after=after).collect()
+        )
+
+    t.create_branch("exp")
+    t.append(
+        spark.createDataFrame([(6, "b")], "id int, val string"), branch="exp"
+    )
+    t.fast_forward("exp")
+    assert changes(v0) == [6]
+    t.append(spark.createDataFrame([(7, "m")], "id int, val string"))
+    t.append(spark.createDataFrame([(8, "m")], "id int, val string"))
+    assert t.expire_snapshots(keep_last=2)
+    oldest = t.versions()[0]
+    with pytest.raises(ValueError, match="expired"):
+        t.read_changes(spark, after=v0)
+    assert changes(oldest) == [8]

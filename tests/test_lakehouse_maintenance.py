@@ -7,6 +7,8 @@ from __future__ import annotations
 import math
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from crest_spark.lakehouse import LakehouseCatalog
@@ -2226,3 +2228,44 @@ def test_mor_micro_batches_get_grouped(spark, sf_dir, tmp_path):
         for r in t.scan(spark, {"o_orderkey": (0, 39)}).collect()
     }
     assert got == {i: 1.0 + i for i in range(40)}
+
+
+def _ks(spark, ks):
+    return spark.createDataFrame([(k,) for k in ks], "k long")
+
+
+def test_read_changes_from_inside_expired_history_raises(spark, tmp_path):
+    """The expiry boundary record merges the whole expired prefix into
+    the cutoff commit, so a range starting below it has no file delta
+    and raises instead of replaying every row of the prefix."""
+    t = _cat(tmp_path).get_or_create_table("k", _ks(spark, [0]).schema)
+    for k in range(4):
+        t.append(_ks(spark, [k]))  # v2..v5
+    w = t.version()
+    t.append(_ks(spark, [4]))
+    t.append(_ks(spark, [5]))
+    t.expire_snapshots(keep_last=2)
+    assert t.versions() == [w + 1, w + 2]
+    with pytest.raises(ValueError, match="expired"):
+        t.read_changes(spark, after=w)
+    # a range that starts at the boundary is still a plain delta
+    got = t.read_changes(spark, after=w + 1).collect()
+    assert [r["k"] for r in got] == [5]
+
+
+def test_read_changes_from_zero_after_expiry_raises(spark, tmp_path):
+    """With a compaction at the expiry cutoff the boundary is a skipped
+    replace: a range from 0 raises instead of returning only the later
+    appends while ``read()`` holds every row."""
+    t = _cat(tmp_path).get_or_create_table("k", _ks(spark, [0]).schema)
+    t.append(_ks(spark, [0]))
+    t.append(_ks(spark, [1]))
+    v_compact = t.compact(spark)
+    t.append(_ks(spark, [2]))
+    t.expire_snapshots(keep_last=2)
+    assert t.versions()[0] == v_compact
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [0, 1, 2]
+    with pytest.raises(ValueError, match="expired"):
+        t.read_changes(spark, after=0)
+    got = t.read_changes(spark, after=v_compact).collect()
+    assert [r["k"] for r in got] == [2]

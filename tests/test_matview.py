@@ -165,6 +165,52 @@ def test_continuous_maintenance_availablenow(spark, catalog, sf_dir, tmp_path):
     li.unpersist()
 
 
+def test_continuous_maintenance_over_staged_source(
+    spark, catalog, sf_dir, tmp_path
+):
+    """A discarded staged batch never reaches the view and a published
+    one is folded once, at its publish commit, not at its staged one."""
+    li = load_table(spark, sf_dir, "lineitem").limit(2000).cache()
+    li.count()
+    src = catalog.get_or_create_table("li", li.schema)
+    view = _view(catalog)
+    src.append(li.where(F.col("l_orderkey") % 3 == 0))
+    src.discard_staged(
+        [src.append(li.where(F.col("l_orderkey") % 3 == 1), stage=True)]
+    )
+    src.publish_staged(
+        [src.append(li.where(F.col("l_orderkey") % 3 == 2), stage=True)]
+    )
+
+    q = view.maintain_continuously(
+        spark, str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    _assert_matches(view, spark, src)
+    li.unpersist()
+
+
+def test_full_refresh_recovers_from_source_expiry(spark, catalog, sf_dir):
+    """Expiring source history past the view's watermark merges the
+    missed commits into the expiry boundary, which no incremental read
+    can split: refresh raises and ``full_refresh()`` recovers."""
+    li = load_table(spark, sf_dir, "lineitem")
+    src = catalog.get_or_create_table("li", li.schema)
+    view = _view(catalog)
+    src.append(li.where(F.col("l_orderkey") % 4 == 0))
+    view.refresh(spark)
+    src.append(li.where(F.col("l_orderkey") % 4 == 1))
+    src.append(li.where(F.col("l_orderkey") % 4 == 2))
+    assert src.expire_snapshots(keep_last=1)
+    with pytest.raises(ValueError, match="expired"):
+        view.refresh(spark)
+    view.full_refresh(spark)
+    _assert_matches(view, spark, src)
+    src.append(li.where(F.col("l_orderkey") % 4 == 3))
+    view.refresh(spark)
+    _assert_matches(view, spark, src)
+
+
 def test_approx_distinct_sketch_state(spark, catalog, sf_dir):
     """HLL sketch state maintains a holistic aggregate incrementally:
     after two refreshes the estimate must be within HLL tolerance of the

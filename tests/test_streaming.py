@@ -772,23 +772,15 @@ def test_crest_table_streaming_source(spark, sf_dir, tmp_path):
         .start()
     )
     try:
-        import time as _time
-
         # initialOffset is pinned when the FIRST batch runs (start() is
         # async) — wait for it before appending, or the appends race it
-        deadline = _time.time() + 60
-        while _time.time() < deadline and not q.recentProgress:
-            _time.sleep(0.5)
+        q.processAllAvailable()
         assert q.recentProgress, "stream never produced a batch"
         t.append(src.limit(3))
         t.compact(spark, target_partitions=1)  # empty delta, must not break
         t.append(src.limit(2))
 
-        deadline = _time.time() + 60
-        while _time.time() < deadline:
-            if spark.table("region_tail").count() >= 5:
-                break
-            _time.sleep(1)
+        q.processAllAvailable()
         got = spark.table("region_tail")
         assert got.count() == 5  # 3 + 2, snapshot excluded, compaction empty
         assert set(got.columns) == {"r_regionkey", "r_name"}
@@ -801,7 +793,6 @@ def test_crest_table_stream_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     while the stream is DOWN are delivered exactly once on restart."""
     from crest_spark.lakehouse import LakehouseCatalog
     from crest_spark.sources.table_stream import register_table_stream
-    import time as _time
 
     register_table_stream(spark)
     src = load_table(spark, sf_dir, "region")
@@ -831,25 +822,83 @@ def test_crest_table_stream_resumes_from_checkpoint(spark, sf_dir, tmp_path):
             return 0
 
     q1 = start()
-    deadline = _time.time() + 60
-    while _time.time() < deadline and not q1.recentProgress:
-        _time.sleep(0.5)
+    q1.processAllAvailable()  # pins initialOffset before the append
     t.append(src.limit(3))
-    while _time.time() < deadline and delivered() < 3:
-        _time.sleep(1)
+    q1.processAllAvailable()
     assert delivered() == 3
     q1.stop()
 
     t.append(src.limit(2))  # appended while the stream is down
     q2 = start()
     try:
-        deadline = _time.time() + 60
-        while _time.time() < deadline and delivered() < 5:
-            _time.sleep(1)
+        q2.processAllAvailable()
         # exactly the missed rows arrive — no replay of the 3 delivered
         assert delivered() == 5
     finally:
         q2.stop()
+
+
+def _stream_rows(t, after, upto, col):
+    """Values of ``col`` that the crest_table stream delivers for the
+    offset range ``(after, upto]``: the reader's own partitions, read on
+    the driver — no streaming query needed."""
+    from crest_spark.sources.table_stream import CrestTableStreamReader
+
+    reader = CrestTableStreamReader(
+        {"warehouse": t.root, "namespace": t.namespace, "table": t.name},
+        t.schema(),
+    )
+    return sorted(
+        x
+        for p in reader.partitions({"version": after}, {"version": upto})
+        for b in reader.read(p)
+        for x in b.column(col).to_pylist()
+    )
+
+
+def _k_table(spark, tmp_path):
+    from crest_spark.lakehouse import LakehouseCatalog
+
+    def rows(ks):
+        return spark.createDataFrame([(k,) for k in ks], "k long")
+
+    cat = LakehouseCatalog(str(tmp_path / "wh_k"))
+    return cat.get_or_create_table("k", rows([0]).schema), rows
+
+
+def test_crest_table_stream_skips_staged_and_branch_commits(spark, tmp_path):
+    """Staged and branch commits contribute nothing: their rows arrive
+    once, at the publish / fast-forward commit that lists them, so the
+    stream delivers no discarded staged row and no published row twice."""
+    t, rows = _k_table(spark, tmp_path)
+    v0 = t.append(rows([0]))
+    t.discard_staged([t.append(rows([1, 2, 3]), stage=True)])
+    t.publish_staged([t.append(rows([4, 5]), stage=True)])
+    t.create_branch("exp")
+    t.append(rows([6]), branch="exp")
+    t.fast_forward("exp")
+    got = sorted(r["k"] for r in t.read_changes(spark, after=v0).collect())
+    assert got == [4, 5, 6]
+    assert _stream_rows(t, v0, t.version(), "k") == got
+
+
+def test_crest_table_stream_refuses_a_range_inside_expired_history(
+    spark, tmp_path
+):
+    """An offset below the oldest retained version cannot replay: the
+    expiry boundary merged the whole expired prefix, so the range raises
+    instead of delivering that prefix again."""
+    t, rows = _k_table(spark, tmp_path)
+    for k in range(4):
+        t.append(rows([k]))  # v2..v5
+    w = t.version()
+    t.append(rows([4]))
+    t.append(rows([5]))
+    t.expire_snapshots(keep_last=2)
+    assert t.versions() == [w + 1, w + 2]
+    with pytest.raises(ValueError, match="expired"):
+        _stream_rows(t, w, t.version(), "k")
+    assert _stream_rows(t, w + 1, t.version(), "k") == [5]
 
 
 def test_stage_slices_mtimes_ordered(spark, sf_dir, tmp_path):

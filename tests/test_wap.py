@@ -291,3 +291,33 @@ def test_read_staged_unknown_version_raises_value_error(
     t.publish_staged([v])
     with pytest.raises(ValueError, match="not a pending staged commit"):
         t.read_staged(spark, v)  # already published
+
+
+def test_read_changes_from_before_expired_staged_history_raises(
+    spark, tmp_path
+):
+    """Discarded staged rows never enter the delta and published ones
+    arrive once, at the publish commit. Once expiry folds that history
+    into its boundary record, a range starting below the boundary has
+    no file delta and raises instead of replaying the merged prefix."""
+    def rows(ks):
+        return spark.createDataFrame([(k,) for k in ks], "k long")
+
+    t = _cat(tmp_path).get_or_create_table("k", rows([0]).schema)
+
+    def changes(after):
+        return sorted(
+            r["k"] for r in t.read_changes(spark, after=after).collect()
+        )
+
+    v0 = t.append(rows([0]))
+    t.discard_staged([t.append(rows([1, 2, 3]), stage=True)])
+    t.publish_staged([t.append(rows([4, 5]), stage=True)])
+    assert changes(v0) == [4, 5]
+    t.append(rows([6]))
+    t.append(rows([7]))
+    assert t.expire_snapshots(keep_last=2)
+    oldest = t.versions()[0]
+    with pytest.raises(ValueError, match="expired"):
+        t.read_changes(spark, after=v0)
+    assert changes(oldest) == [7]
