@@ -37,7 +37,9 @@ of decomposable aggregates). Maintenance is BATCH-INCREMENTAL:
   an overwrite/rollback of the source can never silently corrupt
   min/max, and on a range that starts inside expired source history
   (``expire_snapshots`` past the view's watermark merged that history
-  into one boundary record); call ``full_refresh()`` after either.
+  into one boundary record); call ``full_refresh()`` after either. A
+  view's first build reads the source snapshot, so history expired
+  before the view existed needs nothing.
 - Single maintainer per view (the reference's model: one pipeline owns
   a view). Concurrent refreshes of the SAME view would double-count —
   the commit-conflict retry in merge protects against racing WRITERS,
@@ -471,11 +473,15 @@ class IncrementalAggView:
         reference delegates to RisingWave. Views holding min/max/HLL
         read the plain append delta (retraction would need history) and
         raise on replace commits — ``full_refresh`` is their escape
-        hatch."""
+        hatch. A view that does not exist yet is built by
+        ``full_refresh``: it has no watermark, and a source whose
+        history was expired has no delta from version 0 to read."""
         head = self.source.version()
         last = self.maintained_version()
         if head <= last:
             return None
+        if not self.mv.exists():
+            return self.full_refresh(spark)
         signed = self._retractable()
         delta = self.source.read_changes(
             spark, after=last, upto=head, cdf=signed
@@ -602,9 +608,11 @@ class IncrementalAggView:
         id rides in the commit extra; a restart replay of a committed
         batch is detected and skipped.
 
-        The stream's first batch starts at the view's maintained
-        watermark (``startingVersion``), so pre-stream source commits are
-        caught up by batch 0 with no gap and no separate backfill step.
+        A view that does not exist yet is first built from the source
+        snapshot (``full_refresh``, as ``refresh()`` does); the stream's
+        first batch then starts at the view's maintained watermark
+        (``startingVersion``), so pre-stream source commits are caught
+        up with no gap — even over expired source history.
         A view is maintained by EITHER batch ``refresh()`` OR one
         continuous stream — switching from continuous back to batch
         refresh requires ``full_refresh()`` first (stream folds advance
@@ -612,6 +620,8 @@ class IncrementalAggView:
         from crest_spark.sources.table_stream import register_table_stream
 
         register_table_stream(spark)
+        if not self.mv.exists() and self.source.version() > 0:
+            self.full_refresh(spark)
         committed = set()
         if self.mv.exists():
             committed = {

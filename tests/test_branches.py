@@ -228,3 +228,19 @@ def test_read_changes_from_before_expired_branch_history_raises(spark, cat):
     with pytest.raises(ValueError, match="expired"):
         t.read_changes(spark, after=v0)
     assert changes(oldest) == [8]
+
+
+def test_read_branch_resolves_pre_rename_base_files(spark, cat):
+    """Base files written before a rename hold the column under its old
+    physical name: the branch read resolves them by vintage, like
+    ``read``, instead of reading the renamed column as NULL."""
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "id int, a string")
+    t = cat.get_or_create_table("t", df.schema)
+    t.append(df)
+    t.rename_column("a", "b")
+    t.create_branch("x")
+    t.append(
+        spark.createDataFrame([(3, "z")], "id int, b string"), branch="x"
+    )
+    got = sorted(tuple(r) for r in t.read_branch(spark, "x").collect())
+    assert got == [(1, "x"), (2, "y"), (3, "z")]

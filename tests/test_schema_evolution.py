@@ -99,6 +99,53 @@ def test_drop_then_readd_reads_null_for_old_files(spark, cat):
     assert old_files  # the pre-drop vintage was excluded metadata-only
 
 
+def test_unbounded_range_member_admits_files_older_than_a_readded_column(
+    spark, cat
+):
+    """An explicit ``(None, None)`` member of a multi-range predicate
+    admits every row, NULL included — so it admits the files that read
+    a re-added column as all NULL, and scan equals the filtered read."""
+    t = _mk(spark, cat)
+    t.drop_column("tag")
+    t.append(
+        spark.createDataFrame(
+            [(3, 30.0, "NEW")], "id int, v double, tag string"
+        ),
+        merge_schema=True,
+    )
+    preds = {"tag": [("A", "B"), (None, None)]}
+    assert t.pruned_files(preds) == t._state()["files"]
+    assert sorted(r["id"] for r in t.scan(spark, preds).collect()) == [
+        1,
+        2,
+        3,
+    ]
+
+
+def test_dml_keeps_files_older_than_a_readded_column(spark, cat):
+    """The pre-birth rule reaches the copy-on-write planners: files
+    written before a drop + re-add read the column as all NULL, which a
+    bounded delete/update predicate on it never matches, so both verbs
+    carry those files by reference instead of reading and rewriting
+    them."""
+    t = _mk(spark, cat)
+    old_files = set(t._state()["files"])
+    t.drop_column("tag")
+    t.append(
+        spark.createDataFrame(
+            [(3, 30.0, "NEW"), (4, 40.0, "OLD")],
+            "id int, v double, tag string",
+        ),
+        merge_schema=True,
+    )
+    t.delete(spark, {"tag": ("OLD", "OLD")})
+    assert old_files <= set(t._state()["files"])
+    t.update(spark, {"tag": ("NEW", "NEW")}, {"v": "v + 1"})
+    assert old_files <= set(t._state()["files"])
+    rows = {r["id"]: (r["v"], r["tag"]) for r in t.read(spark).collect()}
+    assert rows == {1: (10.0, None), 2: (20.0, None), 3: (31.0, "NEW")}
+
+
 def test_rename_guards(spark, cat):
     t = _mk(spark, cat)
     with pytest.raises(ValueError, match="already exists"):

@@ -111,7 +111,6 @@ def test_s1_watermark_drops_late_rows(spark, tmp_path):
             _time.sleep(1)
         # late row into the long-closed 10:00 window
         write_slice("b2", [("2024-01-01 10:01:00", 99)])
-        _time.sleep(8)
         q.processAllAvailable()
         out = spark.table("s1_late").collect()
     finally:
