@@ -38,8 +38,9 @@ of decomposable aggregates). Maintenance is BATCH-INCREMENTAL:
   min/max, and on a range that starts inside expired source history
   (``expire_snapshots`` past the view's watermark merged that history
   into one boundary record); call ``full_refresh()`` after either. A
-  view's first build reads the source snapshot, so history expired
-  before the view existed needs nothing.
+  view created after its source's history was expired is built from the
+  source snapshot by its first refresh, since there is no delta from
+  version 0 to fold.
 - Single maintainer per view (the reference's model: one pipeline owns
   a view). Concurrent refreshes of the SAME view would double-count —
   the commit-conflict retry in merge protects against racing WRITERS,
@@ -61,6 +62,10 @@ from pyspark.sql.types import StructType
 
 from crest_spark.lakehouse.catalog import LakehouseCatalog
 from crest_spark.lakehouse.table import LakehouseTable
+from crest_spark.sources.table_stream import (
+    expired_before,
+    register_table_stream,
+)
 
 _KEY_COL = "__mv_key"
 _SUPPORTED = (
@@ -473,14 +478,14 @@ class IncrementalAggView:
         reference delegates to RisingWave. Views holding min/max/HLL
         read the plain append delta (retraction would need history) and
         raise on replace commits — ``full_refresh`` is their escape
-        hatch. A view that does not exist yet is built by
-        ``full_refresh``: it has no watermark, and a source whose
-        history was expired has no delta from version 0 to read."""
+        hatch. A view that does not exist yet folds the source's
+        changes from version 0, or, over a source whose history was
+        expired, is built by ``full_refresh`` (``_new_over_expired``)."""
         head = self.source.version()
         last = self.maintained_version()
         if head <= last:
             return None
-        if not self.mv.exists():
+        if self._new_over_expired():
             return self.full_refresh(spark)
         signed = self._retractable()
         delta = self.source.read_changes(
@@ -488,6 +493,14 @@ class IncrementalAggView:
         )
         return self._apply_delta(
             spark, delta, {"mv_source_version": head}, signed=signed
+        )
+
+    def _new_over_expired(self) -> bool:
+        """True for a view that does not exist yet over a source whose
+        history was expired, so ``read_changes`` has no delta from
+        version 0 to give (``expired_before``)."""
+        return not self.mv.exists() and expired_before(
+            self.source.versions(), 0
         )
 
     def _apply_delta(
@@ -515,9 +528,11 @@ class IncrementalAggView:
     def full_refresh(self, spark: SparkSession) -> int:
         """Recompute the whole view from the current source snapshot —
         the escape hatch after a source overwrite/rollback breaks the
-        append-only contract ``refresh`` depends on."""
+        append-only contract ``refresh`` depends on. The snapshot read is
+        pinned to the version the view records, so a source commit that
+        lands meanwhile is left to the next refresh, not folded twice."""
         head = self.source.version()
-        partial = self._partial(self.source.read(spark))
+        partial = self._partial(self.source.read(spark, version=head))
         if not self.mv.exists():
             self.catalog.get_or_create_table(
                 self.name, partial.schema, self.namespace
@@ -608,19 +623,18 @@ class IncrementalAggView:
         id rides in the commit extra; a restart replay of a committed
         batch is detected and skipped.
 
-        A view that does not exist yet is first built from the source
-        snapshot (``full_refresh``, as ``refresh()`` does); the stream's
-        first batch then starts at the view's maintained watermark
-        (``startingVersion``), so pre-stream source commits are caught
-        up with no gap — even over expired source history.
+        The stream's first batch starts at the view's maintained
+        watermark (``startingVersion``), so pre-stream source commits are
+        caught up by batch 0 with no gap and no separate backfill step.
+        A view that does not exist yet over a source whose history was
+        expired is first built from the source snapshot
+        (``full_refresh``, as ``refresh()`` does).
         A view is maintained by EITHER batch ``refresh()`` OR one
         continuous stream — switching from continuous back to batch
         refresh requires ``full_refresh()`` first (stream folds advance
         the engine checkpoint, not ``mv_source_version``)."""
-        from crest_spark.sources.table_stream import register_table_stream
-
         register_table_stream(spark)
-        if not self.mv.exists() and self.source.version() > 0:
+        if self._new_over_expired():
             self.full_refresh(spark)
         committed = set()
         if self.mv.exists():

@@ -233,6 +233,13 @@ def _row_cond(predicates: dict) -> Column:
     return reduce(operator.and_, _row_conds(predicates), F.lit(True))
 
 
+def _recorded_pred(d: dict) -> dict:
+    """The predicate of a pending MoR predicate delete ``d`` as range
+    tuples (the log records each ``(lo, hi)`` as a JSON list), so the
+    stats check and the row filter judge it the same way."""
+    return {c: tuple(b) for c, b in d["pred"].items()}
+
+
 def _require_range_predicates(predicates: dict, verb: str) -> None:
     """delete()/update() are RANGE-ONLY: their all-match file-drop proof
     (``_stats_all_match``) and row-condition builders unpack each value
@@ -2837,7 +2844,7 @@ class LakehouseTable:
             if fseq > scope:
                 continue  # file added after the delete: out of scope
             if d.get("pred") is not None:
-                preds = {c: tuple(b) for c, b in d["pred"].items()}
+                preds = _recorded_pred(d)
             else:
                 bounds = d.get("bounds") or {}
                 if not all(k in bounds for k in d["keys"]):
@@ -2997,8 +3004,8 @@ class LakehouseTable:
                 if d.get("pred") is not None:
                     # NULL-safe: a NULL predicate column is "not
                     # matched", never NULL — ~cond would drop the row
-                    pred = {c: tuple(b) for c, b in d["pred"].items()}
-                    cond = F.coalesce(_row_cond(pred), F.lit(False)) & (
+                    match = _row_cond(_recorded_pred(d))
+                    cond = F.coalesce(match, F.lit(False)) & (
                         F.col("__crest_seq") <= int(d["seq"])
                     )
                     out = out.where(~cond)
@@ -4662,10 +4669,12 @@ class LakehouseTable:
         """Per-file pruning stats re-keyed to CURRENT column names by
         the file's vintage (files written before a rename recorded
         their min/max, Bloom filters, and null counts under the OLD
-        physical name). Identity — no copy — for event-free tables, so
-        the hot pruning loops of merge/delete/update pay nothing until
-        a table actually evolves; per-vintage name maps are memoized on
-        the state dict (one per distinct vintage class, not per file).
+        physical name). Identity — no copy — for event-free tables and
+        for files whose vintage reads every current column under its
+        own name, so the hot pruning loops of merge/delete/update pay
+        nothing until a table actually evolves; the name pairs and
+        predated-column list of each vintage are memoized on the state
+        dict (one per distinct vintage class, not per file).
 
         The ONLY stat view: ``pruned_files``, ``_plan_touch`` and
         ``_delete_affected`` all judge a file through it. Besides the
@@ -4680,8 +4689,8 @@ class LakehouseTable:
             return st
         vf = int((state.get("file_seq") or {}).get(f, 0))
         cache = state.setdefault("_vintage_stat_maps", {})
-        m = cache.get(vf)
-        if m is None:
+        hit = cache.get(vf)
+        if hit is None:
             schema = StructType.fromJson(json.loads(state["schema"]))
 
             def _paths(dtype, prefix: str, out: list[str]) -> None:
@@ -4700,23 +4709,19 @@ class LakehouseTable:
             m = {
                 p: self._vintage_source(p, events, vf) for p in all_paths
             }
-            cache[vf] = m
-        out: dict = {}
-        for cur, phys in m.items():
-            if phys is not None and phys in st:
-                out[cur] = st[phys]
+            pairs = [(c, p) for c, p in m.items() if p is not None]
+            unborn = [c for c, p in m.items() if p is None]
+            same = not unborn and all(c == p for c, p in pairs)
+            hit = cache[vf] = (None if same else pairs, unborn)
+        pairs, unborn = hit
+        if pairs is None:
+            return st  # the vintage reads every column by its own name
+        out: dict = {cur: st[phys] for cur, phys in pairs if phys in st}
         for slot in (_BLOOM_KEY, _NULLS_KEY):
             sub = st.get(slot)
-            if not sub:
-                continue
-            tsub = {
-                cur: sub[phys]
-                for cur, phys in m.items()
-                if phys is not None and phys in sub
-            }
+            tsub = {c: sub[p] for c, p in pairs if p in sub} if sub else None
             if tsub:
                 out[slot] = tsub
-        unborn = [cur for cur, phys in m.items() if phys is None]
         if unborn:
             out[_UNBORN_KEY] = unborn
         return out

@@ -77,6 +77,14 @@ def _commit(log: str, version: int) -> dict:
         return json.load(fh)
 
 
+def expired_before(vs: list[int], after: int) -> bool:
+    """Whether a range starting after version ``after`` begins inside
+    history that ``expire_snapshots`` merged into the oldest record of
+    the log ``vs`` (a log that starts past version 1): such a range has
+    no file delta."""
+    return bool(vs) and vs[0] > 1 and after < vs[0]
+
+
 def plan_changes(
     log: str, after: int, upto: int | None, cdf: bool
 ) -> list[tuple[str, str, int]]:
@@ -84,7 +92,7 @@ def plan_changes(
     upto]`` contribute: ``"ins"`` for appended data files, ``"chg"`` for
     staged change files. The rules are in the module docstring."""
     vs = _versions(log)
-    if vs and vs[0] > 1 and after < vs[0]:
+    if expired_before(vs, after):
         raise ValueError(
             f"incremental read from version {after}: history before "
             f"version {vs[0]} was expired into that version's record, "

@@ -175,11 +175,6 @@ def test_continuous_maintenance_over_staged_source(
     src = catalog.get_or_create_table("li", li.schema)
     view = _view(catalog)
     src.append(li.where(F.col("l_orderkey") % 3 == 0))
-    # the first run builds the view; the staged commits below then
-    # reach it through the stream only
-    ckpt = str(tmp_path / "ckpt")
-    q = view.maintain_continuously(spark, ckpt, available_now=True)
-    q.awaitTermination(120)
     src.discard_staged(
         [src.append(li.where(F.col("l_orderkey") % 3 == 1), stage=True)]
     )
@@ -187,7 +182,9 @@ def test_continuous_maintenance_over_staged_source(
         [src.append(li.where(F.col("l_orderkey") % 3 == 2), stage=True)]
     )
 
-    q = view.maintain_continuously(spark, ckpt, available_now=True)
+    q = view.maintain_continuously(
+        spark, str(tmp_path / "ckpt"), available_now=True
+    )
     q.awaitTermination(120)
     _assert_matches(view, spark, src)
     li.unpersist()
@@ -217,10 +214,10 @@ def test_full_refresh_recovers_from_source_expiry(spark, catalog, sf_dir):
 def test_new_view_builds_over_expired_source_history(
     spark, catalog, sf_dir, tmp_path
 ):
-    """A view that does not exist yet has no watermark to read changes
-    from: its first refresh (and its first continuous run) builds it
-    from the source snapshot, so a source whose history was expired
-    before the view existed still yields the recomputed aggregate."""
+    """A view that does not exist yet has no watermark, and a source
+    whose history was expired has no delta from version 0: the view's
+    first refresh (and its first continuous run) builds it from the
+    source snapshot, so it still yields the recomputed aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
     src = catalog.get_or_create_table("li", li.schema)
     src.append(li.where(F.col("l_orderkey") % 2 == 0))
@@ -235,6 +232,33 @@ def test_new_view_builds_over_expired_source_history(
     )
     q.awaitTermination(120)
     _assert_matches(cont, spark, src)
+
+
+def test_full_refresh_pins_the_source_version_it_records(
+    spark, catalog, sf_dir, monkeypatch
+):
+    """A source commit that lands between ``full_refresh`` taking the
+    source head and reading the snapshot is not folded into the view
+    under the older watermark: the next refresh folds it exactly once."""
+    li = load_table(spark, sf_dir, "lineitem")
+    src = catalog.get_or_create_table("li", li.schema)
+    src.append(li.where(F.col("l_orderkey") % 2 == 0))
+    view = _view(catalog)
+    pinned = src.version()
+    head = view.source.version
+
+    def head_then_commit():
+        v = head()
+        monkeypatch.undo()
+        src.append(li.where(F.col("l_orderkey") % 2 == 1))
+        return v
+
+    monkeypatch.setattr(view.source, "version", head_then_commit)
+    view.full_refresh(spark)
+    assert view.maintained_version() == pinned
+    assert src.version() == pinned + 1
+    view.refresh(spark)
+    _assert_matches(view, spark, src)
 
 
 def test_approx_distinct_sketch_state(spark, catalog, sf_dir):
@@ -387,19 +411,10 @@ def test_view_maintains_over_upsert_source_via_change_feed(
         for k in set(got) - set(live):
             assert got[k][1] == 0
 
-    # a view with a non-retractable agg, built before the upserts
-    minview = IncrementalAggView(
-        catalog,
-        source="li_cdc",
-        name="li_cdc_min",
-        group_by=["l_returnflag"],
-        aggs={"min_qty": AggSpec("min", "l_quantity")},
-    )
     # wave 1: plain append
     src.append(li.where(F.col("l_orderkey") % 2 == 0))
     view.refresh(spark)
     check()
-    minview.refresh(spark)
     # wave 2: upsert — half the existing rows change quantity, new rows
     # arrive (odd orderkeys)
     updates = (
@@ -414,7 +429,14 @@ def test_view_maintains_over_upsert_source_via_change_feed(
     src.delete(spark, {"l_orderkey": (None, 500)}, change_feed=True)
     view.refresh(spark)
     check()
-    # the non-retractable view refuses the merge delta
+    # a view with a non-retractable agg refuses the merge delta
+    minview = IncrementalAggView(
+        catalog,
+        source="li_cdc",
+        name="li_cdc_min",
+        group_by=["l_returnflag"],
+        aggs={"min_qty": AggSpec("min", "l_quantity")},
+    )
     with pytest.raises(ValueError):
         minview.refresh(spark)
     # ... and full_refresh remains its escape hatch
@@ -666,11 +688,6 @@ def test_view_refresh_across_source_schema_evolution(spark, catalog, sf_dir):
         if r["n"] > 0
     }
     assert got == exp
-    # the view's first build read the snapshot; the change files staged
-    # before the evolution still read with NULL for the new column in
-    # the delta an incremental refresh over this range folds
-    cdf = src.read_changes(spark, after=0, cdf=True)
-    assert cdf.where(F.col("bonus").isNotNull()).count() == nat.count()
 
 
 def test_approx_top_k_misra_gries_state(spark, catalog):
