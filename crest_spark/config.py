@@ -39,6 +39,14 @@ Example:
                                # WAP staged commit for audit)
         lineage: false         # true = stamp _source_file/_ingest_batch
                                # provenance columns on every row
+      - name: vectors          # maintained ANN index (append mode only):
+        path: /staging/emb     # each spec is passed through unchanged
+        indexes:               # as a SourceSpec.indexes dict (snake_case
+          - kind: ivf          # keys, see SourceSpec); drift rebuilds
+            name: emb_ivf      # run from `cli maintain` or from the
+            id_col: vec_id     # maintenance block below
+            vec_col: embedding
+            recluster_threshold: 0.5
       - name: user_latest      # CDC upsert target: one row per key,
         path: /staging/users   # latest change wins (sequence-conditioned
         mode: upsert           # merge; convergent under replay)
@@ -64,6 +72,10 @@ Example:
       - name: views            # Arrow Flight ingress (the reference's
         flight: grpc://host:port   # flight.servers entry, config.go:29-33)
         flightPrefix: events/  # descriptor-path filter (view selection)
+    maintenance:
+      rebuildIntervalSeconds: 300   # optional: in-process drift-rebuild
+                                    # sweeps over the sources' ivf/ivfpq
+                                    # indexes (absent = `cli maintain` only)
     compaction:
       afterFiles: 32
       targetFiles: 4
@@ -162,6 +174,7 @@ def load_config(path: str) -> EngineConfig:
             ),
             on_batch_violation=s.get("onBatchViolation", "fail"),
             lineage=bool(s.get("lineage", False)),
+            indexes=s.get("indexes"),
         )
         for s in raw.get("sources", [])
     ]

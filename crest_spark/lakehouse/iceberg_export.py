@@ -51,7 +51,7 @@ import struct
 import uuid
 
 from . import avro_io
-from .table import LakehouseTable, Snapshot
+from .table import LakehouseTable, Snapshot, _input_path, _tag_by_file
 
 _NS_UUID = uuid.UUID("a53437a2-97c5-4a62-a56b-8f6e3f9a3b11")  # arbitrary, fixed
 
@@ -535,14 +535,11 @@ def _materialize_position_deletes(
     if not files or not (state.get("deletes") or []):
         return []
     schema = StructType.fromJson(json.loads(state["schema"]))
-    decoded = F.url_decode(
-        F.regexp_replace(F.input_file_name(), r"\+", "%2B")
-    )
     base = (
         spark.read.schema(schema)
         .option("mergeSchema", "false")
         .parquet(*files)
-        .withColumn("__pd_path", decoded)
+        .withColumn("__pd_path", _input_path())
         .withColumn("__pd_pos", F.col("_metadata.row_index"))
     )
     surviving = table._apply_pending_deletes(spark, base, files, state)
@@ -1811,20 +1808,11 @@ def read_iceberg(
             "fields"
         ]
     }
-    decoded = F.url_decode(
-        F.regexp_replace(F.input_file_name(), r"\+", "%2B")
-    )
-    seq_map = spark.createDataFrame(
-        [(f"file://{os.path.abspath(p)}", int(sq)) for p, sq in file_seq.items()],
-        "__ice_path string, __ice_seq long",
-    )
     if pos_deletes and "__ice_pos" not in out.columns:
         out = out.withColumn("__ice_pos", F.col("_metadata.row_index"))
-    out = (
-        out.withColumn("__ice_path", decoded)
-        .join(F.broadcast(seq_map), "__ice_path", "left")
-        .withColumn("__ice_seq", F.coalesce(F.col("__ice_seq"), F.lit(0)))
-    )
+    out = _tag_by_file(
+        spark, out, file_seq, "__ice_path", "__ice_seq"
+    ).withColumn("__ice_seq", F.coalesce(F.col("__ice_seq"), F.lit(0)))
     for seq, ids_, paths in eq_deletes:
         keys = [field_names[i] for i in ids_]
         dd = (

@@ -76,6 +76,7 @@ import operator
 import os
 import time
 import uuid
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -166,6 +167,61 @@ _NULLS_KEY = "__nulls__"  # reserved per-file stats slot: column null counts
 # current columns the file predates (drop + re-add), which it reads as
 # all NULL — so no bounded range admits the file on them
 _UNBORN_KEY = "__unborn__"
+_ABSENT = object()
+
+
+class _VintageStats(Mapping):
+    """One file's recorded stats seen under CURRENT column names,
+    re-keyed on lookup: ``phys`` maps each current column to its
+    physical name in the file's vintage, and only the columns a caller
+    asks for are mapped — a pruning call pays for its predicate columns,
+    not for the whole schema. The Bloom and null-count slots are views
+    of the same kind; ``_UNBORN_KEY`` lists the current columns the
+    file predates. ``get``/``in`` are direct (no KeyError round trip):
+    they run once per file and predicate column."""
+
+    __slots__ = ("_st", "_phys", "_unborn")
+
+    def __init__(self, st: dict, phys: dict, unborn: list):
+        self._st, self._phys, self._unborn = st, phys, unborn
+
+    def get(self, key, default=None):
+        if key == _UNBORN_KEY:
+            return self._unborn or default
+        if key == _BLOOM_KEY or key == _NULLS_KEY:
+            sub = self._st.get(key)
+            return _VintageStats(sub, self._phys, []) if sub else default
+        p = self._phys.get(key)
+        return default if p is None else self._st.get(p, default)
+
+    def __contains__(self, key) -> bool:
+        return self.get(key, _ABSENT) is not _ABSENT
+
+    def __getitem__(self, key):
+        v = self.get(key, _ABSENT)
+        if v is _ABSENT:
+            raise KeyError(key)
+        return v
+
+    def __iter__(self):
+        yield from (c for c, p in self._phys.items() if p in self._st)
+        yield from (k for k in (_BLOOM_KEY, _NULLS_KEY) if self._st.get(k))
+        if self._unborn:
+            yield _UNBORN_KEY
+
+    def __len__(self) -> int:
+        return sum(1 for _ in self)
+
+    def __bool__(self) -> bool:
+        # ``fstats.get(_BLOOM_KEY) or {}`` runs per file: one C-level
+        # overlap test instead of counting the mapped columns
+        return (
+            bool(self._unborn)
+            or not self._st.keys().isdisjoint(self._phys.values())
+            or any(self._st.get(k) for k in (_BLOOM_KEY, _NULLS_KEY))
+        )
+
+
 # Pending-delta key sets at or under this many recorded keys apply via a
 # broadcast join at scan time (hot-key CDC: thousands of keys, a few MB);
 # above it — a backfill-scale merge routed to MoR — the anti-join falls
@@ -238,6 +294,39 @@ def _recorded_pred(d: dict) -> dict:
     tuples (the log records each ``(lo, hi)`` as a JSON list), so the
     stats check and the row filter judge it the same way."""
     return {c: tuple(b) for c, b in d["pred"].items()}
+
+
+def _input_path() -> Column:
+    """The raw path of the file each row was read from.
+    ``input_file_name()`` returns a percent-encoded URI (space -> %20,
+    non-ASCII -> UTF-8 escapes) while the log holds raw paths, so it is
+    decoded; ``url_decode`` is form-decoding ('+' -> space), so a
+    literal '+' is shielded first — Java's URI encoder never emits a
+    bare '+' for anything else."""
+    return F.url_decode(F.regexp_replace(F.input_file_name(), r"\+", "%2B"))
+
+
+def _tag_by_file(
+    spark: SparkSession,
+    df: DataFrame,
+    values: dict,
+    path_col: str,
+    value_col: str,
+) -> DataFrame:
+    """``df`` plus ``path_col`` (``_input_path()``) and ``value_col``:
+    the long ``values[p]`` of the file ``p`` each row was read from,
+    NULL for a file ``values`` does not name. The map is broadcast and
+    left-joined on ``file://<abspath>``. The one file tagger of the
+    pending-delete sequence numbers, the change feed's
+    ``_commit_version`` and the Iceberg reader's data sequence numbers:
+    a drifted copy would silently miss rows."""
+    vmap = spark.createDataFrame(
+        [(f"file://{os.path.abspath(p)}", int(v)) for p, v in values.items()],
+        f"{path_col} string, {value_col} long",
+    )
+    return df.withColumn(path_col, _input_path()).join(
+        F.broadcast(vmap), path_col, "left"
+    )
 
 
 def _require_range_predicates(predicates: dict, verb: str) -> None:
@@ -2939,19 +3028,14 @@ class LakehouseTable:
         if not dels or not files:
             return df
         fseq = state.get("file_seq") or {}
-        decoded = F.url_decode(
-            F.regexp_replace(F.input_file_name(), r"\+", "%2B")
-        )
-        seq_map = spark.createDataFrame(
-            [
-                (f"file://{os.path.abspath(p)}", int(fseq.get(p, 0)))
-                for p in files
-            ],
-            "__crest_path string, __crest_seq long",
-        )
         out = (
-            df.withColumn("__crest_path", decoded)
-            .join(F.broadcast(seq_map), "__crest_path", "left")
+            _tag_by_file(
+                spark,
+                df,
+                {p: fseq.get(p, 0) for p in files},
+                "__crest_path",
+                "__crest_seq",
+            )
             .drop("__crest_path")
             .withColumn(
                 "__crest_seq", F.coalesce(F.col("__crest_seq"), F.lit(0))
@@ -3014,21 +3098,11 @@ class LakehouseTable:
                         (tuple(d["keys"]), d.get("key_schema")), []
                     ).append(d)
             for (keys, stored), group in eq_groups.items():
-                all_paths = [p for d in group for p in d["paths"]]
-                dmap = spark.createDataFrame(
-                    [
-                        (f"file://{os.path.abspath(p)}", int(d["seq"]))
-                        for d in group
-                        for p in d["paths"]
-                    ],
-                    "__crest_path string, __crest_dseq long",
-                )
-                raw, sel = read_delete_files(all_paths, list(keys), stored)
-                dd = (
-                    raw.withColumn("__crest_path", decoded)
-                    .join(F.broadcast(dmap), "__crest_path", "left")
-                    .select(*sel, F.col("__crest_dseq"))
-                )
+                dseq = {p: d["seq"] for d in group for p in d["paths"]}
+                raw, sel = read_delete_files(list(dseq), list(keys), stored)
+                dd = _tag_by_file(
+                    spark, raw, dseq, "__crest_path", "__crest_dseq"
+                ).select(*sel, F.col("__crest_dseq"))
                 cond = F.col("__crest_dseq") >= F.col("__crest_seq")
                 for k in keys:
                     cond = cond & (F.col(k) == F.col(f"__crest_k_{k}"))
@@ -4159,24 +4233,9 @@ class LakehouseTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        vmap = spark.createDataFrame(
-            [(f"file://{p}", v) for p, v in ver_of.items()],
-            "_cdf_path string, _commit_version long",
-        )
-        # input_file_name() returns a percent-encoded URI (space -> %20,
-        # non-ASCII -> UTF-8 escapes); the map side holds raw paths, so
-        # decode the Spark side before joining or any warehouse path with
-        # such characters silently leaves _commit_version NULL. url_decode
-        # is form-decoding ('+' -> space), so shield literal '+' first —
-        # Java's URI encoder never emits a bare '+' for anything else.
-        decoded = F.url_decode(
-            F.regexp_replace(F.input_file_name(), r"\+", "%2B")
-        )
-        return (
-            out.withColumn("_cdf_path", decoded)
-            .join(F.broadcast(vmap), "_cdf_path", "left")
-            .drop("_cdf_path")
-        )
+        return _tag_by_file(
+            spark, out, ver_of, "_cdf_path", "_commit_version"
+        ).drop("_cdf_path")
 
     # ------------------------------------------------------------------ refs
     @property
@@ -4665,7 +4724,7 @@ class LakehouseTable:
                     return None
         return n
 
-    def _file_stats(self, state: dict, f: str) -> dict:
+    def _file_stats(self, state: dict, f: str) -> Mapping:
         """Per-file pruning stats re-keyed to CURRENT column names by
         the file's vintage (files written before a rename recorded
         their min/max, Bloom filters, and null counts under the OLD
@@ -4709,22 +4768,14 @@ class LakehouseTable:
             m = {
                 p: self._vintage_source(p, events, vf) for p in all_paths
             }
-            pairs = [(c, p) for c, p in m.items() if p is not None]
+            phys = {c: p for c, p in m.items() if p is not None}
             unborn = [c for c, p in m.items() if p is None]
-            same = not unborn and all(c == p for c, p in pairs)
-            hit = cache[vf] = (None if same else pairs, unborn)
-        pairs, unborn = hit
-        if pairs is None:
+            same = not unborn and all(c == p for c, p in phys.items())
+            hit = cache[vf] = (None if same else phys, unborn)
+        phys, unborn = hit
+        if phys is None:
             return st  # the vintage reads every column by its own name
-        out: dict = {cur: st[phys] for cur, phys in pairs if phys in st}
-        for slot in (_BLOOM_KEY, _NULLS_KEY):
-            sub = st.get(slot)
-            tsub = {c: sub[p] for c, p in pairs if p in sub} if sub else None
-            if tsub:
-                out[slot] = tsub
-        if unborn:
-            out[_UNBORN_KEY] = unborn
-        return out
+        return _VintageStats(st, phys, unborn)
 
     def _read_files(
         self,

@@ -687,14 +687,13 @@ def embedding_cosine_pairs(
 
     Plan (nothing ever lands on the driver):
       1. one ``count()`` fixes the block count B = ceil(N / block_rows);
-      2. each vector hashes to a block; ``applyInPandas`` packs every
-         block into ONE row (ids array + row-normalized float64 matrix
-         bytes) — corpus shrinks to B fat rows;
-      3. a tiny (blk_a <= blk_b) pair-index DataFrame equi-joins the
-         packed blocks twice, so each task holds exactly two blocks;
-      4. ``mapInPandas`` runs one (R x D)@(D x R) GEMM per block pair
-         and emits only pairs above (threshold - margin); the
-         authoritative rounded filter runs Catalyst-side after.
+      2. each vector hashes to a block (``block_key``); ``block_pairs``
+         packs every block into ONE row and joins the packed blocks
+         through a tiny (blk_a <= blk_b) pair index, so each task holds
+         exactly two blocks;
+      3. each block pair's (R x D)@(D x R) GEMM emits only pairs above
+         (threshold - margin); the authoritative rounded filter runs
+         Catalyst-side after.
 
     Exact all-pairs is inherently O(N^2/block_rows) block pairs — each
     block is shuffled ~B/2 times, which IS the data-movement lower bound
@@ -705,7 +704,6 @@ def embedding_cosine_pairs(
     (blk_a <= blk_b) index, so every unordered pair scores exactly once.
     """
     import math
-    from typing import Iterator
 
     import numpy as np
     import pandas as pd
@@ -730,11 +728,77 @@ def embedding_cosine_pairs(
     else:
         n_blocks = max(1, math.ceil(n / block_rows))
 
-    blocked = em.select(
-        "vec_id",
-        "embedding",
-        F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int").alias("blk"),
+    margin = threshold - 1e-4  # coarse prefilter; rounded filter is final
+
+    def above(ids_a, ids_b, sims, same_block):
+        if same_block:
+            # upper triangle only: each same-block pair once
+            sims = np.where(
+                np.arange(len(ids_a))[:, None] < np.arange(len(ids_b)),
+                sims,
+                -np.inf,
+            )
+        ai, bj = np.nonzero(sims >= margin)
+        if len(ai) == 0:
+            return
+        va, vb, s = ids_a[ai], ids_b[bj], sims[ai, bj]
+        lo = np.minimum(va, vb)
+        hi = np.maximum(va, vb)
+        keep = lo < hi  # drop self-pairs from id hash collisions
+        yield pd.DataFrame(
+            {"vec_a": lo[keep], "vec_b": hi[keep], "cos_raw": s[keep]}
+        )
+
+    pairs = block_pairs(
+        spark,
+        em.select("vec_id", "embedding", block_key(n_blocks).alias("blk")),
+        n_blocks,
+        above,
+        "vec_a long, vec_b long, cos_raw double",
     )
+    return (
+        pairs.select("vec_a", "vec_b", F.expr(round4("cos_raw")).alias("cos_sim"))
+        .where(F.col("cos_sim") >= threshold)
+        .orderBy("vec_a", "vec_b")
+    )
+
+
+def block_key(n_blocks: int):
+    """The block a vector hashes to: pmod(xxhash64(vec_id), n_blocks)."""
+    return F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
+
+
+def block_pairs(
+    spark: SparkSession,
+    blocked: DataFrame,
+    n_blocks: int,
+    score,
+    schema: str,
+) -> DataFrame:
+    """The one block-pair planner of the exact cosine kernels
+    (``embedding_cosine_pairs`` and ``knn_self_join_topk``): every
+    unordered block pair of ``blocked`` (vec_id, embedding, blk =
+    ``block_key(n_blocks)``) meets in exactly one task, as one GEMM.
+
+      1. ``applyInPandas`` packs every block into ONE row (ids array +
+         row-normalized float64 matrix bytes) — the corpus shrinks to
+         ``n_blocks`` fat rows;
+      2. one block pairs with itself, no join machinery at all; more
+         join through a (blk_a <= blk_b) index built DISTRIBUTED via
+         ``spark.range`` — a driver-side Python list is B(B+1)/2 tuples
+         (1.2e9 at B=50k blocks), this is two lazy range scans;
+      3. ``mapInPandas`` unpacks each pair row and yields from
+         ``score(ids_a, ids_b, sims, same_block)``, ``sims`` being the
+         (|a| x |b|) cosine matrix; the frames it yields have
+         ``schema``.
+
+    Callers keep their own block count and their own scoring, and
+    attach the ``blk`` column themselves (``select`` or ``withColumn``),
+    so each keeps the parsed plan it shows."""
+    from typing import Iterator
+
+    import numpy as np
+    import pandas as pd
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
@@ -752,9 +816,7 @@ def embedding_cosine_pairs(
     packed = blocked.groupBy("blk").applyInPandas(
         pack, "blk int, ids array<long>, mat binary"
     )
-
     if n_blocks == 1:
-        # one packed row: pair it with itself, no join machinery at all
         joined = packed.select(
             F.col("blk").alias("blk_a"),
             F.col("blk").alias("blk_b"),
@@ -764,9 +826,6 @@ def embedding_cosine_pairs(
             F.col("mat").alias("mat_b"),
         )
     else:
-        # upper-triangle block-pair index built DISTRIBUTED via
-        # spark.range — a driver-side Python list is B(B+1)/2 tuples
-        # (1.2e9 at B=50k blocks), this is two lazy range scans
         ra = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk_a"))
         rb = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk_b"))
         pair_idx = ra.join(rb, F.col("blk_a") <= F.col("blk_b"))
@@ -782,8 +841,6 @@ def embedding_cosine_pairs(
         )
         joined = pair_idx.join(pa, "blk_a").join(pb, "blk_b")
 
-    margin = threshold - 1e-4  # coarse prefilter; rounded filter is final
-
     def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for row in pdf.itertuples(index=False):
@@ -795,31 +852,9 @@ def embedding_cosine_pairs(
                 B = np.frombuffer(row.mat_b, dtype=np.float64).reshape(
                     len(ids_b), -1
                 )
-                sims = A @ B.T
-                if row.blk_a == row.blk_b:
-                    # upper triangle only: each same-block pair once
-                    sims = np.where(
-                        np.arange(len(ids_a))[:, None] < np.arange(len(ids_b)),
-                        sims,
-                        -np.inf,
-                    )
-                ai, bj = np.nonzero(sims >= margin)
-                if len(ai) == 0:
-                    continue
-                va, vb, s = ids_a[ai], ids_b[bj], sims[ai, bj]
-                lo = np.minimum(va, vb)
-                hi = np.maximum(va, vb)
-                keep = lo < hi  # drop self-pairs from id hash collisions
-                yield pd.DataFrame(
-                    {"vec_a": lo[keep], "vec_b": hi[keep], "cos_raw": s[keep]}
-                )
+                yield from score(ids_a, ids_b, A @ B.T, row.blk_a == row.blk_b)
 
-    pairs = joined.mapInPandas(gemm, "vec_a long, vec_b long, cos_raw double")
-    return (
-        pairs.select("vec_a", "vec_b", F.expr(round4("cos_raw")).alias("cos_sim"))
-        .where(F.col("cos_sim") >= threshold)
-        .orderBy("vec_a", "vec_b")
-    )
+    return joined.mapInPandas(gemm, schema)
 
 
 _EMB_ANN_BANDS = 8  # independent hyperplane bands; recall = 1-(1-p^w)^bands

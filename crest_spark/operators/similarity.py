@@ -1,14 +1,31 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three plans, in increasing scale posture:
+Six entries, in increasing scale posture:
 
-  q22_cosine_topk    single query vector, brute-force, pure Catalyst fold
-  ann_brute_topk     K query vectors x N corpus, Arrow/numpy matmul
-  ann_lsh_topk       random-hyperplane LSH bucketing (sub-quadratic)
+  q22_cosine_topk     single query vector, brute-force, pure Catalyst fold
+  ann_brute_topk      K query vectors x N corpus, Arrow/numpy matmul
+  ann_lsh_topk        random-hyperplane LSH bucketing (sub-quadratic)
+  ann_ivf_topk        IVF cells, refit and reassigned per call
+  knn_self_join_topk  exact top-k for EVERY vector, block-pair GEMM
+  ann_pq_topk         product-quantized ADC scan + exact re-rank
 
 At 100 TB the corpus side stays partitioned; query vectors are broadcast
 (driver-side literal or broadcast join); the numpy path processes Arrow
 batches (no per-row Python), and LSH trades recall for candidate-set size.
+
+One copy of each vector kernel, shared with the persisted IVF/IVF-PQ
+index (``vector_index.py``) and the cosine pair miner (``dedup.py``):
+
+  rank_topk          the (rounded sim DESC, id ASC) top-k tail of every
+                     entry here but q22 and of both index searches
+  pq_assign, pq_lut  PQ subspace assignment and the ADC lookup table
+  pq_rerank          ADC shortlist window + exact re-rank of the
+                     shortlist (``ann_pq_topk`` and ``ivfpq_search``)
+  ann_ivf_topk       runs on the index's centroid fit, cell assignment
+                     and probe kernels, lazily imported from
+                     ``vector_index``
+  knn_self_join_topk plans its block pairs with ``dedup.block_pairs``,
+                     the planner of ``embedding_cosine_pairs``
 """
 
 from __future__ import annotations
@@ -26,11 +43,37 @@ from crest_spark.functions.vectors import cosine_sim
 from crest_spark.registry import register
 from crest_spark.sources.tables import load_table
 
-from crest_spark.operators.dedup import _DUCK_COS  # shared oracle cosine
+from crest_spark.operators.dedup import (
+    _DUCK_COS,  # shared oracle cosine
+    block_key,
+    block_pairs,
+)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
+
+
+def rank_topk(
+    df: DataFrame,
+    k: int,
+    raw: str = "sim_raw",
+    by: str = "query_id",
+    item: str = "vec_id",
+) -> DataFrame:
+    """The one ranking tail of the vector entries: ``raw`` rounded to 4
+    dp as ``sim``, ``row_number`` per ``by`` over (sim DESC, ``item``
+    ASC), the first ``k`` kept as (``by``, ``item``, sim, rn) ordered by
+    (``by``, rn). Ranking on the ROUNDED sim with an id tie-break keeps
+    1e-16 float noise between engines from flipping ranks."""
+    w = Window.partitionBy(by).orderBy(F.desc("sim"), F.asc(item))
+    return (
+        df.withColumn("sim", F.expr(round4(raw)))
+        .withColumn("rn", F.row_number().over(w).cast("int"))
+        .where(F.col("rn") <= k)
+        .select(by, item, "sim", "rn")
+        .orderBy(by, "rn")
+    )
 
 
 @register(
@@ -142,16 +185,7 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield pd.concat(frames, ignore_index=True)
 
     candidates = em.select("vec_id", "embedding").mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        candidates.withColumn("sim", F.expr(round4("sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _ANN_K)
-        .select("query_id", "vec_id", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return rank_topk(candidates, _ANN_K)
 
 
 _ANN_LSH_BANDS = 4  # bands (16 signature bits reserved per band)
@@ -255,14 +289,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["query_id", "vec_id"])
         .withColumn("sim_raw", cosine_sim(F.col("qemb"), F.col("embedding")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cand.withColumn("sim", F.expr(round4("sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _ANN_K)
-        .select("query_id", "vec_id", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return rank_topk(cand, _ANN_K)
 
 
 @register("ann_ivf_topk", oracle=None, tags=("llm", "similarity", "ann", "ivf"))
@@ -275,92 +302,31 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest centroid cell in one Arrow-batched GEMM pass, and each query
     probes only its ``nprobe`` nearest cells. Candidate count scales with
     cell occupancy — the classic sub-linear ANN layout (FAISS IVF-flat
-    shape) expressed as a Spark shuffle key. Approximate => rows-only
-    driver check; pytest measures recall vs ann_brute_topk."""
-    import numpy as np
+    shape) expressed as a Spark shuffle key. Approximate => no SQL
+    oracle; pytest measures recall vs ann_brute_topk.
 
-    n_cells = 16
-    nprobe = 4
+    The fit, assignment and probe are the persisted index's own kernels
+    (``vector_index.py``: 16 cells, seed 13, a 2,000-vector sample, 4
+    probed cells); only the index table is missing."""
+    from crest_spark.operators.vector_index import (
+        IVF_CELLS,
+        IVF_NPROBE,
+        IVF_SAMPLE,
+        IVF_SEED,
+        _assign_cells,
+        _fit_centroids,
+        _probe_cells,
+        _probed_sims,
+    )
 
     em = _emb(spark, sf_dir)
-    # --- fit centroids on a seeded sample (driver-side, tiny) ---
-    sample = np.array(
-        [r[0] for r in em.select("embedding").limit(2000).collect()],
-        dtype=np.float64,
+    b_cent = spark.sparkContext.broadcast(
+        _fit_centroids(em, IVF_CELLS, IVF_SEED, IVF_SAMPLE)
     )
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(13)
-    centroids = sample[rng.choice(len(sample), n_cells, replace=False)]
-    for _ in range(5):  # Lloyd iterations
-        assign = (sample @ centroids.T).argmax(axis=1)
-        for c in range(n_cells):
-            members = sample[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                centroids[c] = v / max(np.linalg.norm(v), 1e-12)
-    b_cent = spark.sparkContext.broadcast(centroids)
-
-    # --- assign corpus vectors to cells (one GEMM per Arrow batch) ---
-    def assign_cells(batches):
-        import pandas as pd
-
-        cent = b_cent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cells = (mat @ cent.T).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": cells.astype("int32"),
-                }
-            )
-
-    assigned = em.select("vec_id", "embedding").mapInPandas(
-        assign_cells, "vec_id long, embedding array<float>, cell int"
+    queries = _probe_cells(
+        em.where(F.col("vec_id") < _N_QUERIES), b_cent, IVF_NPROBE
     )
-
-    # --- queries probe their nprobe nearest cells ---
-    def probe_cells(batches):
-        import pandas as pd
-
-        cent = b_cent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            order = np.argsort(-(mat @ cent.T), axis=1)[:, :nprobe]
-            rows = {"query_id": [], "qemb": [], "cell": []}
-            for i in range(len(pdf)):
-                for c in order[i]:
-                    rows["query_id"].append(pdf["vec_id"].iloc[i])
-                    rows["qemb"].append(pdf["embedding"].iloc[i])
-                    rows["cell"].append(int(c))
-            yield pd.DataFrame(rows)
-
-    queries = (
-        em.where(F.col("vec_id") < _N_QUERIES)
-        .select("vec_id", "embedding")
-        .mapInPandas(probe_cells, "query_id long, qemb array<float>, cell int")
-    )
-
-    cand = (
-        queries.join(assigned, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim_raw", cosine_sim(F.col("qemb"), F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cand.withColumn("sim", F.expr(round4("sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _ANN_K)
-        .select("query_id", "vec_id", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return rank_topk(_probed_sims(queries, _assign_cells(em, b_cent)), _ANN_K)
 
 
 _KNN_K = 3  # neighbors per corpus vector
@@ -405,12 +371,13 @@ def knn_self_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering, graph-based semantic dedup, diversity sampling) — where
     ann_brute_topk ranks a fixed query set, this ranks all N.
 
-    Plan: vectors pack into row-normalized float64 blocks (one
-    applyInPandas per block, corpus becomes B fat rows); an upper-
-    triangle block-pair index joins them; each pair runs ONE GEMM and
-    emits per-row partial top-(k+slack) candidates in BOTH
-    directions (argpartition, no full sort); the global per-src window
-    then ranks ~B*(k+slack) candidates per vector instead of N. The
+    Plan (``dedup.block_pairs``, the planner of
+    ``embedding_cosine_pairs``): vectors pack into row-normalized
+    float64 blocks (one applyInPandas per block, corpus becomes B fat
+    rows); an upper-triangle block-pair index joins them; each pair
+    runs ONE GEMM and emits per-row partial top-(k+slack) candidates
+    in BOTH directions (argpartition, no full sort); the global per-src
+    window then ranks ~B*(k+slack) candidates per vector instead of N. The
     slack mirrors ann_brute_topk's margin: the final order is on
     ROUNDED sim with id tie-break, so the raw-precision partial cut
     must keep any candidate that could tie at the boundary after
@@ -421,58 +388,9 @@ def knn_self_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``dedup.py``)."""
     import math
 
-    import numpy as np
-
     em = _emb(spark, sf_dir).select("vec_id", "embedding")
     n = em.count()
     n_blocks = max(1, math.ceil(n / 2048))
-    blocked = em.withColumn(
-        "blk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        mat /= norms
-        return pd.DataFrame(
-            {
-                "blk": [int(pdf["blk"].iloc[0])],
-                "ids": [pdf["vec_id"].to_numpy().tolist()],
-                "mat": [mat.tobytes()],
-            }
-        )
-
-    packed = blocked.groupBy("blk").applyInPandas(
-        pack, "blk int, ids array<long>, mat binary"
-    )
-    if n_blocks == 1:
-        joined = packed.select(
-            F.col("blk").alias("blk_a"),
-            F.col("blk").alias("blk_b"),
-            F.col("ids").alias("ids_a"),
-            F.col("mat").alias("mat_a"),
-            F.col("ids").alias("ids_b"),
-            F.col("mat").alias("mat_b"),
-        )
-    else:
-        ra = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk_a"))
-        rb = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk_b"))
-        pair_idx = ra.join(rb, F.col("blk_a") <= F.col("blk_b"))
-        pa = packed.select(
-            F.col("blk").alias("blk_a"),
-            F.col("ids").alias("ids_a"),
-            F.col("mat").alias("mat_a"),
-        )
-        pb = packed.select(
-            F.col("blk").alias("blk_b"),
-            F.col("ids").alias("ids_b"),
-            F.col("mat").alias("mat_b"),
-        )
-        joined = pair_idx.join(pa, "blk_a").join(pb, "blk_b")
-
     keep = _KNN_K + _KNN_SLACK
 
     def topk_rows(
@@ -494,33 +412,19 @@ def knn_self_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"src": rows[good], "dst": cols[good], "sim_raw": vals[good]}
         )
 
-    def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def both_ways(ids_a, ids_b, sims, same_block):
+        yield topk_rows(ids_a, ids_b, sims)
+        if not same_block:
+            yield topk_rows(ids_b, ids_a, sims.T)
 
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a, dtype=np.int64)
-                ids_b = np.asarray(row.ids_b, dtype=np.int64)
-                A = np.frombuffer(row.mat_a, dtype=np.float64).reshape(
-                    len(ids_a), -1
-                )
-                B = np.frombuffer(row.mat_b, dtype=np.float64).reshape(
-                    len(ids_b), -1
-                )
-                sims = A @ B.T
-                yield topk_rows(ids_a, ids_b, sims)
-                if row.blk_a != row.blk_b:
-                    yield topk_rows(ids_b, ids_a, sims.T)
-
-    cands = joined.mapInPandas(gemm, "src long, dst long, sim_raw double")
-    w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    return (
-        cands.withColumn("sim", F.expr(round4("sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _KNN_K)
-        .select("src", "dst", "sim", "rn")
-        .orderBy("src", "rn")
+    cands = block_pairs(
+        spark,
+        em.withColumn("blk", block_key(n_blocks)),
+        n_blocks,
+        both_ways,
+        "src long, dst long, sim_raw double",
     )
+    return rank_topk(cands, _KNN_K, by="src", item="dst")
 
 
 # --------------------------------------------------------------- PQ ANN
@@ -556,8 +460,7 @@ def fit_pq_codebooks(X, m: int, k: int, iters: int, seed: int = 7):
         sub = np.ascontiguousarray(X[:, j * dsub : (j + 1) * dsub])
         C = sub[rng.choice(len(sub), k, replace=False)]
         for _ in range(iters):
-            # ||x-c||^2 up to the x^2 constant: argmin(c^2 - 2xc)
-            assign = ((C**2).sum(1)[None, :] - 2.0 * (sub @ C.T)).argmin(1)
+            assign = pq_assign(sub, C)
             sums = np.zeros((k, dsub))
             np.add.at(sums, assign, sub)
             counts = np.bincount(assign, minlength=k)
@@ -565,6 +468,79 @@ def fit_pq_codebooks(X, m: int, k: int, iters: int, seed: int = 7):
             C[nz] = sums[nz] / counts[nz, None]
         books[j] = C
     return books
+
+
+def pq_assign(sub, book):
+    """Nearest code of every row of ``sub`` in one subspace codebook
+    ``book`` (k x dsub): ||x-c||^2 up to the x^2 constant, i.e.
+    argmin(c^2 - 2xc). The one assignment expression of the codebook
+    fit, the flat PQ encode and the IVF-PQ residual encode."""
+    return ((book**2).sum(1)[None, :] - 2.0 * (sub @ book.T)).argmin(1)
+
+
+def pq_lut(books, q):
+    """ADC lookup table of one unit query (or query residual) ``q``
+    against (m, k, dsub) ``books``: lut[j, code] = ||q_j - books[j,
+    code]||^2 for each subspace j, so a code row's distance estimate is
+    m table gathers + a sum."""
+    import numpy as np
+
+    m, _k, dsub = books.shape
+    return np.stack(
+        [
+            ((books[j] - q[j * dsub : (j + 1) * dsub][None, :]) ** 2).sum(1)
+            for j in range(m)
+        ]
+    )
+
+
+def unit_queries(queries: DataFrame):
+    """(ids, unit-normalized float64 matrix) of a small query set,
+    collected driver-side for the ADC lookup tables."""
+    import numpy as np
+
+    qrows = queries.select("vec_id", "embedding").collect()
+    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
+    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
+    # axis=-1: an empty query set is a (0,) array, not (0, dim)
+    q_mat /= np.clip(np.linalg.norm(q_mat, axis=-1, keepdims=True), 1e-12, None)
+    return q_ids, q_mat
+
+
+def pq_rerank(
+    spark: SparkSession,
+    cand: DataFrame,
+    em: DataFrame,
+    q_ids,
+    q_mat,
+    shortlist: int,
+    k: int,
+) -> DataFrame:
+    """ADC shortlist + EXACT re-rank: keep each query's ``shortlist``
+    lowest distance estimates of ``cand`` (query_id, vec_id, est;
+    vec_id tie-break), fetch ONLY those vectors from ``em`` (a
+    semi-join-sized read), score true cosine against the broadcast
+    query matrix and rank top-``k`` — reported sims are exact and
+    deterministic. Shared by ``ann_pq_topk`` and ``ivfpq_search``."""
+    wq = Window.partitionBy("query_id").orderBy(F.asc("est"), F.asc("vec_id"))
+    short = (
+        cand.withColumn("_r0", F.row_number().over(wq))
+        .where(F.col("_r0") <= shortlist)
+        .select("query_id", "vec_id")
+    )
+    qdf = spark.createDataFrame(
+        [(int(q_ids[i]), [float(x) for x in q_mat[i]]) for i in range(len(q_ids))],
+        "query_id long, qemb array<double>",
+    )
+    rer = (
+        short.join(em.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(qdf), "query_id")
+        .withColumn(
+            "_sim_raw",
+            cosine_sim(F.col("embedding").cast("array<double>"), F.col("qemb")),
+        )
+    )
+    return rank_topk(rer, k, raw="_sim_raw")
 
 
 @register("ann_pq_topk", oracle=None, tags=("llm", "similarity", "ann", "pq"))
@@ -612,7 +588,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsub = dim // m
     k = int(min(256, max(16, len(X) // 8)))
     books = fit_pq_codebooks(X, m, k, _PQ_ITERS, seed=7)
-    k = books.shape[1]  # fit clamps k to the sample when tiny
     code_cols = ", ".join(f"c{j} int" for j in range(m))
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -628,9 +603,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy()})
             for j in range(m):
                 sub = mat[:, j * dsub : (j + 1) * dsub]
-                out[f"c{j}"] = (
-                    (books[j] ** 2).sum(1)[None, :] - 2.0 * (sub @ books[j].T)
-                ).argmin(1).astype(np.int32)
+                out[f"c{j}"] = pq_assign(sub, books[j]).astype(np.int32)
             yield out
 
     # The codes relation has exactly ONE consumer (the ADC scan below), so
@@ -645,20 +618,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode, f"vec_id long, {code_cols}"
     )
 
-    qrows = (
-        em.where(F.col("vec_id") < _N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_mat /= np.clip(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12, None)
+    q_ids, q_mat = unit_queries(em.where(F.col("vec_id") < _N_QUERIES))
     # ADC tables: luts[qi, j, code] = ||q_sub - c||^2 for that subspace
-    luts = np.empty((len(q_ids), m, k), dtype=np.float64)
-    for qi in range(len(q_ids)):
-        for j in range(m):
-            qsub = q_mat[qi, j * dsub : (j + 1) * dsub]
-            luts[qi, j] = ((books[j] - qsub[None, :]) ** 2).sum(1)
+    luts = np.array([pq_lut(books, q) for q in q_mat])
     shortlist = _ANN_K * _PQ_RERANK
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -687,31 +649,4 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield pd.concat(frames, ignore_index=True)
 
     cand = codes.mapInPandas(adc, "query_id long, vec_id long, est double")
-    wq = Window.partitionBy("query_id").orderBy(F.asc("est"), F.asc("vec_id"))
-    short = (
-        cand.withColumn("_r0", F.row_number().over(wq))
-        .where(F.col("_r0") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    # exact re-rank: fetch ONLY the shortlist vectors (semi-join-sized),
-    # score against the broadcast query matrix, rank on rounded cosine
-    qdf = spark.createDataFrame(
-        [(int(q_ids[i]), [float(x) for x in q_mat[i]]) for i in range(len(q_ids))],
-        "query_id long, qemb array<double>",
-    )
-    rer = (
-        short.join(em.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .withColumn(
-            "_sim_raw",
-            cosine_sim(F.col("embedding").cast("array<double>"), F.col("qemb")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rer.withColumn("sim", F.expr(round4("_sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _ANN_K)
-        .select("query_id", "vec_id", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return pq_rerank(spark, cand, em, q_ids, q_mat, shortlist, _ANN_K)

@@ -16,14 +16,23 @@ isolation: searchers on the old snapshot keep their index).
 Build cost is one corpus pass (assignment GEMM, Arrow-batched) after an
 O(sample) driver-side k-means fit — the same split FAISS uses (train on
 a sample, add in bulk).
+
+The flat entries borrow this module's kernels and lend theirs:
+``ann_ivf_topk`` fits, assigns and probes with ``_fit_centroids``,
+``_assign_cells``, ``_probe_cells`` and ``_probed_sims`` (SemDeDup's
+``dedup_semantic_clusters`` clusters with the first two), while both
+searches here rank with ``similarity.rank_topk`` and the IVF-PQ index
+encodes, builds its lookup tables and re-ranks with
+``similarity.pq_assign``/``pq_lut``/``pq_rerank`` — the kernels of the
+flat ``ann_pq_topk``. Each is imported lazily, so registration order
+is unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crest_spark.functions.stable import round4
 from crest_spark.functions.vectors import cosine_sim
 from crest_spark.lakehouse.catalog import LakehouseCatalog
 from crest_spark.lakehouse.table import LakehouseTable
@@ -87,7 +96,7 @@ def _assign_cells(em: DataFrame, b_cent) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    def assign(batches):
+    def assign_cells(batches):
         cent = b_cent.value
         for pdf in batches:
             if pdf.empty:
@@ -105,7 +114,48 @@ def _assign_cells(em: DataFrame, b_cent) -> DataFrame:
             )
 
     return em.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id long, embedding array<float>, cell int"
+        assign_cells, "vec_id long, embedding array<float>, cell int"
+    )
+
+
+def _probe_cells(queries: DataFrame, b_cent, nprobe: int) -> DataFrame:
+    """(query_id, qemb, cell): each query (vec_id, embedding) fanned out
+    to its ``nprobe`` nearest (frozen, broadcast) centroids — one GEMM
+    per Arrow batch."""
+    import numpy as np
+    import pandas as pd
+
+    def probe_cells(batches):
+        cent = b_cent.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            mat /= np.maximum(
+                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
+            )
+            order = np.argsort(-(mat @ cent.T), axis=1)[:, :nprobe]
+            rows = {"query_id": [], "qemb": [], "cell": []}
+            for i in range(len(pdf)):
+                for c in order[i]:
+                    rows["query_id"].append(pdf["vec_id"].iloc[i])
+                    rows["qemb"].append(pdf["embedding"].iloc[i])
+                    rows["cell"].append(int(c))
+            yield pd.DataFrame(rows)
+
+    return queries.select("vec_id", "embedding").mapInPandas(
+        probe_cells, "query_id long, qemb array<float>, cell int"
+    )
+
+
+def _probed_sims(probes: DataFrame, cells: DataFrame) -> DataFrame:
+    """Exact cosine ``sim_raw`` of every (query, vector) pair that shares
+    a probed cell: ``probes`` from ``_probe_cells`` joined on ``cell``
+    to (vec_id, embedding, cell) rows, self-pairs dropped."""
+    return (
+        probes.join(cells, "cell")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .withColumn("sim_raw", cosine_sim(F.col("qemb"), F.col("embedding")))
     )
 
 
@@ -578,33 +628,11 @@ def ivf_index_search(
     its ``nprobe`` nearest cells — read via ``scan`` so files of
     unprobed cells are never opened. Exact cosine + deterministic
     (sim DESC, vec_id) top-k within the probed candidate set."""
-    import numpy as np
-    import pandas as pd
+    from crest_spark.operators.similarity import rank_topk
 
     centroids, _ = load_ivf_centroids(t)
     b_cent = spark.sparkContext.broadcast(centroids)
-
-    def probe(batches):
-        cent = b_cent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mat /= np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
-            order = np.argsort(-(mat @ cent.T), axis=1)[:, :nprobe]
-            rows = {"query_id": [], "qemb": [], "cell": []}
-            for i in range(len(pdf)):
-                for c in order[i]:
-                    rows["query_id"].append(pdf["vec_id"].iloc[i])
-                    rows["qemb"].append(pdf["embedding"].iloc[i])
-                    rows["cell"].append(int(c))
-            yield pd.DataFrame(rows)
-
-    probes = queries.select("vec_id", "embedding").mapInPandas(
-        probe, "query_id long, qemb array<float>, cell int"
-    )
+    probes = _probe_cells(queries, b_cent, nprobe)
     probed_cells = sorted(
         {r["cell"] for r in probes.select("cell").distinct().collect()}
     )
@@ -619,23 +647,7 @@ def ivf_index_search(
     # file skipping still opens only files whose stats admit some
     # probed cell value.
     cand = t.scan(spark, {"cell": probed_cells})
-    scored = (
-        probes.join(cand, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "sim_raw", cosine_sim(F.col("qemb"), F.col("embedding"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("sim", F.expr(round4("sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= k)
-        .select("query_id", "vec_id", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return rank_topk(_probed_sims(probes, cand), k)
 
 
 # ------------------------------------------------------------------ IVF-PQ
@@ -717,7 +729,7 @@ def build_ivfpq_index(
     resolution within cells instead of across the whole space.
 
     Both halves already existed here (flat IVF above, flat PQ in
-    similarity.py:536); this composes them and lands the codes in
+    similarity.py); this composes them and lands the codes in
     reliable storage instead of ann_pq_topk's per-run localCheckpoint.
     ``source``/``source_version``/``recluster_threshold`` stamp the
     maintenance bookkeeping ``_ivf_build_extra`` documents (r14)."""
@@ -777,6 +789,8 @@ def _pq_encode_codes(spark, em: DataFrame, centroids, books, m: int):
     """One Arrow pass: (vec_id, cell, c0..c{m-1}) residual PQ codes for
     ``em`` against frozen coarse centroids + codebooks (shared by the
     full build and the incremental add — same bytes either way)."""
+    from crest_spark.operators.similarity import pq_assign
+
     dsub = centroids.shape[1] // m
     b_cent = spark.sparkContext.broadcast(centroids)
     b_books = spark.sparkContext.broadcast(books)
@@ -806,9 +820,7 @@ def _pq_encode_codes(spark, em: DataFrame, centroids, books, m: int):
             )
             for j in range(m):
                 sub = res[:, j * dsub : (j + 1) * dsub]
-                out[f"c{j}"] = (
-                    (bks[j] ** 2).sum(1)[None, :] - 2.0 * (sub @ bks[j].T)
-                ).argmin(1).astype("int32")
+                out[f"c{j}"] = pq_assign(sub, bks[j]).astype("int32")
             yield out
 
     return em.select("vec_id", "embedding").mapInPandas(
@@ -1247,31 +1259,26 @@ def ivfpq_search(
     broadcast GROUPED BY CELL so each Arrow batch evaluates only its
     own cells' queries."""
     import numpy as np
-    import pandas as pd
+
+    from crest_spark.operators.similarity import (
+        pq_lut,
+        pq_rerank,
+        unit_queries,
+    )
 
     centroids, books, m, _n_cells = load_ivfpq_meta(t)
-    dim = centroids.shape[1]
-    dsub = dim // m
-    qrows = queries.select("vec_id", "embedding").collect()
-    if not qrows:
+    q_ids, q_mat = unit_queries(queries)
+    if not len(q_ids):
         return spark.createDataFrame(
             [], "query_id long, vec_id long, sim double, rn int"
         )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_mat /= np.clip(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12, None)
     order = np.argsort(-(q_mat @ centroids.T), axis=1)[:, :nprobe]
     # luts[(qid, cell)] = (m, k) ADC table for that query's residual
-    luts: dict = {}
-    for qi, qid in enumerate(q_ids):
-        for c in order[qi]:
-            rq = q_mat[qi] - centroids[c]
-            lut = np.empty((m, books.shape[1]), dtype=np.float64)
-            for j in range(m):
-                lut[j] = (
-                    (books[j] - rq[j * dsub : (j + 1) * dsub][None, :]) ** 2
-                ).sum(1)
-            luts[(int(qid), int(c))] = lut
+    luts = {
+        (int(qid), int(c)): pq_lut(books, q_mat[qi] - centroids[c])
+        for qi, qid in enumerate(q_ids)
+        for c in order[qi]
+    }
     probed_cells = sorted({c for (_q, c) in luts})
     # ONE pruned scan over the probed-cell set (IN-list predicate):
     # the physical plan is a single FileScan branch regardless of
@@ -1332,37 +1339,7 @@ def ivfpq_search(
                 yield pd.concat(frames, ignore_index=True)
 
     cand = codes.mapInPandas(adc, "query_id long, vec_id long, est double")
-    wq = Window.partitionBy("query_id").orderBy(F.asc("est"), F.asc("vec_id"))
-    short = (
-        cand.withColumn("_r0", F.row_number().over(wq))
-        .where(F.col("_r0") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    qdf = spark.createDataFrame(
-        [
-            (int(q_ids[i]), [float(x) for x in q_mat[i]])
-            for i in range(len(q_ids))
-        ],
-        "query_id long, qemb array<double>",
-    )
-    rer = (
-        short.join(em.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .withColumn(
-            "_sim_raw",
-            cosine_sim(
-                F.col("embedding").cast("array<double>"), F.col("qemb")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rer.withColumn("sim", F.expr(round4("_sim_raw")))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= k)
-        .select("query_id", "vec_id", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return pq_rerank(spark, cand, em, q_ids, q_mat, shortlist, k)
 
 
 @register(

@@ -180,6 +180,11 @@ _RECHECK = (
     # (merge), ivf_add (tail compact) and rebuild_if_drifted
     "mv_hourly_rollup", "mv_percentile_rollup", "mv_topk_rollup",
     "lake_index_rebuild_roundtrip",
+    # run on the shared vector kernels (similarity.rank_topk, the PQ
+    # kernels, vector_index's probe, dedup.block_pairs)
+    "ann_brute_topk", "ann_lsh_topk", "ann_ivf_topk", "knn_self_join_topk",
+    "ann_pq_topk", "ann_ivf_indexed_topk", "ann_ivfpq_topk",
+    "dedup_embedding_cosine", "dedup_semantic_clusters",
 )
 
 

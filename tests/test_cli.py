@@ -446,3 +446,71 @@ sources: []
     # absent block: rebuilds stay CLI-driven
     cfg.write_text("warehouse: w\ncheckpoints: c\nsources: []\n")
     assert load_config(str(cfg)).ingest.index_rebuild_interval is None
+
+
+_INDEXED_SOURCE_YAML = """
+warehouse: {wh}
+checkpoints: {ck}
+maintenance:
+  rebuildIntervalSeconds: 45
+sources:
+  - name: vectors
+    path: {staging}
+{extra}    indexes:
+      - kind: ivf
+        name: emb_ivf
+        id_col: vec_id
+        vec_col: embedding
+        recluster_threshold: 0.5
+  - name: plain
+    path: {staging}
+"""
+
+
+def test_config_parses_source_indexes(tmp_path):
+    """A YAML source's ``indexes`` list reaches ``SourceSpec.indexes``
+    unchanged: without it no source can declare an ivf/ivfpq index, and
+    ``maintenance.rebuildIntervalSeconds`` has nothing to sweep."""
+    from crest_spark.config import load_config
+
+    cfg = tmp_path / "i.yaml"
+    cfg.write_text(
+        _INDEXED_SOURCE_YAML.format(
+            wh=tmp_path / "wh", ck=tmp_path / "ck", staging=tmp_path, extra=""
+        )
+    )
+    parsed = load_config(str(cfg))
+    assert parsed.ingest.sources[0].indexes == [
+        {
+            "kind": "ivf",
+            "name": "emb_ivf",
+            "id_col": "vec_id",
+            "vec_col": "embedding",
+            "recluster_threshold": 0.5,
+        }
+    ]
+    assert parsed.ingest.sources[1].indexes is None
+    assert parsed.ingest.index_rebuild_interval == 45.0
+
+
+def test_config_indexes_on_upsert_source_rejected(spark, tmp_path):
+    """The parsed ``indexes`` go through the same validation as
+    programmatic specs: an upsert source may not maintain an index."""
+    import pytest
+
+    from crest_spark.config import load_config
+    from crest_spark.streaming.ingest import IngestionService
+
+    cfg = tmp_path / "u.yaml"
+    cfg.write_text(
+        _INDEXED_SOURCE_YAML.format(
+            wh=tmp_path / "wh",
+            ck=tmp_path / "ck",
+            staging=tmp_path,
+            extra="    mode: upsert\n    key: vec_id\n    sequenceCol: vec_id\n",
+        )
+    )
+    parsed = load_config(str(cfg))
+    svc = IngestionService(spark, parsed.ingest)
+    with pytest.raises(ValueError, match="indexes are incompatible"):
+        svc._sink(parsed.ingest.sources[0])

@@ -860,6 +860,52 @@ def test_ann_pq_recall_vs_brute(spark, sf_dir):
     assert sorted(map(tuple, pq1)) == sorted(map(tuple, pq2))
 
 
+# Content hashes of the oracle-less vector entries' rows at sf0.001,
+# captured at the commit BEFORE the vector kernels were merged into one
+# copy each (ranking tail, probe, ADC shortlist + re-rank). The recall
+# floors above pass any good-enough result; these pin the exact rows,
+# so a kernel change that moves a single neighbour or sim shows here.
+_ROW_PINS = {
+    "ann_lsh_topk": ("a0ee91b5d01f5804", 25),
+    "ann_ivf_topk": ("eb65d63d388c5259", 25),
+    "ann_pq_topk": ("9b2ed3783c94c724", 25),
+    "ann_ivf_indexed_topk": ("eb65d63d388c5259", 25),
+    "ann_ivfpq_topk": ("aed579646a057574", 25),
+}
+
+
+@pytest.fixture(scope="session")
+def vector_entry_rows(spark):
+    """Collected rows per entry, computed once per session."""
+    cache: dict = {}
+
+    def rows(name: str, sf_dir: str):
+        if name not in cache:
+            cache[name] = SPECS[name].fn(spark, sf_dir).collect()
+        return cache[name]
+
+    return rows
+
+
+def _rows_hash(rows) -> tuple[str, int]:
+    """sha256 prefix over the rows: columns by name, values by repr(),
+    NULL as '∅', lines sorted."""
+    import hashlib
+
+    cols = sorted(rows[0].asDict()) if rows else []
+    lines = sorted(
+        "|".join("∅" if r[c] is None else repr(r[c]) for c in cols)
+        for r in rows
+    )
+    digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+    return digest, len(rows)
+
+
+@pytest.mark.parametrize("name", sorted(_ROW_PINS))
+def test_oracle_less_vector_entries_pin_rows(vector_entry_rows, sf_dir, name):
+    assert _rows_hash(vector_entry_rows(name, sf_dir)) == _ROW_PINS[name]
+
+
 def test_minhash_incremental_matches_batch(spark, sf_dir):
     """Three-arrival incremental mining against the persisted signature
     index finds EXACTLY the one-shot batch miner's pairs with identical
