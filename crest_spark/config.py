@@ -90,11 +90,11 @@ Example:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 import yaml
 
-from crest_spark.streaming.ingest import IngestConfig, SourceSpec
+from crest_spark.streaming.ingest import IngestConfig, SourceSpec, check_source
 
 
 @dataclass
@@ -121,152 +121,73 @@ class EngineConfig:
     catalog: CatalogConfig
 
 
+def _camel(name: str) -> str:
+    head, *rest = name.split("_")
+    return head + "".join(w.capitalize() for w in rest)
+
+
+# a source's YAML key is its SourceSpec field name in camelCase; `flight`
+# (the reference's flight.servers entry) is the one key that is not
+_SOURCE_KEYS = {
+    ("flight" if f.name == "flight_location" else _camel(f.name)): f.name
+    for f in fields(SourceSpec)
+}
+
+
+def _source(raw: dict) -> SourceSpec:
+    unknown = sorted(set(raw) - set(_SOURCE_KEYS))
+    if unknown:
+        raise ValueError(
+            f"source {raw.get('name')}: unknown key(s) {unknown}; known: "
+            + ", ".join(_SOURCE_KEYS)
+        )
+    spec = SourceSpec(**{_SOURCE_KEYS[k]: v for k, v in raw.items()})
+    check_source(spec)
+    return spec
+
+
+def _present(section: dict, **keys: str) -> dict:
+    """{field: section[yaml key]} for the keys the YAML sets: an absent
+    key keeps its dataclass default."""
+    return {f: section[k] for f, k in keys.items() if k in section}
+
+
 def load_config(path: str) -> EngineConfig:
     with open(path) as fh:
         raw = yaml.safe_load(fh) or {}
 
     batching = raw.get("batching", {})
-    max_rows = int(batching.get("maxRows", 1000))  # reference default
     window_s = int(batching.get("maxTimeWindowSeconds", 60))
-
-    sources = [
-        SourceSpec(
-            name=s["name"],
-            path=s.get("path"),
-            files_per_trigger=int(s.get("filesPerTrigger", 1)),
-            namespace=s.get("namespace"),
-            flight_location=s.get("flight"),
-            flight_prefix=s.get("flightPrefix"),
-            flight_schema=s.get("flightSchema"),
-            cluster_by=(
-                [str(c) for c in s["clusterBy"]] if "clusterBy" in s else None
-            ),
-            bloom_for=(
-                [str(c) for c in s["bloomFor"]] if "bloomFor" in s else None
-            ),
-            mode=s.get("mode", "append"),
-            key=(
-                [str(k) for k in s["key"]]
-                if isinstance(s.get("key"), list)
-                else s.get("key")
-            ),
-            sequence_col=s.get("sequenceCol"),
-            delete_col=s.get("deleteCol"),
-            change_feed=bool(s.get("changeFeed", False)),
-            merge_strategy=s.get("mergeStrategy", "cow"),
-            derive=(
-                {str(c): str(e) for c, e in s["derive"].items()}
-                if "derive" in s
-                else None
-            ),
-            expect=(
-                {str(c): str(e) for c, e in s["expect"].items()}
-                if "expect" in s
-                else None
-            ),
-            on_violation=s.get("onViolation", "quarantine"),
-            stage=bool(s.get("stage", False)),
-            branch=s.get("branch"),
-            expect_batch=(
-                {str(c): str(e) for c, e in s["expectBatch"].items()}
-                if "expectBatch" in s
-                else None
-            ),
-            on_batch_violation=s.get("onBatchViolation", "fail"),
-            lineage=bool(s.get("lineage", False)),
-            indexes=s.get("indexes"),
-        )
-        for s in raw.get("sources", [])
-    ]
-    for s in sources:
-        if s.path is None and s.flight_location is None:
-            raise ValueError(f"source {s.name}: needs either 'path' or 'flight'")
-        if s.mode not in ("append", "upsert"):
-            raise ValueError(f"source {s.name}: unknown mode {s.mode!r}")
-        if s.mode == "upsert" and (s.key is None or s.sequence_col is None):
-            raise ValueError(
-                f"source {s.name}: mode 'upsert' requires 'key' and "
-                "'sequenceCol' (CDC ordering column)"
-            )
-        if s.merge_strategy not in ("cow", "mor", "auto"):
-            raise ValueError(
-                f"source {s.name}: mergeStrategy {s.merge_strategy!r} "
-                "(cow | mor | auto)"
-            )
-        if s.on_violation not in ("quarantine", "drop", "fail"):
-            raise ValueError(
-                f"source {s.name}: onViolation {s.on_violation!r} "
-                "(quarantine | drop | fail)"
-            )
-        if s.stage and s.mode == "upsert":
-            raise ValueError(
-                f"source {s.name}: 'stage' (write-audit-publish) applies "
-                "to append mode; an upsert merge cannot be staged"
-            )
-        if s.on_batch_violation not in ("fail", "skip", "stage"):
-            raise ValueError(
-                f"source {s.name}: onBatchViolation "
-                f"{s.on_batch_violation!r} (fail | skip | stage)"
-            )
-        if s.on_batch_violation == "stage" and s.mode == "upsert":
-            raise ValueError(
-                f"source {s.name}: onBatchViolation 'stage' applies to "
-                "append mode; an upsert merge cannot be staged"
-            )
-        if s.branch and s.mode == "upsert":
-            raise ValueError(
-                f"source {s.name}: 'branch' ingestion applies to append "
-                "mode; branches are append-only refs"
-            )
-        if s.branch and s.on_batch_violation == "stage":
-            raise ValueError(
-                f"source {s.name}: onBatchViolation 'stage' cannot divert "
-                "a branch source (commits are already invisible on the "
-                "branch); use 'fail' or 'skip'"
-            )
-        if s.branch and s.stage:
-            raise ValueError(
-                f"source {s.name}: 'branch' and 'stage' are mutually "
-                "exclusive (a branch IS the multi-batch staging form)"
-            )
-
-    compaction = raw.get("compaction", {})
     ingest = IngestConfig(
         warehouse=raw.get("warehouse", "data/warehouse"),  # local:"data" default
         checkpoint_root=raw.get("checkpoints", "data/checkpoints"),
-        namespace=raw.get("namespace", "default"),
         trigger_interval=(
             f"{window_s} seconds" if raw.get("continuous", False) else None
         ),
-        max_rows_per_batch=max_rows,
-        sources=sources,
-        compact_after_files=(
-            int(compaction["afterFiles"]) if "afterFiles" in compaction else None
+        sources=[_source(s) for s in raw.get("sources", [])],
+        **_present(raw, namespace="namespace"),
+        **_present(batching, max_rows_per_batch="maxRows"),
+        **_present(
+            raw.get("compaction", {}),
+            compact_after_files="afterFiles",
+            compact_target_files="targetFiles",
+            compact_zorder_by="zorderBy",
+            compact_max_runs="maxRuns",
         ),
-        compact_target_files=int(compaction.get("targetFiles", 4)),
-        compact_zorder_by=(
-            [str(c) for c in compaction["zorderBy"]]
-            if "zorderBy" in compaction
-            else None
-        ),
-        compact_max_runs=int(compaction.get("maxRuns", 4)),
         # maintenance.rebuildIntervalSeconds: in-process drift-rebuild
-        # sweeps (r14); absent = rebuilds via `cli maintain` only
-        index_rebuild_interval=(
-            float(raw["maintenance"]["rebuildIntervalSeconds"])
-            if "rebuildIntervalSeconds" in raw.get("maintenance", {})
-            else None
+        # sweeps; absent = rebuilds via `cli maintain` only
+        **_present(
+            raw.get("maintenance", {}),
+            index_rebuild_interval="rebuildIntervalSeconds",
         ),
     )
     m = raw.get("metrics", {})
     metrics = MetricsConfig(
-        enabled=bool(m.get("enabled", False)),
-        collection_path=m.get("collectionPath", "data/metrics.jsonl"),
+        **_present(m, enabled="enabled", collection_path="collectionPath")
     )
     c = raw.get("catalog", {})
     catalog = CatalogConfig(
-        type=c.get("type", "local"),
-        endpoint=c.get("endpoint"),
+        **_present(c, type="type", endpoint="endpoint"),
         warehouse=c.get("warehouse") or ingest.warehouse,
     )
     return EngineConfig(ingest=ingest, metrics=metrics, catalog=catalog)

@@ -4983,6 +4983,27 @@ class LakehouseTable:
         }
         return sum(1 for f in state["files"] if f not in run_files)
 
+    def compact_tail(
+        self, spark: SparkSession, after_files: int | None, **layout
+    ) -> int | None:
+        """The amortized compaction step of a continuously appended
+        table: once ``after_files`` or more live files sit outside the
+        runs of ``layout`` (``unclustered_file_count`` with the same
+        ``cluster_by``/``zorder_by`` the rewrite uses), rewrite just that
+        tail into a new run (``compact(tail_only=True, **layout)``) and
+        return its version. Returns None below the threshold, and
+        without reading table state when ``after_files`` is None, so an
+        unset policy costs a write path nothing."""
+        if after_files is None:
+            return None
+        tail = self.unclustered_file_count(
+            cluster_by=layout.get("cluster_by"),
+            zorder_by=layout.get("zorder_by"),
+        )
+        if tail < after_files:
+            return None
+        return self.compact(spark, tail_only=True, **layout)
+
     def cluster_runs(self) -> list[dict]:
         """The live sorted/packed runs (metadata-only): each entry is
         ``{"mode", "cols", "files", "rows", "v"}`` — see ``compact``'s

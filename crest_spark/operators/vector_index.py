@@ -393,39 +393,10 @@ def ivf_drift(t: LakehouseTable) -> float:
     return added / base_rows
 
 
-DELTA_COMPACT_TAIL = 64  # default add-path tail-compaction backstop
-
-
-def _compact_delta_tail(
-    spark: SparkSession,
-    t: LakehouseTable,
-    n_cells: int,
-    compact_tail_after: int | None,
-) -> None:
-    """Tail-compaction backstop inside the add path (review r14): delta
-    adds write cell-RANGE files whose spans cover most cells, so a
-    probe reads the whole uncompacted tail — sound only while the tail
-    is BOUNDED. Ingest configs bound it with their own policy, but a
-    standalone ``ivf_add``/``ivfpq_add`` caller (or an ingest spec with
-    compaction unconfigured) had nothing enforcing the bound: with the
-    default threshold, once the unclustered tail reaches
-    ``compact_tail_after`` files the add first folds it into a
-    one-file-per-cell run (tail-only — prior runs ride by reference),
-    so probe I/O stays <= max_runs x probed cells + the bounded tail
-    for every caller. Pass ``compact_tail_after=None`` to disable
-    (the ingest loop does, when its own spec-level policy is active)."""
-    if compact_tail_after is None:
-        return
-    if (
-        t.unclustered_file_count(cluster_by=["cell"])
-        >= compact_tail_after
-    ):
-        t.compact(
-            spark,
-            cluster_by=["cell"],
-            cluster_partitions=int(n_cells),
-            tail_only=True,
-        )
+# default add-path tail-compaction threshold: delta adds write cell-RANGE
+# files whose spans cover most cells, so a probe reads the whole
+# uncompacted tail — sound only while every caller keeps it bounded
+DELTA_COMPACT_TAIL = 64
 
 
 def ivf_add(
@@ -436,6 +407,7 @@ def ivf_add(
     recluster: str = "inline",
     src_version: int | None = None,
     compact_tail_after: int | None = DELTA_COMPACT_TAIL,
+    max_cluster_runs: int = 4,
     **append_kw,
 ) -> int | None:
     """Incremental index maintenance (the FAISS ``add`` split, VERDICT
@@ -472,11 +444,23 @@ def ivf_add(
     repair pass uses it to decide exactly which concurrent adds its
     own corpus read already covered.
 
+    ``compact_tail_after``/``max_cluster_runs``: once the unclustered
+    tail reaches that many files the add first folds it (and pending
+    ``ivf_delete`` deltas) into a one-file-per-cell run
+    (``LakehouseTable.compact_tail``), so probe I/O stays <= max_runs x
+    probed cells + the bounded tail for every caller; None disables.
+
     Returns the committed version (of the recluster, when triggered)."""
     centroids, n_cells = load_ivf_centroids(t)
     import numpy as np
 
-    _compact_delta_tail(spark, t, n_cells, compact_tail_after)
+    t.compact_tail(
+        spark,
+        compact_tail_after,
+        cluster_by=["cell"],
+        cluster_partitions=int(n_cells),
+        max_cluster_runs=max_cluster_runs,
+    )
     b_cent = spark.sparkContext.broadcast(
         np.asarray(centroids, dtype=np.float64)
     )
@@ -759,6 +743,7 @@ def ivfpq_add(
     new_em: DataFrame,
     src_version: int | None = None,
     compact_tail_after: int | None = DELTA_COMPACT_TAIL,
+    max_cluster_runs: int = 4,
     **append_kw,
 ) -> int | None:
     """Incremental IVF-PQ maintenance (the FAISS ``add`` split for the
@@ -774,9 +759,15 @@ def ivfpq_add(
     the marker so the staged rebuild's repair pass knows exactly which
     concurrent adds its corpus read covered. ``append_kw``
     (writer_id/batch_id) makes a replayed ingest micro-batch an
-    idempotent no-op."""
+    idempotent no-op; the tail compaction is ``ivf_add``'s."""
     centroids, books, m, n_cells = load_ivfpq_meta(t)
-    _compact_delta_tail(spark, t, n_cells, compact_tail_after)
+    t.compact_tail(
+        spark,
+        compact_tail_after,
+        cluster_by=["cell"],
+        cluster_partitions=int(n_cells),
+        max_cluster_runs=max_cluster_runs,
+    )
     codes = _pq_encode_codes(spark, new_em, centroids, books, m)
     clustered = _cell_range_clustered(codes)
     marker = (

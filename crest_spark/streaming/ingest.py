@@ -149,7 +149,7 @@ class SourceSpec:
     expect_batch: dict[str, str] | None = None
     on_batch_violation: str = "fail"
     # Maintained secondary indexes (append mode only; incompatible with
-    # stage/branch/on_batch_violation='stage' — validated at start,
+    # stage/branch/on_batch_violation='stage' — see check_source,
     # since indexed batches must land LIVE on main): after each
     # committed micro-batch, derive-style index maintenance runs under
     # the same (writer, batch)-id idempotence protocol as the main sink
@@ -187,9 +187,9 @@ class SourceSpec:
     #     cluster_partitions = the index's n_cells (one file per
     #     touched cell per run; a probe opens <= max_cluster_runs
     #     files per cell). An explicit spec-level compact_target_files
-    #     BELOW n_cells is rejected at compaction time — it would
-    #     force multiple cells per file and silently widen probe I/O
-    #     to O(corpus/target).
+    #     BELOW n_cells is rejected when the index is first loaded — it
+    #     would force multiple cells per file and silently widen probe
+    #     I/O to O(corpus/target).
     #   {"kind": "ivf", "name": ..., "id_col": "vec_id",
     #    "vec_col": "embedding"}
     #     FAISS add-split: the first batch builds the IVF index, later
@@ -226,6 +226,86 @@ class SourceSpec:
     lineage: bool = False
 
 
+_INDEX_KINDS = ("minhash", "ivf", "ivfpq")
+
+
+def check_source(spec: SourceSpec) -> None:
+    """Every rule on one source's configuration; raises ValueError on
+    the first broken one. ``load_config`` runs it on each YAML source
+    and ``IngestionService._sink`` on each spec it serves, so a
+    programmatic ``SourceSpec`` gets the same checks as YAML, before
+    any batch commits.
+
+    Maintained indexes require every committed batch to be LIVE the
+    moment it lands: a staged / branched / stage-diverted batch would
+    be signed into the index while invisible on main (there is no
+    publish-time maintenance hook), so those combinations are config
+    errors rather than a silent index/table divergence."""
+    s = spec
+    rules = (
+        (s.path is None and s.flight_location is None,
+         "needs either 'path' or 'flight'"),
+        (s.mode not in ("append", "upsert"), f"unknown mode {s.mode!r}"),
+        (s.mode == "upsert" and (s.key is None or s.sequence_col is None),
+         "mode 'upsert' requires 'key' and 'sequenceCol' (CDC ordering "
+         "column)"),
+        (s.merge_strategy not in ("cow", "mor", "auto"),
+         f"mergeStrategy {s.merge_strategy!r} (cow | mor | auto)"),
+        (s.on_violation not in ("quarantine", "drop", "fail"),
+         f"onViolation {s.on_violation!r} (quarantine | drop | fail)"),
+        (s.stage and s.mode == "upsert",
+         "'stage' (write-audit-publish) applies to append mode; an upsert "
+         "merge cannot be staged"),
+        (s.on_batch_violation not in ("fail", "skip", "stage"),
+         f"onBatchViolation {s.on_batch_violation!r} (fail | skip | stage)"),
+        (s.on_batch_violation == "stage" and s.mode == "upsert",
+         "onBatchViolation 'stage' applies to append mode; an upsert merge "
+         "cannot be staged"),
+        (s.branch and s.mode == "upsert",
+         "'branch' ingestion applies to append mode; branches are "
+         "append-only refs"),
+        (s.branch and s.on_batch_violation == "stage",
+         "onBatchViolation 'stage' cannot divert a branch source (commits "
+         "are already invisible on the branch); use 'fail' or 'skip'"),
+        (s.branch and s.stage,
+         "'branch' and 'stage' are mutually exclusive (a branch IS the "
+         "multi-batch staging form)"),
+    )
+    for broken, problem in rules:
+        if broken:
+            raise ValueError(f"source {s.name}: {problem}")
+    if not s.indexes:
+        return
+    for kind in (i.get("kind") for i in s.indexes):
+        if kind not in _INDEX_KINDS:
+            raise ValueError(
+                f"source {s.name}: unknown index kind {kind!r}; known: "
+                + ", ".join(_INDEX_KINDS)
+            )
+    problems = [
+        problem
+        for broken, problem in (
+            (s.mode != "append", "mode must be 'append'"),
+            (s.stage, "stage=True"),
+            (s.branch, f"branch={s.branch!r}"),
+            (s.expect_batch and s.on_batch_violation == "stage",
+             "on_batch_violation='stage'"),
+        )
+        if broken
+    ]
+    if problems:
+        raise ValueError(
+            f"source {s.name!r}: indexes are incompatible with "
+            + ", ".join(problems)
+            + " (indexed batches must land live on main)"
+        )
+
+
+def _index_name(source: SourceSpec, spec: dict) -> str:
+    """The table name of one of ``source``'s maintained indexes."""
+    return spec.get("name", f"{source.name}__{spec['kind']}_idx")
+
+
 @dataclass
 class IngestConfig:
     """Mirrors the reference's YAML surface (``pkg/config/config.go:60-89``)
@@ -236,11 +316,14 @@ class IngestConfig:
     checkpoint_root: str
     namespace: str = "default"
     trigger_interval: str | None = None  # None => run_once drains & stops
-    max_rows_per_batch: int = 1000  # advisory: sizes maxFilesPerTrigger
+    # hard per-file row cap of every append-mode commit (the writer's
+    # max_rows_per_file): batching.maxRows, enforced
+    max_rows_per_batch: int = 1000
     sources: list[SourceSpec] = field(default_factory=list)
-    # Auto-compaction: when a table's live file count reaches this many,
-    # the sink rewrites it into compact_target_files before the next
-    # append. None disables. Micro-batch ingestion with a hard per-file
+    # Auto-compaction: when this many of a table's live files sit outside
+    # its sorted runs, the sink rewrites that tail into
+    # compact_target_files before the next append
+    # (LakehouseTable.compact_tail). None disables. Micro-batch ingestion with a hard per-file
     # row cap necessarily accretes small files; at object-storage scale
     # unbounded file counts degrade every subsequent scan's listing and
     # open cost, so compaction must be part of the write path, not a
@@ -312,10 +395,13 @@ class IngestionService:
                 "next batch): %s", ns, name, exc
             )
 
+    def _namespace(self, source: SourceSpec) -> str:
+        return source.namespace or self.config.namespace
+
     def _sink(self, source: SourceSpec):
-        self._validate_indexes(source)
+        check_source(source)
         catalog = self.catalog
-        ns = source.namespace or self.config.namespace
+        ns = self._namespace(source)
         writer_id = f"ingest-{ns}.{source.name}"
         max_rows = max(1, self.config.max_rows_per_batch)
 
@@ -425,30 +511,19 @@ class IngestionService:
             # Compact BEFORE appending (not after): the foreachBatch hook
             # runs serially per source, so this replace commit can never
             # race this writer's own appends, and checking first keeps the
-            # just-written batch out of the rewrite churn.
-            if compact_after is not None and table.exists():
-                # threshold on the UNCLUSTERED TAIL, not the total file
-                # count, and rewrite only that tail (tail_only): the
-                # hook is serial per source, so an inline full-table
-                # re-cluster would stall ingestion for a whole-table
-                # sort and cost amortized O(corpus/threshold) per batch
-                # — VERDICT r12 #1. Prior sorted runs ride by reference.
-                if (
-                    table.unclustered_file_count(zorder_by=compact_zorder)
-                    >= compact_after
-                ):
-                    # bloom_for: the rewrite must re-record the per-file
-                    # Bloom filters the appends paid for — compacting
-                    # without them silently degrades point lookups on
-                    # non-clustered high-cardinality columns (review r12)
-                    table.compact(
-                        df.sparkSession,
-                        compact_target,
-                        zorder_by=compact_zorder,
-                        bloom_for=source.bloom_for,
-                        tail_only=True,
-                        max_cluster_runs=self.config.compact_max_runs,
-                    )
+            # just-written batch out of the rewrite churn. Only the
+            # unclustered tail is rewritten (prior sorted runs ride by
+            # reference), so the serial hook pays O(threshold batches),
+            # never a whole-table sort; bloom_for re-records the per-file
+            # Bloom filters the appends paid for.
+            table.compact_tail(
+                df.sparkSession,
+                compact_after,
+                target_partitions=compact_target,
+                zorder_by=compact_zorder,
+                bloom_for=source.bloom_for,
+                max_cluster_runs=self.config.compact_max_runs,
+            )
             if source.mode == "upsert":
                 # CDC upsert: reduce the batch to its per-key winner
                 # (highest sequence), then sequence-conditioned MERGE —
@@ -537,58 +612,19 @@ class IngestionService:
 
         return write_batch
 
-    @staticmethod
-    def _validate_indexes(source: SourceSpec) -> None:
-        """Maintained indexes require every committed batch to be LIVE
-        the moment it lands: a staged / branched / stage-diverted batch
-        would be signed into the index while invisible on main (or,
-        worse, never signed if indexing were skipped and publish came
-        later — there is no publish-time maintenance hook). Rejecting
-        the combination up front turns a silent index/table divergence
-        into a config error."""
-        if not source.indexes:
-            return
-        problems = []
-        if source.mode != "append":
-            problems.append("mode must be 'append'")
-        if source.stage:
-            problems.append("stage=True")
-        if source.branch:
-            problems.append(f"branch={source.branch!r}")
-        if source.expect_batch and source.on_batch_violation == "stage":
-            problems.append("on_batch_violation='stage'")
-        if problems:
-            raise ValueError(
-                f"source {source.name!r}: indexes are incompatible with "
-                + ", ".join(problems)
-                + " (indexed batches must land live on main)"
-            )
-
     def _check_index_layout(self, spec: dict, t, kind: str, ns: str,
                             name: str) -> None:
-        """Layout-contract validation at index BUILD/LOAD time (ADVICE
-        r13 #3): an explicit spec-level ``compact_target_files`` below
-        the index's cell count would force multiple cells per file and
-        silently widen probe I/O — raising only when the unclustered
-        tail first crosses the compaction threshold aborts the
-        ingestion loop possibly hours in. The cell count is known the
-        moment the index exists, so the spec is checked once then
-        (memoized per table); the compaction-time check stays as the
-        backstop."""
-        if (
-            spec.get("compact_target_files") is None
-            or (ns, name) in self._layout_checked
-        ):
+        """Layout-contract validation at index LOAD time: every run file
+        must stay single-valued on cell (the add's tail compaction
+        clusters with ``cluster_partitions = n_cells``), so an explicit
+        spec-level ``compact_target_files`` below the index's cell
+        count is a silent probe-I/O widener and raises. The cell count
+        is known the moment the index exists, so the spec is checked
+        once then (memoized per table) instead of when the tail first
+        crosses the threshold, possibly hours into a run."""
+        target = spec.get("compact_target_files")
+        if target is None or (ns, name) in self._layout_checked:
             return
-        self._checked_cells(spec, t, kind, ns, name)
-        self._layout_checked.add((ns, name))
-
-    @staticmethod
-    def _checked_cells(spec: dict, t, kind: str, ns: str, name: str) -> int:
-        """The index's cell count, after checking the layout contract
-        against it: every run file must stay single-valued on cell,
-        which ``cluster_partitions >= n_cells`` guarantees, so an
-        explicit ``compact_target_files`` below the cell count raises."""
         from crest_spark.operators.vector_index import (
             load_ivf_centroids,
             load_ivfpq_meta,
@@ -599,18 +635,15 @@ class IngestionService:
             if kind == "ivf"
             else load_ivfpq_meta(t)[3]
         )
-        spec_target = spec.get("compact_target_files")
-        if spec_target is not None and int(spec_target) < n_cells:
+        if int(target) < n_cells:
             raise ValueError(
-                f"index {ns}.{name}: compact_target_files="
-                f"{spec_target} is below the index's cell "
-                f"count {n_cells}; per-cell point stats "
-                "(the probe-pruning contract) need "
+                f"index {ns}.{name}: compact_target_files={target} is "
+                f"below the index's cell count {n_cells}; per-cell point "
+                "stats (the probe-pruning contract) need "
                 "cluster_partitions >= n_cells — raise "
-                "compact_target_files or drop it from the "
-                "spec"
+                "compact_target_files or drop it from the spec"
             )
-        return n_cells
+        self._layout_checked.add((ns, name))
 
     def _index_compact_limits(
         self, spec: dict
@@ -679,8 +712,9 @@ class IngestionService:
         if df.isEmpty():
             return
         for spec in source.indexes:
-            kind = spec.get("kind")
-            name = spec.get("name", f"{source.name}__{kind}_idx")
+            kind = spec["kind"]
+            name = _index_name(source, spec)
+            after, target, max_runs = self._index_compact_limits(spec)
             if kind == "minhash":
                 from pyspark.sql.types import (
                     LongType,
@@ -710,49 +744,31 @@ class IngestionService:
                     F.col(id_col).alias("doc_id"),
                     F.col(text_col).alias("text"),
                 )
-                # Periodic re-clustering compaction (r12): each micro-
-                # batch appends band rows whose sigs span the whole hash
-                # space (sigs are uniform), so per-FILE sig ranges are
-                # wide and the bucket-key pruned fetch stops biting as
-                # files accrete — one file per batch means O(batches)
-                # admitted files. A SIG-sorted rewrite restores narrow
-                # per-file sig ranges (the probe key is sig alone — a
-                # 2-d z-curve would dilute each file's sig range by the
-                # band dimension for no read-path benefit); done BEFORE
-                # this batch's maintenance (serial hook — cannot race
-                # our own appends) and amortized over compact_after -
-                # target batches, the same policy as the main table.
-                mh_after, mh_target, mh_runs = self._index_compact_limits(
-                    spec
+                # Periodic re-clustering compaction: each micro-batch
+                # appends band rows whose sigs span the whole hash space
+                # (sigs are uniform), so per-FILE sig ranges are wide and
+                # the bucket-key pruned fetch stops biting as files
+                # accrete. A SIG-sorted rewrite of the tail restores
+                # narrow per-file sig ranges (the probe key is sig alone
+                # — a 2-d z-curve would dilute each file's sig range by
+                # the band dimension for no read-path benefit), so the
+                # pruned fetch opens at most max_cluster_runs files per
+                # band bucket. Done BEFORE this batch's maintenance
+                # (serial hook — cannot race our own appends).
+                idx.compact_tail(
+                    spark,
+                    after,
+                    target_partitions=target,
+                    cluster_by=["sig"],
+                    max_cluster_runs=max_runs,
                 )
-                if (
-                    mh_after is not None
-                    and idx.unclustered_file_count(cluster_by=["sig"])
-                    >= mh_after
-                ):
-                    # tail_only (r13): only the band rows appended since
-                    # the last rewrite are sig-sorted into a NEW run;
-                    # prior runs are carried by reference, so this
-                    # serial-hook rewrite is O(threshold batches), not
-                    # O(index). Probe admission is per-file and each run
-                    # file keeps a narrow sig range, so the bucket-key
-                    # pruned fetch opens at most max_cluster_runs files
-                    # per band bucket.
-                    idx.compact(
-                        spark,
-                        target_partitions=mh_target,
-                        cluster_by=["sig"],
-                        tail_only=True,
-                        max_cluster_runs=mh_runs,
-                    )
                 if spec.get("mine_pairs", True):
                     # verify texts are fetched by candidate-id pruned
                     # scan on the SOURCE table, not a full-corpus read
-                    # per micro-batch (VERDICT r11 #2): candidate ids
-                    # are answer-sized, so the per-arrival I/O is
-                    # O(matching files), not O(corpus) — pair with
-                    # cluster_by=["doc_id"] on the source for narrow
-                    # per-file id ranges
+                    # per micro-batch: candidate ids are answer-sized,
+                    # so the per-arrival I/O is O(matching files), not
+                    # O(corpus) — pair with cluster_by=["doc_id"] on the
+                    # source for narrow per-file id ranges
                     pairs = minhash_incremental_pairs(
                         spark,
                         idx,
@@ -768,19 +784,13 @@ class IngestionService:
                     )
                     # the pairs sink accretes one file per batch too —
                     # LSM bin-packing under the same threshold (no
-                    # clustering to preserve: it's a results table, so
-                    # tail_only packs just the files since the last
-                    # trigger; prior packs ride by reference)
-                    if (
-                        mh_after is not None
-                        and pt.unclustered_file_count() >= mh_after
-                    ):
-                        pt.compact(
-                            spark,
-                            target_partitions=mh_target,
-                            tail_only=True,
-                            max_cluster_runs=mh_runs,
-                        )
+                    # clustering to preserve: it's a results table)
+                    pt.compact_tail(
+                        spark,
+                        after,
+                        target_partitions=target,
+                        max_cluster_runs=max_runs,
+                    )
                     pt.append(
                         pairs,
                         writer_id=f"{writer_id}-{name}-pairs",
@@ -793,161 +803,104 @@ class IngestionService:
                         writer_id=f"{writer_id}-{name}",
                         batch_id=batch_id,
                     )
-            elif kind in ("ivf", "ivfpq"):
-                from crest_spark.operators.vector_index import (
-                    build_ivf_index,
-                    build_ivfpq_index,
-                    ivf_add,
-                    ivfpq_add,
-                )
+                continue
+            from crest_spark.operators.vector_index import (
+                DELTA_COMPACT_TAIL,
+                build_ivf_index,
+                build_ivfpq_index,
+                ivf_add,
+                ivfpq_add,
+                latest_build_meta,
+            )
 
-                id_col = spec.get("id_col", "vec_id")
-                vec_col = spec.get("vec_col", "embedding")
-                new_em = df.select(
-                    F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).alias("embedding"),
-                )
-                t = self.catalog.table(name, ns)
+            id_col = spec.get("id_col", "vec_id")
+            vec_col = spec.get("vec_col", "embedding")
+            new_em = df.select(
+                F.col(id_col).alias("vec_id"),
+                F.col(vec_col).alias("embedding"),
+            )
+            t = self.catalog.table(name, ns)
+            widx = f"{writer_id}-{name}"
+            if not t.exists():
+                # the batch id is stamped ON the build's replace commit
+                # itself (overwrite takes writer/batch) — no separate
+                # marker append, so there is no crash window in which a
+                # replayed first micro-batch could take the add path and
+                # double-add its vectors. The SOURCE BINDING + threshold
+                # ride in the build metadata so the off-path rebuild
+                # (`cli maintain --rebuild-indexes`) needs no config
+                # re-supply, and source_version records which source
+                # snapshot the build's corpus covers.
                 build = build_ivf_index if kind == "ivf" else build_ivfpq_index
-                add = ivf_add if kind == "ivf" else ivfpq_add
-                widx = f"{writer_id}-{name}"
-                if t.exists():
-                    # fail-fast layout validation on first load (ADVICE
-                    # r13 #3): a mis-sized compact_target_files must not
-                    # wait for the first compaction trigger to abort
-                    self._check_index_layout(spec, t, kind, ns, name)
-                if t.exists() and batch_id in t.committed_batches(widx):
-                    continue  # replayed batch: already built/added
-                # DELTA files accrete ~one per batch (r14: AQE-sized
-                # cell-RANGE clustering — a fixed micro-batch no longer
-                # writes one near-empty file per touched cell, the
-                # file-count term that grew with the corpus-scaled
-                # cell count): a probe reads the bounded uncompacted
-                # tail at worst. Same amortized policy as the minhash
-                # index, but the rewrite must RESTORE the
-                # one-file-per-cell point-stat layout the steady-state
-                # probe contract is built on: an explicit
-                # cluster_partitions >= the cell count keeps every
-                # rewritten file single-valued on cell (a z-curve
-                # rewrite into few files would widen probe I/O to
-                # O(corpus/target) — review r12). Also folds pending
-                # ivf_delete deltas; centroid/codebook loaders walk
-                # the log past the replace to the build commit.
-                ivf_after, _ivf_target, ivf_runs = (
-                    self._index_compact_limits(spec)
+                build(
+                    spark,
+                    new_em,
+                    self.catalog,
+                    name=name,
+                    namespace=ns,
+                    writer_id=widx,
+                    batch_id=batch_id,
+                    source={
+                        "namespace": ns,
+                        "table": source.name,
+                        "id_col": id_col,
+                        "vec_col": vec_col,
+                    },
+                    source_version=src_version,
+                    recluster_threshold=float(
+                        spec.get("recluster_threshold", 0.5)
+                    ),
                 )
-                if (
-                    ivf_after is not None
-                    and t.exists()
-                    and t.unclustered_file_count(cluster_by=["cell"])
-                    >= ivf_after
-                ):
-                    # layout-contract guard (VERDICT r12 #7). Normally
-                    # caught at first index load (ADVICE r13 #3, above);
-                    # checked again here as the compaction-time
-                    # backstop for a spec mutated after validation.
-                    n_cells = self._checked_cells(spec, t, kind, ns, name)
-                    # tail_only (r13): rewrites only the per-cell delta
-                    # files accreted since the last trigger into a new
-                    # cell-clustered run (ONE file per touched cell);
-                    # the build run + prior compaction runs ride by
-                    # reference, so a probe opens at most
-                    # max_cluster_runs files per probed cell and the
-                    # serial-hook cost stays O(threshold batches).
-                    t.compact(
-                        spark,
-                        cluster_by=["cell"],
-                        cluster_partitions=int(n_cells),
-                        tail_only=True,
-                        max_cluster_runs=ivf_runs,
-                    )
-                if not t.exists():
-                    # the batch id is stamped ON the build's replace
-                    # commit itself (overwrite takes writer/batch since
-                    # ADVICE r11 #2) — no separate marker append, so
-                    # there is no crash window in which a replayed
-                    # first micro-batch could take the add path and
-                    # double-add its vectors. The SOURCE BINDING +
-                    # threshold ride in the build metadata (r14) so the
-                    # off-path rebuild (`cli maintain
-                    # --rebuild-indexes`) needs no config re-supply,
-                    # and source_version records which source snapshot
-                    # the build's corpus covers.
-                    build(
-                        spark,
-                        new_em,
-                        self.catalog,
-                        name=name,
-                        namespace=ns,
-                        writer_id=widx,
-                        batch_id=batch_id,
-                        source={
-                            "namespace": ns,
-                            "table": source.name,
-                            "id_col": id_col,
-                            "vec_col": vec_col,
-                        },
-                        source_version=src_version,
-                        recluster_threshold=float(
-                            spec.get("recluster_threshold", 0.5)
-                        ),
-                    )
-                else:
-                    # Drift handling is OFF-PATH since r14 (VERDICT r13
-                    # #1): the adds below stamp drift markers and
-                    # return — the hook's inline work stays O(batch) —
-                    # and a drifted index is rebuilt by the staged
-                    # maintenance job (rebuild_if_drifted: fit+encode
-                    # once, bounded-delta repair of adds that land
-                    # mid-build, conditional publish; searchers keep
-                    # the old index throughout). A crash anywhere
-                    # before that job publishes leaves the drift
-                    # markers in the commit log, so the rebuild stays
-                    # re-triggerable.
-                    if kind == "ivfpq":
-                        # a STAGED rebuild may have published while
-                        # this batch was in flight, with a source read
-                        # that already covers this batch's rows
-                        # (source appends precede index adds in this
-                        # serial hook) — adding again would duplicate
-                        # them. Exact check: the build stamps the
-                        # source version its corpus read covered.
-                        from crest_spark.operators.vector_index import (
-                            latest_build_meta,
-                        )
-
-                        bsv = latest_build_meta(t)[1].get(
-                            "source_version"
-                        )
-                        # unknown vintage (commit folded behind an
-                        # expiry boundary): the fold boundary is an
-                        # upper bound on it — see
-                        # _replayed_batch_version's docstring
-                        ref = (
-                            src_version
-                            if src_version is not None
-                            else table.versions()[0]
-                        )
-                        if bsv is not None and int(bsv) >= int(ref):
-                            continue
-                    add_kw = dict(
-                        writer_id=widx,
-                        batch_id=batch_id,
-                        src_version=src_version,
-                    )
-                    if ivf_after is not None:
-                        # the spec-level policy above owns compaction;
-                        # suppress the add's own backstop so one
-                        # threshold governs the tail (review r14)
-                        add_kw["compact_tail_after"] = None
-                    if kind == "ivf":
-                        add_kw["recluster"] = "defer"
-                    add(spark, t, new_em, **add_kw)
-            else:
-                raise ValueError(
-                    f"unknown index kind {kind!r} on {ns}.{source.name}; "
-                    "known: minhash, ivf, ivfpq"
+                continue
+            # fail-fast layout validation on first load: a mis-sized
+            # compact_target_files must not wait for the first
+            # compaction trigger to abort
+            self._check_index_layout(spec, t, kind, ns, name)
+            if batch_id in t.committed_batches(widx):
+                continue  # replayed batch: already built/added
+            # Drift handling is OFF-PATH: the adds below stamp drift
+            # markers and return — the hook's inline work stays O(batch)
+            # — and a drifted index is rebuilt by the staged maintenance
+            # job (rebuild_if_drifted: fit+encode once, bounded-delta
+            # repair of adds that land mid-build, conditional publish;
+            # searchers keep the old index throughout). A crash anywhere
+            # before that job publishes leaves the drift markers in the
+            # commit log, so the rebuild stays re-triggerable.
+            if kind == "ivfpq":
+                # a STAGED rebuild may have published while this batch
+                # was in flight, with a source read that already covers
+                # this batch's rows (source appends precede index adds
+                # in this serial hook) — adding again would duplicate
+                # them. Exact check: the build stamps the source version
+                # its corpus read covered.
+                bsv = latest_build_meta(t)[1].get("source_version")
+                # unknown vintage (commit folded behind an expiry
+                # boundary): the fold boundary is an upper bound on it —
+                # see _replayed_batch_version's docstring
+                ref = (
+                    src_version
+                    if src_version is not None
+                    else table.versions()[0]
                 )
+                if bsv is not None and int(bsv) >= int(ref):
+                    continue
+            # the add owns the index's tail compaction: it folds the
+            # accreted delta files (and pending ivf_delete deltas) into
+            # a one-file-per-cell run before appending, under this
+            # spec's threshold and run bound
+            add_kw = dict(
+                writer_id=widx,
+                batch_id=batch_id,
+                src_version=src_version,
+                compact_tail_after=(
+                    DELTA_COMPACT_TAIL if after is None else after
+                ),
+                max_cluster_runs=max_runs,
+            )
+            if kind == "ivf":
+                add_kw["recluster"] = "defer"
+            add = ivf_add if kind == "ivf" else ivfpq_add
+            add(spark, t, new_em, **add_kw)
 
     def rebuild_indexes_once(self) -> dict[str, int]:
         """One maintenance sweep over every ivf/ivfpq index this
@@ -963,22 +916,23 @@ class IngestionService:
         )
 
         landed: dict[str, int] = {}
-        for source in self.config.sources:
-            for spec in source.indexes or []:
-                kind = spec.get("kind")
-                if kind not in ("ivf", "ivfpq"):
-                    continue
-                ns = source.namespace or self.config.namespace
-                name = spec.get("name", f"{source.name}__{kind}_idx")
-                t = self.catalog.table(name, ns)
-                if not t.exists():
-                    continue
-                v = rebuild_if_drifted(
-                    self.spark, t, catalog=self.catalog
-                )
-                if v is not None:
-                    landed[f"{ns}.{name}"] = v
+        for ns, name in self._vector_indexes():
+            t = self.catalog.table(name, ns)
+            if not t.exists():
+                continue
+            v = rebuild_if_drifted(self.spark, t, catalog=self.catalog)
+            if v is not None:
+                landed[f"{ns}.{name}"] = v
         return landed
+
+    def _vector_indexes(self) -> list[tuple[str, str]]:
+        """(namespace, table name) of every maintained ivf/ivfpq index."""
+        return [
+            (self._namespace(src), _index_name(src, spec))
+            for src in self.config.sources
+            for spec in src.indexes or []
+            if spec.get("kind") in ("ivf", "ivfpq")
+        ]
 
     def _rebuild_loop(self, interval: float) -> None:
         import logging
@@ -997,10 +951,9 @@ class IngestionService:
         """Start every source's streaming query (reference Start(),
         ``ingestor.go:58-102``) and, when ``index_rebuild_interval``
         is set, the index-maintenance daemon thread."""
-        if self.config.index_rebuild_interval is not None and any(
-            spec.get("kind") in ("ivf", "ivfpq")
-            for src in self.config.sources
-            for spec in src.indexes or []
+        if (
+            self.config.index_rebuild_interval is not None
+            and self._vector_indexes()
         ):
             import threading
 

@@ -431,13 +431,12 @@ def _ingest_vector_arrival(spark, d: str, work: str) -> float:
     compact_after = 2
     for batch in batches:
         p0 = _time.perf_counter()
-        if t.unclustered_file_count(cluster_by=["cell"]) >= compact_after:
-            t.compact(
-                spark,
-                cluster_by=["cell"],
-                cluster_partitions=int(n_cells),
-                tail_only=True,
-            )
+        if t.compact_tail(
+            spark,
+            compact_after,
+            cluster_by=["cell"],
+            cluster_partitions=int(n_cells),
+        ) is not None:
             n_compacts += 1
         p1 = _time.perf_counter()
         # huge threshold: no in-place recluster — between-rebuild regime

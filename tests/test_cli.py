@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from crest_spark.cli import main
 from crest_spark.lakehouse import LakehouseCatalog
 from crest_spark.sources.tables import load_table, table_path
@@ -113,6 +115,28 @@ sources:
     )
     with pytest.raises(ValueError, match="sequenceCol"):
         load_config(str(bad))
+
+
+@pytest.mark.parametrize("key", ["clusterBY", "sequenceColumn"])
+def test_config_rejects_unknown_source_key(tmp_path, key):
+    """A misspelled source key is an error, not a silently dropped
+    setting (the source would otherwise ingest unclustered, or without
+    its CDC ordering column)."""
+    from crest_spark.config import load_config
+
+    cfg = tmp_path / "k.yaml"
+    cfg.write_text(
+        f"""
+warehouse: w
+checkpoints: c
+sources:
+  - name: events
+    path: /staging/events
+    {key}: event_id
+"""
+    )
+    with pytest.raises(ValueError, match=f"unknown key.*{key}"):
+        load_config(str(cfg))
 
 
 def test_config_parses_derive(tmp_path):
@@ -510,7 +534,7 @@ def test_config_indexes_on_upsert_source_rejected(spark, tmp_path):
             extra="    mode: upsert\n    key: vec_id\n    sequenceCol: vec_id\n",
         )
     )
-    parsed = load_config(str(cfg))
-    svc = IngestionService(spark, parsed.ingest)
     with pytest.raises(ValueError, match="indexes are incompatible"):
+        parsed = load_config(str(cfg))
+        svc = IngestionService(spark, parsed.ingest)
         svc._sink(parsed.ingest.sources[0])

@@ -380,6 +380,46 @@ def test_ingest_indexes_reject_staged_modes(spark, tmp_path):
             svc._sink(src)
 
 
+@pytest.mark.parametrize(
+    "typo, match",
+    [
+        ({"on_violation": "quarantien"}, "onViolation"),
+        ({"on_batch_violation": "skpi"}, "onBatchViolation"),
+        ({"mode": "upsrt"}, "unknown mode"),
+        ({"mode": "upsert", "sequence_col": "event_id"}, "requires 'key'"),
+    ],
+)
+def test_sink_rejects_programmatic_spec_typos(spark, tmp_path, typo, match):
+    """A programmatic SourceSpec goes through the same source checks as
+    YAML when its sink is built: a misspelled policy would otherwise
+    drop violating rows, hide a broken batch or append instead of
+    upserting, and an upsert without a key would fail only on its
+    first batch."""
+    cfg = IngestConfig(
+        warehouse=str(tmp_path / "wh"), checkpoint_root=str(tmp_path / "ck")
+    )
+    svc = IngestionService(spark, cfg)
+    src = SourceSpec(name="events", path=str(tmp_path / "x"), **typo)
+    with pytest.raises(ValueError, match=match):
+        svc._sink(src)
+
+
+def test_sink_rejects_unknown_index_kind_before_any_commit(spark, tmp_path):
+    """An unknown index kind is a config error at sink construction, so
+    no batch's main append commits before the index step raises (which
+    every replay of that batch would repeat)."""
+    cfg = IngestConfig(
+        warehouse=str(tmp_path / "wh"), checkpoint_root=str(tmp_path / "ck")
+    )
+    svc = IngestionService(spark, cfg)
+    src = SourceSpec(
+        name="emb", path=str(tmp_path / "x"), indexes=[{"kind": "hnsw"}]
+    )
+    with pytest.raises(ValueError, match="unknown index kind 'hnsw'"):
+        svc._sink(src)
+    assert not svc.catalog.table("emb").exists()
+
+
 def test_ingest_auto_create_and_metrics(spark, sf_dir, tmp_path):
     """Auto-create DDL from first batch + metrics listener output."""
     from crest_spark.streaming import metrics as m
