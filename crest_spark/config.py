@@ -12,9 +12,13 @@ Example:
     warehouse: data/warehouse
     checkpoints: data/checkpoints
     namespace: default
+    continuous: true           # run each source as a long-lived query with
+                               # one micro-batch per maxTimeWindowSeconds;
+                               # false (default) drains the available input
+                               # once and stops (`cli --once` always does)
     batching:
       maxRows: 1000
-      maxTimeWindowSeconds: 60
+      maxTimeWindowSeconds: 60 # requires continuous: true
     sources:
       - name: events
         path: /staging/events
@@ -157,13 +161,18 @@ def load_config(path: str) -> EngineConfig:
         raw = yaml.safe_load(fh) or {}
 
     batching = raw.get("batching", {})
+    continuous = raw.get("continuous", False)
+    if "maxTimeWindowSeconds" in batching and not continuous:
+        raise ValueError(
+            "batching.maxTimeWindowSeconds paces a continuous run: set "
+            "'continuous: true' (without it every run drains the available "
+            "input once and stops)"
+        )
     window_s = int(batching.get("maxTimeWindowSeconds", 60))
     ingest = IngestConfig(
         warehouse=raw.get("warehouse", "data/warehouse"),  # local:"data" default
         checkpoint_root=raw.get("checkpoints", "data/checkpoints"),
-        trigger_interval=(
-            f"{window_s} seconds" if raw.get("continuous", False) else None
-        ),
+        trigger_interval=f"{window_s} seconds" if continuous else None,
         sources=[_source(s) for s in raw.get("sources", [])],
         **_present(raw, namespace="namespace"),
         **_present(batching, max_rows_per_batch="maxRows"),

@@ -18,7 +18,16 @@ Layout produced under ``<table>/metadata/``:
 
     v<head>.metadata.json           table metadata (format-version 2)
     snap-<v>-manifest-list.avro     one per exported snapshot
-    manifest-<v>.avro               one per commit that added files
+    manifest-<v>.avro               data files commit v added, all live
+    manifest-<v>-<sha10>.avro       the still-live subset of them, after
+                                    a replace dropped some (sha10 hashes
+                                    the subset's paths)
+    manifest-del-<v>-<sha10>.avro   equality deletes of the merge-on-read
+                                    delta committed at v (sha10 hashes
+                                    its key-file paths)
+    manifest-posdel-<v>.avro        position deletes of head v's pending
+                                    deltas that have no equality form
+    posdel-<v>-NNNNN.parquet        those position-delete files
     version-hint.text               current metadata version
 
 Mapping from the commit log, which the export replays ONCE through
@@ -49,9 +58,16 @@ import json
 import os
 import struct
 import uuid
+from collections.abc import Callable
 
 from . import avro_io
-from .table import LakehouseTable, Snapshot, _input_path, _tag_by_file
+from .table import (
+    LakehouseTable,
+    Snapshot,
+    _input_path,
+    _row_cond,
+    _tag_by_file,
+)
 
 _NS_UUID = uuid.UUID("a53437a2-97c5-4a62-a56b-8f6e3f9a3b11")  # arbitrary, fixed
 
@@ -181,13 +197,40 @@ def iceberg_schema(
     return {"type": "struct", "schema-id": schema_id, "fields": fields}
 
 
-def _field_aliases(name: str, events: list[dict]) -> list[str]:
-    """All physical names the current field ``name`` has had, newest
-    first — the names list of its Iceberg name-mapping entry, which is
-    how engines resolve parquet files written (id-less) under the old
-    name. Stops at the event that created the field (a re-add must not
-    alias the dead column's name history)."""
-    return [n for n, _ in _alias_spans(name, events)]
+def _leaf_ids(fields: list[dict], prefix: str = "") -> dict[str, tuple[int, str]]:
+    """(dotted path -> (field id, primitive type)) for every bound-
+    carrying position of an Iceberg schema's ``fields``: top-level
+    primitives AND struct-nested leaves (commit stats key by the same
+    dotted paths, so nested bounds export like flat ones). List/map
+    interiors carry repeated values with no scalar bounds."""
+    out: dict[str, tuple[int, str]] = {}
+    for f in fields:
+        p = f"{prefix}.{f['name']}" if prefix else f["name"]
+        if isinstance(f["type"], str):
+            out[p] = (f["id"], f["type"])
+        elif f["type"].get("type") == "struct":
+            out.update(_leaf_ids(f["type"]["fields"], p))
+    return out
+
+
+def _max_field_id(t) -> int:
+    """The highest field id inside the Iceberg type ``t``."""
+    if isinstance(t, str):
+        return 0
+    if t["type"] == "struct":
+        return max(
+            [0] + [max(f["id"], _max_field_id(f["type"])) for f in t["fields"]]
+        )
+    if t["type"] == "list":
+        return max(t["element-id"], _max_field_id(t["element"]))
+    if t["type"] == "map":
+        return max(
+            t["key-id"],
+            t["value-id"],
+            _max_field_id(t["key"]),
+            _max_field_id(t["value"]),
+        )
+    return 0
 
 
 def _alias_spans(
@@ -505,6 +548,13 @@ def _file_footer(path: str) -> tuple[int, int]:
     return pq.ParquetFile(path).metadata.num_rows, os.path.getsize(path)
 
 
+def _sha10(paths) -> str:
+    """The file-subset hash in filtered and delete manifest names."""
+    import hashlib
+
+    return hashlib.sha1("\n".join(paths).encode("utf-8")).hexdigest()[:10]
+
+
 _POS_DELETE_PATH_ID = 2147483546  # spec-reserved field ids for
 _POS_DELETE_POS_ID = 2147483545  # position-delete file columns
 
@@ -673,30 +723,31 @@ def export_iceberg_metadata(
     # diverge from LakehouseTable.field_ids() (ADVICE r9 #2/#4). The
     # fold has already resolved each version to the schema that was
     # actually LIVE there.
-    def _skey(s: Snapshot) -> str:
-        w = views[s.version]
-        if not has_evolution:
-            return w["schema"]
-        return w["schema"] + "|" + json.dumps(sorted(w["field_ids"].items()))
-
     schema_ids: dict[str, int] = {}
-    schema_src: dict[str, tuple[str, int]] = {}  # key -> (json, version)
+    iceberg_schemas: list[dict] = []
+    sid_of: dict[int, int] = {}  # version -> schema id
     for s in snaps:
-        k = _skey(s)
+        w = views[s.version]
+        k = w["schema"]
+        if has_evolution:
+            k += "|" + json.dumps(sorted(w["field_ids"].items()))
         if k not in schema_ids:
-            schema_ids[k] = len(schema_ids)
-            schema_src[k] = (views[s.version]["schema"], s.version)
-    iceberg_schemas = [
-        iceberg_schema(
-            schema_src[k][0],
-            sid,
-            top_ids=(
-                views[schema_src[k][1]]["field_ids"] if has_evolution else None
-            ),
-        )
-        for k, sid in schema_ids.items()
-    ]
+            schema_ids[k] = len(iceberg_schemas)
+            iceberg_schemas.append(
+                iceberg_schema(
+                    w["schema"],
+                    schema_ids[k],
+                    top_ids=w["field_ids"] if has_evolution else None,
+                )
+            )
+        sid_of[s.version] = schema_ids[k]
 
+    def _sid(version: int) -> int:
+        # a sequence number older than the oldest retained snapshot
+        # (after expiry or rollback) takes that snapshot's schema
+        return sid_of.get(version, sid_of[snaps[0].version])
+
+    leaf_ids = [_leaf_ids(isch["fields"]) for isch in iceberg_schemas]
     snaps_by_v = {s.version: s for s in snaps}
     exported = [
         s
@@ -705,33 +756,6 @@ def export_iceberg_metadata(
         # any) were materialized into position deletes above
         if s is snaps[-1] or _unrepresentable(s) is None
     ]
-
-    # ---- one manifest per commit that added files (written once, reused).
-    # A replace commit can drop SOME of a manifest's files; the manifest is
-    # then rewritten filtered to the still-live subset (what Iceberg's
-    # rewrite-manifests does), keyed by (add_version, subset) so later
-    # snapshots sharing the subset reuse the filtered file too.
-    manifest_info: dict[tuple, dict] = {}  # (add_version, files) -> entry
-
-    def _field_ids(snap: Snapshot) -> dict[str, tuple[int, str]]:
-        """(dotted path -> (field id, primitive type)) for every bound-
-        carrying position of the snapshot's schema: top-level primitives
-        AND struct-nested leaves (r10 — commit stats key by the same
-        dotted paths, so nested bounds export like flat ones). List/map
-        interiors carry repeated values with no scalar bounds."""
-        isch = iceberg_schemas[schema_ids[_skey(snap)]]
-        out: dict[str, tuple[int, str]] = {}
-
-        def walk(fields: list[dict], prefix: str) -> None:
-            for f in fields:
-                p = f"{prefix}.{f['name']}" if prefix else f["name"]
-                if isinstance(f["type"], str):
-                    out[p] = (f["id"], f["type"])
-                elif f["type"].get("type") == "struct":
-                    walk(f["type"]["fields"], p)
-
-        walk(isch["fields"], "")
-        return out
 
     # ---- clustering metadata (VERDICT r6 next-round #6): the most
     # recent cluster_by declaration is the table's sort layout — emitted
@@ -745,7 +769,7 @@ def export_iceberg_metadata(
         if cb:
             cluster_cols = list(cb)
             break
-    head_field_ids = _field_ids(snaps[-1])
+    head_field_ids = leaf_ids[sid_of[snaps[-1].version]]
     sort_fields = [
         {
             "transform": "identity",
@@ -825,42 +849,29 @@ def export_iceberg_metadata(
         elif col_width[c] is not None:
             extra_fields.append((c, "truncate", col_width[c]))
 
-    def _spec_field(col: str, transform: str, width, fid: int) -> dict:
-        return {
-            "name": col if transform == "identity" else f"{col}_trunc",
-            "transform": (
-                "identity" if transform == "identity" else f"truncate[{width}]"
-            ),
-            "source-id": head_field_ids[col][0],
-            # v2: partition field ids are unique ACROSS specs
-            "field-id": fid,
-        }
-
-    part_spec = None
-    spec1_cols: list[tuple[str, str, int | None]] = []
+    # ---- the spec table: spec id -> (spec JSON, column plan), spec 0
+    # (unpartitioned) included; a spec's plan lines up with its fields
+    plans: list[tuple[int, list[tuple[str, str, int | None]]]] = [(0, [])]
     if part_col is not None and type_ok.get(part_col):
-        spec1_cols = [(part_col, "identity", None)] + extra_fields
-        part_spec = {
-            "spec-id": 1,
-            "fields": [
-                _spec_field(c, tr, w, 1000 + i)
-                for i, (c, tr, w) in enumerate(spec1_cols)
-            ],
-        }
-
-    trunc_width = col_width.get(part_col) if part_col is not None else None
-    trunc_spec = None
-    spec2_cols: list[tuple[str, str, int | None]] = []
-    if part_spec is not None and trunc_width is not None:
-        spec2_cols = [(part_col, "truncate", trunc_width)] + extra_fields
-        base = 1000 + len(spec1_cols)
-        trunc_spec = {
-            "spec-id": 2,
-            "fields": [
-                _spec_field(c, tr, w, base + i)
-                for i, (c, tr, w) in enumerate(spec2_cols)
-            ],
-        }
+        plans.append((1, [(part_col, "identity", None)] + extra_fields))
+        if col_width[part_col] is not None:
+            plans.append(
+                (2, [(part_col, "truncate", col_width[part_col])] + extra_fields)
+            )
+    specs: dict[int, tuple[dict, list[tuple[str, str, int | None]]]] = {}
+    next_fid = 1000  # v2: partition field ids are unique ACROSS specs
+    for spec_id, plan in plans:
+        fields = [
+            {
+                "name": c if tr == "identity" else f"{c}_trunc",
+                "transform": "identity" if tr == "identity" else f"truncate[{w}]",
+                "source-id": head_field_ids[c][0],
+                "field-id": next_fid + i,
+            }
+            for i, (c, tr, w) in enumerate(plan)
+        ]
+        next_fid += len(plan)
+        specs[spec_id] = ({"spec-id": spec_id, "fields": fields}, plan)
 
     def _truncate(itype: str, w: int, v):
         # Iceberg truncate: ints floor to the width multiple (Python //
@@ -870,7 +881,7 @@ def export_iceberg_metadata(
             return (v // w) * w
         return v[:w]
 
-    def _partitioned_entry_schema(spec_id: int) -> dict:
+    def _entry_schema(spec_id: int) -> dict:
         """MANIFEST_ENTRY_SCHEMA with the partition record typed for
         the given spec (the avro schema of a manifest depends on its
         partition spec, per the Iceberg spec)."""
@@ -883,8 +894,7 @@ def export_iceberg_metadata(
             for f in data_file["type"]["fields"]
             if f["name"] == "partition"
         )
-        spec = part_spec if spec_id == 1 else trunc_spec
-        plan = spec1_cols if spec_id == 1 else spec2_cols
+        spec, plan = specs[spec_id]
         part["type"]["fields"] = [
             {
                 "name": sf["name"],
@@ -895,80 +905,167 @@ def export_iceberg_metadata(
         ]
         return entry
 
-    def _write_manifest(add_version: int, live_subset: tuple[str, ...]) -> dict:
-        key = (add_version, live_subset)
-        if key in manifest_info:
-            return manifest_info[key]
-        # a sequence number older than the oldest retained snapshot
-        # (after expiry or rollback) takes that snapshot's schema and
-        # field ids; per-file stats always come from the fold
-        snap = snaps_by_v.get(add_version)
-        ref = snap or snaps[0]
-        added = list(live_subset)
-        full = snap is not None and (
-            tuple(sorted(views[add_version]["added"])) == live_subset
-        )
-        ids = _field_ids(ref)
-        stats = file_stats
-        # partition-spec eligibility per manifest: every file must have
-        # a provable tuple for EVERY field of the spec — identity needs
-        # min == max, truncate needs agreeing truncated endpoints, both
-        # need null-free stats. Spec 1 first, truncate fallback, else
-        # spec 0 (bounds-only pruning).
-        part_values: dict[str, dict] | None = None
-        spec_id = 0
-        clustered_commit = part_spec is not None and snap is not None and (
-            (snap.extra.get("cluster_by") or [None])[0] == part_col
-        )
-
-        def _try_spec(cols_plan):
-            vals: dict[str, dict] = {}
-            for f in added:
-                fstats = stats.get(f) or {}
-                fnulls = fstats.get("__nulls__") or {}
-                tup: dict = {}
-                for c, tr, w in cols_plan:
-                    mnmx = fstats.get(c)
-                    if not mnmx or fnulls.get(c, 0) != 0:
+    def _partition_tuples(files, plan) -> dict[str, dict] | None:
+        """Every file's partition tuple under ``plan``, or None unless
+        each file has a provable value for EVERY field — identity
+        needs min == max, truncate needs agreeing truncated endpoints,
+        both need null-free stats."""
+        vals: dict[str, dict] = {}
+        for f in files:
+            fstats = file_stats.get(f) or {}
+            fnulls = fstats.get("__nulls__") or {}
+            tup: dict = {}
+            for c, tr, w in plan:
+                mnmx = fstats.get(c)
+                if not mnmx or fnulls.get(c, 0) != 0:
+                    return None
+                if tr == "identity":
+                    if mnmx[0] != mnmx[1]:
                         return None
-                    if tr == "identity":
-                        if mnmx[0] != mnmx[1]:
-                            return None
-                        tup[c] = mnmx[0]
-                    else:
-                        it = head_field_ids[c][1]
-                        ta = _truncate(it, w, mnmx[0])
-                        if ta != _truncate(it, w, mnmx[1]):
-                            return None
-                        tup[f"{c}_trunc"] = ta
-                vals[f] = tup
-            return vals
+                    tup[c] = mnmx[0]
+                else:
+                    it = head_field_ids[c][1]
+                    ta = _truncate(it, w, mnmx[0])
+                    if ta != _truncate(it, w, mnmx[1]):
+                        return None
+                    tup[f"{c}_trunc"] = ta
+            vals[f] = tup
+        return vals
 
-        if clustered_commit:
-            part_values = _try_spec(spec1_cols)
-            if part_values is not None:
-                spec_id = 1
-            elif trunc_spec is not None:
-                part_values = _try_spec(spec2_cols)
-                if part_values is not None:
-                    spec_id = 2
-        entries = []
-        total_rows = 0
-        for f in added:
+    # ---- the one manifest writer. Its cache is keyed by the manifest
+    # path, which already encodes kind, version and (for a filtered or
+    # delete manifest) the file-subset hash, so every manifest is
+    # written once and reused by each later snapshot that lists it.
+    manifests: dict[str, dict] = {}  # path -> its manifest-list entry
+
+    def _write_manifest(name: str, ver: int, files, content: int,
+                        layout=lambda: (0, None)) -> dict:
+        """Write the manifest ``name`` of ``files`` (data file content
+        0 data, 1 position deletes, 2 equality deletes) added at
+        version ``ver``, which is their snapshot id and sequence number.
+        ``layout()`` -> (spec id, per-file hook) runs only when the
+        manifest is not written yet; the hook maps (file, record count)
+        to the ``data_file`` fields beyond the common ones (partition
+        tuple and column stats for data, ``equality_ids`` for equality
+        deletes; absent nullable fields take their schema default,
+        null). Returns the manifest-list entry as the snapshot ``ver``
+        lists it."""
+        path = os.path.join(meta_dir, name)
+        if path in manifests:
+            return manifests[path]
+        spec_id, per_file = layout()
+        sid = _sid(ver)
+        records = []
+        rows = 0
+        for f in files:
             nrows, fsize = _file_footer(f)
-            total_rows += nrows
-            lower = []
-            upper = []
-            nulls = []
-            vcounts = []
-            fnulls = (stats.get(f) or {}).get("__nulls__") or {}
+            rows += nrows
+            data_file = {
+                "content": content,
+                "file_path": os.path.abspath(f),
+                "file_format": "PARQUET",
+                "partition": {},
+                "record_count": nrows,
+                "file_size_in_bytes": fsize,
+            }
+            if per_file is not None:
+                data_file.update(per_file(f, nrows))
+            records.append(
+                {
+                    "status": 1,  # ADDED
+                    "snapshot_id": ver,
+                    "sequence_number": ver,
+                    "file_sequence_number": ver,
+                    "data_file": data_file,
+                }
+            )
+        spec, plan = specs[spec_id]
+        length = avro_io.write_container(
+            path,
+            _entry_schema(spec_id),
+            records,
+            metadata={
+                "schema": json.dumps(iceberg_schemas[sid]),
+                "schema-id": str(sid),
+                "partition-spec": json.dumps(spec["fields"]),
+                "partition-spec-id": str(spec_id),
+                "format-version": "2",
+                "content": "data" if content == 0 else "deletes",
+            },
+        )
+        # field summaries, one per spec field in order (external
+        # planners prune manifests on them)
+        summaries = []
+        for sf, (c, _tr, _w) in zip(spec["fields"], plan):
+            itype = head_field_ids[c][1]
+            pv = [r["data_file"]["partition"][sf["name"]] for r in records]
+            summaries.append(
+                {
+                    "contains_null": False,
+                    "contains_nan": False,
+                    "lower_bound": _single_value_bytes(itype, min(pv)),
+                    "upper_bound": _single_value_bytes(itype, max(pv)),
+                }
+            )
+        manifests[path] = {
+            "manifest_path": path,
+            "manifest_length": length,
+            "partition_spec_id": spec_id,
+            "content": 0 if content == 0 else 1,  # data | deletes
+            "sequence_number": ver,
+            "min_sequence_number": ver,
+            "added_snapshot_id": ver,
+            "added_files_count": len(records),
+            "existing_files_count": 0,
+            "deleted_files_count": 0,
+            "added_rows_count": rows,
+            "existing_rows_count": 0,
+            "deleted_rows_count": 0,
+            "partitions": summaries,
+        }
+        return manifests[path]
+
+    def _listed(entry: dict, version: int) -> dict:
+        """A manifest's entry in snapshot ``version``'s manifest list:
+        its files and rows count as ADDED only in the snapshot that
+        wrote it, as EXISTING in every other one."""
+        if entry["added_snapshot_id"] == version:
+            return entry
+        return {
+            **entry,
+            "added_files_count": 0,
+            "existing_files_count": entry["added_files_count"],
+            "added_rows_count": 0,
+            "existing_rows_count": entry["added_rows_count"],
+        }
+
+    def _data_layout(ver: int, files) -> tuple[int, Callable]:
+        """A data manifest's spec and per-file fields. Partition-spec
+        eligibility is per manifest: spec 1 first, the truncate
+        fallback next, else spec 0 (bounds-only pruning). Per-file
+        stats always come from the fold."""
+        snap = snaps_by_v.get(ver)
+        spec_id, part_values = 0, {}
+        if snap is not None and (
+            (snap.extra.get("cluster_by") or [None])[0] == part_col
+        ):
+            for cand, (_spec, plan) in specs.items():
+                if cand and (vals := _partition_tuples(files, plan)) is not None:
+                    spec_id, part_values = cand, vals
+                    break
+        ids = leaf_ids[_sid(ver)]
+
+        def per_file(f: str, nrows: int) -> dict:
+            fstats = file_stats.get(f) or {}
+            fnulls = fstats.get("__nulls__") or {}
+            lower, upper, nulls, vcounts = [], [], [], []
             for col, (fid, itype) in ids.items():
                 if col in fnulls:
                     nulls.append({"key": fid, "value": int(fnulls[col])})
                     # spec value_counts = total values incl. nulls =
                     # the file's record count for a flat column
                     vcounts.append({"key": fid, "value": nrows})
-                mnmx = (stats.get(f) or {}).get(col)
+                mnmx = fstats.get(col)
                 if not mnmx:
                     continue
                 lo = _single_value_bytes(itype, mnmx[0])
@@ -976,108 +1073,42 @@ def export_iceberg_metadata(
                 if lo is not None and hi is not None:
                     lower.append({"key": fid, "value": lo})
                     upper.append({"key": fid, "value": hi})
-            entries.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": add_version,
-                    "sequence_number": add_version,
-                    "file_sequence_number": add_version,
-                    "data_file": {
-                        "content": 0,  # DATA
-                        "file_path": os.path.abspath(f),
-                        "file_format": "PARQUET",
-                        "partition": (
-                            part_values[f] if part_values else {}
-                        ),
-                        "record_count": nrows,
-                        "file_size_in_bytes": fsize,
-                        "value_counts": vcounts or None,
-                        "null_value_counts": nulls or None,
-                        "lower_bounds": lower or None,
-                        "upper_bounds": upper or None,
-                        "equality_ids": None,
-                    },
-                }
-            )
-        if full:
-            path = os.path.join(meta_dir, f"manifest-{add_version}.avro")
-        else:
-            import hashlib
+            return {
+                "partition": part_values.get(f, {}),
+                "value_counts": vcounts or None,
+                "null_value_counts": nulls or None,
+                "lower_bounds": lower or None,
+                "upper_bounds": upper or None,
+            }
 
-            sub = hashlib.sha1(
-                "\n".join(live_subset).encode("utf-8")
-            ).hexdigest()[:10]
-            path = os.path.join(
-                meta_dir, f"manifest-{add_version}-{sub}.avro"
-            )
-        spec_fields = []
-        if spec_id == 1:
-            spec_fields = part_spec["fields"]
-        elif spec_id == 2:
-            spec_fields = trunc_spec["fields"]
-        length = avro_io.write_container(
-            path,
-            (
-                _partitioned_entry_schema(spec_id)
-                if spec_id in (1, 2)
-                else MANIFEST_ENTRY_SCHEMA
-            ),
-            entries,
-            metadata={
-                "schema": json.dumps(
-                    iceberg_schemas[schema_ids[_skey(ref)]]
-                ),
-                "schema-id": str(schema_ids[_skey(ref)]),
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": str(spec_id),
-                "format-version": "2",
-                "content": "data",
-            },
+        return spec_id, per_file
+
+    def _data_manifest(ver: int, files: tuple[str, ...]) -> dict:
+        """The manifest of the data files added at ``ver`` that are
+        still live. A replace commit can drop SOME of them; the
+        manifest is then rewritten filtered to the live subset (what
+        Iceberg's rewrite-manifests does), named by the subset's hash
+        so later snapshots sharing the subset reuse the filtered
+        file too."""
+        full = ver in snaps_by_v and (
+            tuple(sorted(views[ver]["added"])) == files
         )
-        info = {
-            "path": path,
-            "length": length,
-            "added_files": len(added),
-            "added_rows": total_rows,
-            "added_snapshot_id": add_version,
-            "spec_id": spec_id,
-        }
-        if spec_id in (1, 2):
-            # field summaries for the manifest-list entry, one per spec
-            # field in order (external planners prune manifests on them)
-            spec = part_spec if spec_id == 1 else trunc_spec
-            plan = spec1_cols if spec_id == 1 else spec2_cols
-            info["partitions"] = []
-            for sf, (c, _tr, _w) in zip(spec["fields"], plan):
-                itype = head_field_ids[c][1]
-                pv = [part_values[f][sf["name"]] for f in added]
-                info["partitions"].append(
-                    {
-                        "contains_null": False,
-                        "contains_nan": False,
-                        "lower_bound": _single_value_bytes(itype, min(pv)),
-                        "upper_bound": _single_value_bytes(itype, max(pv)),
-                    }
-                )
-        manifest_info[key] = info
-        return info
+        name = f"manifest-{ver}.avro" if full else (
+            f"manifest-{ver}-{_sha10(files)}.avro"
+        )
+        return _write_manifest(
+            name, ver, files, 0, lambda: _data_layout(ver, files)
+        )
 
-    delete_manifest_info: dict[tuple, dict] = {}
-
-    def _write_delete_manifest(entry: dict) -> dict:
-        """One delete manifest (content=1) per merge-on-read delta
-        entry, holding its equality-delete key files (content=2) with
-        the key columns' field ids. Written once, reused by every later
-        snapshot the entry is still pending at."""
-        key = (int(entry["seq"]), tuple(entry["paths"]))
-        if key in delete_manifest_info:
-            return delete_manifest_info[key]
-        # the entry's commit version (it deletes against base ``seq``);
-        # an expired one takes the oldest retained snapshot's schema
+    def _eq_delete_manifest(entry: dict) -> dict:
+        """One delete manifest per merge-on-read delta entry, holding
+        its equality-delete key files with the key columns' field ids;
+        reused by every later snapshot the entry is still pending at.
+        The entry commits at version ``seq + 1`` (it deletes against
+        base ``seq``), and the spec applies it to data sequence numbers
+        below that."""
         ver = int(entry["seq"]) + 1
-        dseq = ver  # spec: applies to data seq < this
-        snap = snaps_by_v.get(ver) or snaps[0]
-        ids = _field_ids(snap)
+        ids = leaf_ids[_sid(ver)]
         try:
             eq_ids = [ids[k][0] for k in entry["keys"]]
         except KeyError as exc:
@@ -1085,198 +1116,56 @@ def export_iceberg_metadata(
                 f"merge-on-read delete key {exc} has no field id in the "
                 f"version-{ver} schema"
             ) from exc
-        records = []
-        total_rows = 0
-        for f in entry["paths"]:
-            nrows, fsize = _file_footer(f)
-            total_rows += nrows
-            records.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": ver,
-                    "sequence_number": dseq,
-                    "file_sequence_number": ver,
-                    "data_file": {
-                        "content": 2,  # EQUALITY_DELETES
-                        "file_path": os.path.abspath(f),
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": nrows,
-                        "file_size_in_bytes": fsize,
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": eq_ids,
-                    },
-                }
-            )
-        import hashlib
-
-        sub = hashlib.sha1(
-            "\n".join(entry["paths"]).encode("utf-8")
-        ).hexdigest()[:10]
-        path = os.path.join(meta_dir, f"manifest-del-{ver}-{sub}.avro")
-        length = avro_io.write_container(
-            path,
-            MANIFEST_ENTRY_SCHEMA,
-            records,
-            metadata={
-                "schema": json.dumps(
-                    iceberg_schemas[schema_ids[_skey(snap)]]
-                ),
-                "schema-id": str(schema_ids[_skey(snap)]),
-                "partition-spec": "[]",
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "deletes",
-            },
+        return _write_manifest(
+            f"manifest-del-{ver}-{_sha10(entry['paths'])}.avro",
+            ver,
+            entry["paths"],
+            2,
+            lambda: (0, lambda f, n: {"equality_ids": eq_ids}),
         )
-        info = {
-            "path": path,
-            "length": length,
-            "added_files": len(entry["paths"]),
-            "added_rows": total_rows,
-            "added_snapshot_id": ver,
-            "sequence_number": dseq,
-        }
-        delete_manifest_info[key] = info
-        return info
-
-    def _write_posdel_manifest(ver: int, paths: list[str]) -> dict:
-        """One delete manifest (content=1) of POSITION-delete files
-        (content=1) for the materialized head deltas. Position deletes
-        apply to data files with sequence <= their own, so sequence
-        number ``ver`` (the head) scopes them to every live file —
-        which is exactly the set they were computed against."""
-        snap = snaps_by_v[ver]
-        records = []
-        total_rows = 0
-        for f in paths:
-            nrows, fsize = _file_footer(f)
-            total_rows += nrows
-            records.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": ver,
-                    "sequence_number": ver,
-                    "file_sequence_number": ver,
-                    "data_file": {
-                        "content": 1,  # POSITION_DELETES
-                        "file_path": os.path.abspath(f),
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": nrows,
-                        "file_size_in_bytes": fsize,
-                        "value_counts": None,
-                        "null_value_counts": None,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": None,
-                    },
-                }
-            )
-        path = os.path.join(meta_dir, f"manifest-posdel-{ver}.avro")
-        length = avro_io.write_container(
-            path,
-            MANIFEST_ENTRY_SCHEMA,
-            records,
-            metadata={
-                "schema": json.dumps(
-                    iceberg_schemas[schema_ids[_skey(snap)]]
-                ),
-                "schema-id": str(schema_ids[_skey(snap)]),
-                "partition-spec": "[]",
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "deletes",
-            },
-        )
-        return {
-            "path": path,
-            "length": length,
-            "added_files": len(paths),
-            "added_rows": total_rows,
-            "added_snapshot_id": ver,
-            "sequence_number": ver,
-        }
 
     # ---- per-snapshot manifest lists + snapshot records
     snapshot_records = []
     snapshot_log = []
     prev_version = None
     for s in snaps:
-        in_export = s in exported
         live = views[s.version]["live"]
-        by_add: dict[int, list[str]] = {}
-        for f, av in live.items():
-            by_add.setdefault(av, []).append(f)
-        if in_export:
-            list_entries = []
-            for mv in sorted(by_add):
-                info = _write_manifest(mv, tuple(sorted(by_add[mv])))
-                is_new = mv == s.version
-                list_entries.append(
-                    {
-                        "manifest_path": info["path"],
-                        "manifest_length": info["length"],
-                        "partition_spec_id": info.get("spec_id", 0),
-                        "content": 0,  # data
-                        "sequence_number": mv,
-                        "min_sequence_number": mv,
-                        "added_snapshot_id": info["added_snapshot_id"],
-                        "added_files_count": info["added_files"] if is_new else 0,
-                        "existing_files_count": 0 if is_new else info["added_files"],
-                        "deleted_files_count": 0,
-                        "added_rows_count": info["added_rows"] if is_new else 0,
-                        "existing_rows_count": 0 if is_new else info["added_rows"],
-                        "deleted_rows_count": 0,
-                        "partitions": info.get("partitions", []),
-                    }
-                )
+        if s in exported:
+            by_add: dict[int, list[str]] = {}
+            for f, av in live.items():
+                by_add.setdefault(av, []).append(f)
+            listed = [
+                _data_manifest(mv, tuple(sorted(by_add[mv])))
+                for mv in sorted(by_add)
+            ]
             if s is snaps[-1] and head_bad:
                 # pending deltas were materialized: ONE position-delete
                 # manifest stands in for every pending entry (emitting
-                # the equality manifests too would be redundant)
-                pd_entries = (
-                    [(_write_posdel_manifest(s.version, posdel_files), True)]
-                    if posdel_files
-                    else []
-                )
-            else:
-                pd_entries = [
-                    (
-                        _write_delete_manifest(entry),
-                        int(entry["seq"]) + 1 == s.version,
+                # the equality manifests too would be redundant).
+                # Position deletes apply to data files with sequence
+                # <= their own, so the head's number scopes them to
+                # every live file, the set they were computed against.
+                if posdel_files:
+                    listed.append(
+                        _write_manifest(
+                            f"manifest-posdel-{s.version}.avro",
+                            s.version,
+                            posdel_files,
+                            1,
+                        )
                     )
+            else:
+                listed += [
+                    _eq_delete_manifest(entry)
                     for entry in views[s.version]["deletes"]
                 ]
-            for dinfo, is_new in pd_entries:
-                list_entries.append(
-                    {
-                        "manifest_path": dinfo["path"],
-                        "manifest_length": dinfo["length"],
-                        "partition_spec_id": 0,
-                        "content": 1,  # deletes
-                        "sequence_number": dinfo["sequence_number"],
-                        "min_sequence_number": dinfo["sequence_number"],
-                        "added_snapshot_id": dinfo["added_snapshot_id"],
-                        "added_files_count": dinfo["added_files"] if is_new else 0,
-                        "existing_files_count": 0 if is_new else dinfo["added_files"],
-                        "deleted_files_count": 0,
-                        "added_rows_count": dinfo["added_rows"] if is_new else 0,
-                        "existing_rows_count": 0 if is_new else dinfo["added_rows"],
-                        "deleted_rows_count": 0,
-                        "partitions": [],
-                    }
-                )
             list_path = os.path.join(
                 meta_dir, f"snap-{s.version}-manifest-list.avro"
             )
             avro_io.write_container(
                 list_path,
                 MANIFEST_FILE_SCHEMA,
-                list_entries,
+                [_listed(e, s.version) for e in listed],
                 metadata={
                     "snapshot-id": str(s.version),
                     "parent-snapshot-id": str(prev_version or "null"),
@@ -1299,7 +1188,7 @@ def export_iceberg_metadata(
                     "total-data-files": str(len(live)),
                     "total-records": str(views[s.version]["num_rows"]),
                 },
-                "schema-id": schema_ids[_skey(s)],
+                "schema-id": sid_of[s.version],
             }
             if prev_version is not None:
                 rec["parent-snapshot-id"] = prev_version
@@ -1313,31 +1202,9 @@ def export_iceberg_metadata(
         prev_version = s.version
 
     head = snaps[-1]
-    current_schema_id = schema_ids[_skey(head)]
     # last-column-id = highest id assigned in ANY schema
-    last_col = 0
-    for isch in iceberg_schemas:
-
-        def _max_id(t):
-            if isinstance(t, str):
-                return 0
-            if t["type"] == "struct":
-                return max(
-                    [f["id"] for f in t["fields"]]
-                    + [_max_id(f["type"]) for f in t["fields"]]
-                    + [0]
-                )
-            if t["type"] == "list":
-                return max(t["element-id"], _max_id(t["element"]))
-            if t["type"] == "map":
-                return max(
-                    t["key-id"], t["value-id"], _max_id(t["key"]), _max_id(t["value"])
-                )
-            return 0
-
-        last_col = max(last_col, _max_id(isch))
-
-    _used_spec_ids = {i.get("spec_id", 0) for i in manifest_info.values()}
+    last_col = max(_max_field_id(isch) for isch in iceberg_schemas)
+    used_specs = {e["partition_spec_id"] for e in manifests.values()} | {0}
     metadata = {
         "format-version": 2,
         "table-uuid": str(
@@ -1347,30 +1214,14 @@ def export_iceberg_metadata(
         "last-sequence-number": head.version,
         "last-updated-ms": int(head.commit_ts * 1000),
         "last-column-id": last_col,
-        "current-schema-id": current_schema_id,
+        "current-schema-id": sid_of[head.version],
         "schemas": iceberg_schemas,
-        "default-spec-id": (
-            1
-            if 1 in _used_spec_ids
-            else (2 if 2 in _used_spec_ids else 0)
-        ),
-        "partition-specs": (
-            [{"spec-id": 0, "fields": []}]
-            + ([part_spec] if 1 in _used_spec_ids else [])
-            + ([trunc_spec] if 2 in _used_spec_ids else [])
-        ),
+        # the identity spec when any manifest uses it, else truncate
+        "default-spec-id": min(used_specs - {0}, default=0),
+        "partition-specs": [specs[i][0] for i in sorted(used_specs)],
         "last-partition-id": max(
             [999]
-            + (
-                [f["field-id"] for f in part_spec["fields"]]
-                if 1 in _used_spec_ids
-                else []
-            )
-            + (
-                [f["field-id"] for f in trunc_spec["fields"]]
-                if 2 in _used_spec_ids
-                else []
-            )
+            + [f["field-id"] for i in used_specs for f in specs[i][0]["fields"]]
         ),
         "default-sort-order-id": 1 if sort_fields else 0,
         "sort-orders": (
@@ -1432,19 +1283,14 @@ def export_iceberg_metadata(
 
     # GC stale export artifacts: snapshots expired from the commit log
     # (or manifests rewritten by a later filtered variant) would otherwise
-    # accumulate in metadata/ forever. Keep exactly what the new
-    # metadata.json references.
-    referenced = {os.path.basename(meta_path), "version-hint.text"}
-    for rec in snapshot_records:
-        referenced.add(os.path.basename(rec["manifest-list"]))
-    for info in manifest_info.values():
-        referenced.add(os.path.basename(info["path"]))
-    for info in delete_manifest_info.values():
-        referenced.add(os.path.basename(info["path"]))
-    for f in posdel_files:
-        referenced.add(os.path.basename(f))
-    if posdel_files:
-        referenced.add(f"manifest-posdel-{snaps[-1].version}.avro")
+    # accumulate in metadata/ forever. Keep exactly what this export
+    # wrote: the metadata, the manifest lists, the manifests the writer
+    # returned and the position-delete files they list.
+    referenced = {
+        os.path.basename(p)
+        for p in [meta_path, hint, *manifests, *posdel_files]
+        + [rec["manifest-list"] for rec in snapshot_records]
+    }
     for f in os.listdir(meta_dir):
         if f in referenced or f.endswith(".tmp"):
             continue
@@ -1457,6 +1303,16 @@ def export_iceberg_metadata(
             except FileNotFoundError:
                 pass
     return meta_dir
+
+
+def _load_metadata(meta_dir: str) -> dict:
+    """The current table metadata of an exported ``metadata/``
+    directory: ``version-hint.text`` names the ``v<N>.metadata.json``
+    to read."""
+    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
+        v = int(fh.read().strip())
+    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
+        return json.load(fh)
 
 
 # ---------------------------------------------------------------- REST mirror
@@ -1475,11 +1331,7 @@ def sync_to_rest(table: LakehouseTable, client, *, export: bool = True) -> list[
     manifest lists."""
     if export:
         export_iceberg_metadata(table)
-    meta_dir = os.path.join(table.path, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        v = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        meta = json.load(fh)
+    meta = _load_metadata(os.path.join(table.path, "metadata"))
     client.get_or_create_table(table.namespace, table.name, table.schema())
     # schema evolution mirror: if the catalog's current schema is missing
     # columns the table has (merge_schema widened it after registration),
@@ -1613,10 +1465,7 @@ def read_iceberg(
     from crest_spark.functions.schema_convert import iceberg_to_spark_schema
 
     meta_dir = os.path.join(table_dir, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        v = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        meta = json.load(fh)
+    meta = _load_metadata(meta_dir)
     if tag is not None:
         ref = meta.get("refs", {}).get(tag)
         if ref is None:
@@ -1784,19 +1633,11 @@ def read_iceberg(
             .option("mergeSchema", "false")
             .parquet(*sorted(files))
         )
-    def _exact(df):
-        # pruning is file-granular; the exact range filters keep the
-        # result identical to the unpruned read filtered row-by-row
-        if predicates:
-            for col, (lo, hi) in predicates.items():
-                if lo is not None:
-                    df = df.where(F.col(col) >= lo)
-                if hi is not None:
-                    df = df.where(F.col(col) <= hi)
-        return df
-
+    # pruning is file-granular; the exact row condition keeps the
+    # result identical to the unpruned read filtered row-by-row
+    exact = _row_cond(predicates or {})
     if not eq_deletes and not pos_deletes:
-        return _exact(out)
+        return out.where(exact)
     # apply deletes per the spec: an EQUALITY delete file with sequence
     # number S removes matching rows of data files with sequence < S; a
     # POSITION delete file removes its (file_path, pos) rows from data
@@ -1841,7 +1682,7 @@ def read_iceberg(
             & (F.col("__ice_pos") == F.col("__ice_dpos"))
         )
         out = out.join(pd, on=cond, how="left_anti")
-    return _exact(out.drop("__ice_seq", "__ice_path", "__ice_pos"))
+    return out.drop("__ice_seq", "__ice_path", "__ice_pos").where(exact)
 
 
 # ------------------------------------------------------------------- verifier
@@ -1850,10 +1691,7 @@ def read_current_snapshot_files(meta_dir: str) -> dict[str, int]:
     version-hint -> metadata.json -> current snapshot -> manifest list ->
     manifests -> ``{data_file_path: record_count}``. Used by tests to
     prove the Avro/metadata round-trip against the commit log's state."""
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        v = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        meta = json.load(fh)
+    meta = _load_metadata(meta_dir)
     current = meta["current-snapshot-id"]
     snap = next(
         s for s in meta["snapshots"] if s["snapshot-id"] == current

@@ -180,16 +180,15 @@ class SourceSpec:
     #     serial-hook cost is O(threshold batches), never O(index). The
     #     pairs table LSM bin-packs under the same threshold.
     #
-    #     LAYOUT CONTRACT for ivf/ivfpq compaction (do not mis-set):
-    #     every run file must stay SINGLE-VALUED on `cell` — per-file
-    #     point [min,max] stats are what let a probe open only the
-    #     probed cells' files. Tail rewrites therefore cluster with
+    #     LAYOUT CONTRACT for ivf/ivfpq compaction: every run file
+    #     stays SINGLE-VALUED on `cell` — per-file point [min,max]
+    #     stats are what let a probe open only the probed cells' files.
+    #     The add's tail rewrite therefore always clusters with
     #     cluster_partitions = the index's n_cells (one file per
     #     touched cell per run; a probe opens <= max_cluster_runs
-    #     files per cell). An explicit spec-level compact_target_files
-    #     BELOW n_cells is rejected when the index is first loaded — it
-    #     would force multiple cells per file and silently widen probe
-    #     I/O to O(corpus/target).
+    #     files per cell), under compact_after_files and
+    #     max_cluster_runs. compact_target_files has no effect there,
+    #     so check_source rejects it on an ivf/ivfpq spec.
     #   {"kind": "ivf", "name": ..., "id_col": "vec_id",
     #    "vec_col": "embedding"}
     #     FAISS add-split: the first batch builds the IVF index, later
@@ -276,11 +275,18 @@ def check_source(spec: SourceSpec) -> None:
             raise ValueError(f"source {s.name}: {problem}")
     if not s.indexes:
         return
-    for kind in (i.get("kind") for i in s.indexes):
+    for idx in s.indexes:
+        kind = idx.get("kind")
         if kind not in _INDEX_KINDS:
             raise ValueError(
                 f"source {s.name}: unknown index kind {kind!r}; known: "
                 + ", ".join(_INDEX_KINDS)
+            )
+        if kind != "minhash" and "compact_target_files" in idx:
+            raise ValueError(
+                f"source {s.name}: compact_target_files does not apply to "
+                f"the {kind} index {_index_name(s, idx)!r}: its tail "
+                "compaction writes one file per cell; drop the key"
             )
     problems = [
         problem
@@ -315,7 +321,9 @@ class IngestConfig:
     warehouse: str
     checkpoint_root: str
     namespace: str = "default"
-    trigger_interval: str | None = None  # None => run_once drains & stops
+    # processing-time trigger of start(); None => drain once & stop
+    # (run_once always drains)
+    trigger_interval: str | None = None
     # hard per-file row cap of every append-mode commit (the writer's
     # max_rows_per_file): batching.maxRows, enforced
     max_rows_per_batch: int = 1000
@@ -376,9 +384,6 @@ class IngestionService:
         # catalog outage never drops data (the reference logs-and-drops).
         self.metadata_catalog = metadata_catalog
         self._registered: set[tuple[str, str]] = set()
-        # index tables whose compaction layout contract has been
-        # validated against their actual cell count (ADVICE r13 #3)
-        self._layout_checked: set[tuple[str, str]] = set()
         self.queries = []
 
     def _register_metadata(self, ns: str, name: str, schema) -> None:
@@ -612,39 +617,6 @@ class IngestionService:
 
         return write_batch
 
-    def _check_index_layout(self, spec: dict, t, kind: str, ns: str,
-                            name: str) -> None:
-        """Layout-contract validation at index LOAD time: every run file
-        must stay single-valued on cell (the add's tail compaction
-        clusters with ``cluster_partitions = n_cells``), so an explicit
-        spec-level ``compact_target_files`` below the index's cell
-        count is a silent probe-I/O widener and raises. The cell count
-        is known the moment the index exists, so the spec is checked
-        once then (memoized per table) instead of when the tail first
-        crosses the threshold, possibly hours into a run."""
-        target = spec.get("compact_target_files")
-        if target is None or (ns, name) in self._layout_checked:
-            return
-        from crest_spark.operators.vector_index import (
-            load_ivf_centroids,
-            load_ivfpq_meta,
-        )
-
-        n_cells = int(
-            load_ivf_centroids(t)[1]
-            if kind == "ivf"
-            else load_ivfpq_meta(t)[3]
-        )
-        if int(target) < n_cells:
-            raise ValueError(
-                f"index {ns}.{name}: compact_target_files={target} is "
-                f"below the index's cell count {n_cells}; per-cell point "
-                "stats (the probe-pruning contract) need "
-                "cluster_partitions >= n_cells — raise "
-                "compact_target_files or drop it from the spec"
-            )
-        self._layout_checked.add((ns, name))
-
     def _index_compact_limits(
         self, spec: dict
     ) -> tuple[int | None, int, int]:
@@ -852,10 +824,6 @@ class IngestionService:
                     ),
                 )
                 continue
-            # fail-fast layout validation on first load: a mis-sized
-            # compact_target_files must not wait for the first
-            # compaction trigger to abort
-            self._check_index_layout(spec, t, kind, ns, name)
             if batch_id in t.committed_batches(widx):
                 continue  # replayed batch: already built/added
             # Drift handling is OFF-PATH: the adds below stamp drift
@@ -951,6 +919,12 @@ class IngestionService:
         """Start every source's streaming query (reference Start(),
         ``ingestor.go:58-102``) and, when ``index_rebuild_interval``
         is set, the index-maintenance daemon thread."""
+        self._start(self.config.trigger_interval)
+
+    def _start(self, interval: str | None) -> None:
+        """``start`` with the processing-time trigger ``interval``;
+        None drains the available input and stops (``run_once``)."""
+        self._interval = interval
         if (
             self.config.index_rebuild_interval is not None
             and self._vector_indexes()
@@ -1032,8 +1006,8 @@ class IngestionService:
                 )
                 .queryName(f"ingest_{src.name}")
             )
-            if self.config.trigger_interval:
-                writer = writer.trigger(processingTime=self.config.trigger_interval)
+            if self._interval:
+                writer = writer.trigger(processingTime=self._interval)
             elif src.flight_location is not None:
                 # availableNow asks a capped Flight stream for its latest
                 # offset once and would strand the backlog past the first
@@ -1046,10 +1020,10 @@ class IngestionService:
     def await_drained(self, timeout: int | None = None) -> None:
         """Wait until every query has consumed its available input. File
         sources run under availableNow and terminate by themselves; a
-        Flight source without ``trigger_interval`` is drained with
-        ``processAllAvailable()`` and stopped."""
+        Flight source started without a trigger interval is drained
+        with ``processAllAvailable()`` and stopped."""
         for src, q in zip(self.config.sources, self.queries):
-            if src.flight_location is not None and not self.config.trigger_interval:
+            if src.flight_location is not None and not self._interval:
                 q.processAllAvailable()
                 q.stop()
             else:
@@ -1066,7 +1040,8 @@ class IngestionService:
         self.queries.clear()
 
     def run_once(self) -> None:
-        """Drain all available input and stop."""
-        self.start()
+        """Drain all available input and stop, whatever the config's
+        trigger interval."""
+        self._start(None)
         self.await_drained()
         self.stop()

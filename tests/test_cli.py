@@ -43,6 +43,54 @@ metrics:
     assert lines and all(json.loads(ln) for ln in lines)
 
 
+def test_cli_once_drains_a_continuous_config(spark, sf_dir, tmp_path):
+    """``--once`` drains and returns even when the config runs its
+    sources continuously: a processing-time query never ends by
+    itself, so the one-shot run must not wait for it to."""
+    import threading
+
+    staging, _ = stage_slices(
+        spark, table_path(sf_dir, "region"), n_slices=2, order_col="r_regionkey"
+    )
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(
+        f"""
+warehouse: {tmp_path / 'wh'}
+checkpoints: {tmp_path / 'ckpt'}
+continuous: true
+batching:
+  maxTimeWindowSeconds: 60
+sources:
+  - name: region
+    path: {staging}
+"""
+    )
+    result = []
+    run = threading.Thread(
+        target=lambda: result.append(main(["--config", str(cfg), "--once"])),
+        daemon=True,
+    )
+    run.start()
+    run.join(timeout=300)
+    assert result == [0], "cli --once did not return"
+    t = LakehouseCatalog(str(tmp_path / "wh")).table("region")
+    assert t.read(spark).count() == load_table(spark, sf_dir, "region").count()
+
+
+def test_config_time_window_requires_continuous(tmp_path):
+    """A batching window without ``continuous: true`` would be dropped
+    silently (the run drains once); it is a config error instead."""
+    from crest_spark.config import load_config
+
+    body = "batching:\n  maxTimeWindowSeconds: 5\nsources: []\n"
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(body)
+    with pytest.raises(ValueError, match="continuous"):
+        load_config(str(cfg))
+    cfg.write_text("continuous: true\n" + body)
+    assert load_config(str(cfg)).ingest.trigger_interval == "5 seconds"
+
+
 def test_config_parses_cluster_by(tmp_path):
     from crest_spark.config import load_config
 

@@ -311,6 +311,61 @@ def test_export_is_idempotent(table):
     assert open(p, "rb").read() == first
 
 
+def test_manifest_list_counts_added_only_by_the_writing_snapshot(
+    spark, table
+):
+    """Two appends, a copy-on-write merge, a pending merge-on-read
+    equality delete, one more append: in every snapshot's manifest
+    list, a manifest written by that snapshot carries its files and
+    rows as ADDED and every other manifest carries them as EXISTING,
+    and the counts equal the parquet footers of the files it lists —
+    for data and delete manifests alike."""
+    import pyarrow.parquet as pq
+
+    row = "id long, grp long, s string"
+    table.merge(
+        spark, spark.createDataFrame([(3, 3, "cow")], row), key="id"
+    )
+    table.merge(
+        spark,
+        spark.createDataFrame([(150, 1, "mor")], row),
+        key="id",
+        strategy="mor",
+        mor_file_threshold=0,
+    )
+    table.append(spark.createDataFrame([(900, 2, "late")], row))
+    assert table._state()["deletes"]
+    meta_dir = export_iceberg_metadata(table)
+    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
+        v = int(fh.read().strip())
+    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
+        meta = json.load(fh)
+    assert len(meta["snapshots"]) == 5
+    seen = set()
+    for snap in meta["snapshots"]:
+        _, _, entries = avro_io.read_container(snap["manifest-list"])
+        for e in entries:
+            _, _, recs = avro_io.read_container(e["manifest_path"])
+            files = len(recs)
+            rows = sum(
+                pq.ParquetFile(r["data_file"]["file_path"]).metadata.num_rows
+                for r in recs
+            )
+            assert rows == sum(r["data_file"]["record_count"] for r in recs)
+            assert {r["snapshot_id"] for r in recs} == {e["added_snapshot_id"]}
+            new = e["added_snapshot_id"] == snap["snapshot-id"]
+            assert (e["added_files_count"], e["existing_files_count"]) == (
+                (files, 0) if new else (0, files)
+            )
+            assert (e["added_rows_count"], e["existing_rows_count"]) == (
+                (rows, 0) if new else (0, rows)
+            )
+            assert e["deleted_files_count"] == e["deleted_rows_count"] == 0
+            seen.add((e["content"], new))
+    # data and delete manifests, each both as written and as carried
+    assert seen == {(0, True), (0, False), (1, True), (1, False)}
+
+
 def test_export_bounded_history(table):
     meta_dir = export_iceberg_metadata(table, max_snapshots=1)
     v = table.version()

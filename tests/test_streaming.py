@@ -2356,9 +2356,6 @@ def test_ingest_ivf_index_compaction_bounds_files(spark, sf_dir, tmp_path):
                         # tail threshold is now ~batches, same as the
                         # minhash index policy
                         "compact_after_files": 4,
-                        # n_cells = 16 here, so this must be >= 16 (the
-                        # layout-contract guard rejects less)
-                        "compact_target_files": 16,
                         "max_cluster_runs": 2,
                     }
                 ],
@@ -2474,18 +2471,15 @@ def test_ingest_minhash_pairs_table_compaction_bounds_files(
 
 
 def test_ingest_ivf_compaction_rejects_target_below_cell_count(
-    spark, sf_dir, tmp_path
+    spark, tmp_path
 ):
-    """VERDICT r12 #7 + ADVICE r13 #3: the probe contract needs every
-    run file single-valued on cell (cluster_partitions >= n_cells); an
-    explicit spec-level compact_target_files below the index's cell
-    count is a silent probe-I/O widener — and the rejection must be
-    FAIL-FAST, on the first batch that loads the built index, not
-    hours later when the unclustered tail first crosses the compaction
-    threshold (which would abort a long-running ingestion mid-run)."""
+    """The probe contract needs every run file single-valued on cell,
+    so an ivf/ivfpq add's tail compaction always writes one file per
+    cell and a spec-level compact_target_files has no effect on it.
+    The key is a config error, raised when the sink is built — before
+    any batch commits, not hours into a run."""
     import pytest as _pt
 
-    em = load_table(spark, sf_dir, "embeddings")
     cfg = IngestConfig(
         warehouse=str(tmp_path / "wh"),
         checkpoint_root=str(tmp_path / "ckpt"),
@@ -2499,7 +2493,7 @@ def test_ingest_ivf_compaction_rejects_target_below_cell_count(
                         "name": "badciv",
                         "recluster_threshold": 100.0,
                         "compact_after_files": 2,
-                        # n_cells will be 16 — 2 < 16 must be rejected
+                        # no effect on an ivf index: a config error
                         "compact_target_files": 2,
                     }
                 ],
@@ -2507,14 +2501,8 @@ def test_ingest_ivf_compaction_rejects_target_below_cell_count(
         ],
     )
     svc = IngestionService(spark, cfg)
-    sink = svc._sink(cfg.sources[0])
-    sink(em.where(F.col("vec_id") < 60), 0)  # build
-    # fail-fast: the VERY NEXT batch validates the spec against the
-    # now-known cell count — well before any compaction trigger
     with _pt.raises(ValueError, match="compact_target_files"):
-        sink(
-            em.where((F.col("vec_id") >= 60) & (F.col("vec_id") < 120)), 1
-        )
+        svc._sink(cfg.sources[0])
 
 
 def test_ingest_ivfpq_drift_rebuild_is_off_path(spark, sf_dir, tmp_path):
